@@ -45,8 +45,8 @@ from gobblin_spark.lakehouse.table import (
     ConcurrentCommitError,
     LakeTable,
     Snapshot,
-    bucket_expr,
     file_spec_n,
+    local_frame,
     mapped_buckets,
 )
 
@@ -827,8 +827,13 @@ def read_current(
     bounds under the same compacted-only soundness gate, with the exact
     row filter always applied."""
     snap = table.snapshot(version)
+    types = {f.name: f.dataType.typeName() for f in snap.schema.fields}
+    for arg, preds in (("value_eq", value_eq), ("value_range", value_range)):
+        for c in preds or {}:
+            if c not in types:
+                raise ValueError(f"{arg} column {c!r} not in schema")
     deltas = int(snap.properties.get("mor_deltas", 0)) > 0
-    df = table.read(version,
+    df = table.read(snap.version,
                     value_eq=value_eq if not deltas else None,
                     value_range=value_range if not deltas else None)
     if deltas:
@@ -840,7 +845,6 @@ def read_current(
         from gobblin_spark.lakehouse.table import (
             _coerce_probe, _coerce_probe_extended,
         )
-        types = {f.name: f.dataType.typeName() for f in snap.schema.fields}
         for c, v in value_eq.items():
             if v is None:
                 df = df.filter(F.col(c).isNull())
@@ -851,7 +855,7 @@ def read_current(
             # through; a STRING probe on a type neither coercion knows
             # raises — silently matching nothing would make
             # `delete --where date_col=...` report deleted:0 and succeed
-            t = types.get(c, "string")
+            t = types[c]
             cv = _coerce_probe(v, t)
             if cv is None and not isinstance(v, str):
                 cv = v
@@ -864,9 +868,8 @@ def read_current(
         )
         import operator
 
-        types = {f.name: f.dataType.typeName() for f in snap.schema.fields}
         for c, iv in value_range.items():
-            t = types.get(c, "string")
+            t = types[c]
             for side, op_strict, op in (("lo", operator.gt, operator.ge),
                                         ("hi", operator.lt, operator.le)):
                 v = iv.get(side)
@@ -1026,47 +1029,44 @@ def point_lookup(
     prefer_local: bool = True,
 ) -> DataFrame:
     """Current visible state of ONE merge key without scanning the table:
-    hash the key to its storage bucket (one local-relation Spark job, no
-    data scan), read only that bucket's files, LWW-resolve, filter. At
-    100 TB with 4096 buckets a lookup touches 1/4096 of the files — the
-    primary-key read a CDC consumer expects from an upsert table (≙ Hive
-    consumers of the reference's published tables predicate-pushing on the
-    partition; here the merge-key hash layout IS the index). Valid with
-    unfolded MOR deltas (resolves across base+delta like read_current).
+    hash the key to its storage bucket on the driver (the bit-exact Python
+    twin of ``bucket_expr``, no Spark job), read only that bucket's files,
+    LWW-resolve, filter. At 100 TB with 4096 buckets a lookup touches
+    1/4096 of the files — the primary-key read a CDC consumer expects from
+    an upsert table (≙ Hive consumers of the reference's published tables
+    predicate-pushing on the partition; here the merge-key hash layout IS
+    the index). Valid with unfolded MOR deltas (resolves across base+delta
+    like read_current). The snapshot is resolved once, so the schema and
+    the row always come from the same version.
 
     ``prefer_local``: first try the DRIVER-side read (pointread.py) — the
     manifest plus pyarrow row-group stats answer a single-key read in
-    milliseconds with zero Spark jobs; the result is wrapped in a local
-    DataFrame for an unchanged API. Falls back to the distributed path
-    (all three merge dialects fold locally) for schema-version drift or
-    oversized candidate sets."""
+    milliseconds, and the answer is handed to Spark as an Arrow local
+    relation, so ``point_lookup(...).collect()`` launches ZERO Spark jobs.
+    Falls back to the distributed path (all three merge dialects fold
+    locally) for schema-version drift or oversized candidate sets."""
+    from gobblin_spark.lakehouse.pointread import (
+        FALLBACK,
+        key_bucket,
+        point_lookup_local,
+    )
+
     snap = table.snapshot(version)
     if prefer_local:
-        from gobblin_spark.lakehouse.pointread import (
-            FALLBACK,
-            point_lookup_local,
-        )
-        row = point_lookup_local(table, key, version)
+        row = point_lookup_local(table, key, snap=snap)
         if row is not FALLBACK:
             from pyspark.sql.types import StructType
             visible = StructType(
                 [f for f in snap.schema.fields if f.name not in META_COLS])
-            return table.spark.createDataFrame(
-                [row] if row is not None else [], schema=visible)
-    missing = [k for k in snap.bucket_cols if k not in key]
-    if missing:
-        raise ValueError(f"point_lookup needs all merge keys; missing {missing}")
+            return local_frame(table.spark, visible,
+                               [row] if row is not None else [])
     # bucket id under the PINNED snapshot's spec (buckets_of would use the
     # current spec — wrong for a version pinned from before a rescale)
-    one = table.spark.createDataFrame(
-        [tuple(key[k] for k in snap.bucket_cols)], list(snap.bucket_cols))
-    bucket = one.select(
-        bucket_expr(snap.bucket_cols, snap.n_buckets).alias("b")
-    ).first()["b"]
+    bucket = key_bucket(snap, key)
     # two-level skipping: the key's hash bucket, then key_bounds — within
     # the bucket, MOR delta files each hold only their batch's keys, so
     # most are excluded by their recorded per-column bounds without a read
-    df = table.read(version, buckets={bucket},
+    df = table.read(snap.version, buckets={bucket},
                     key_eq={k: key[k] for k in snap.merge_keys if k in key})
     for k in snap.bucket_cols:
         df = df.filter(F.col(k) == F.lit(key[k]))

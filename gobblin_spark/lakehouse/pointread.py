@@ -31,7 +31,7 @@ from __future__ import annotations
 import os
 from typing import Any
 
-from gobblin_spark.lakehouse.table import LakeTable
+from gobblin_spark.lakehouse.table import LakeTable, Snapshot
 from gobblin_spark.lakehouse.table import file_spec_n as _spec_of
 
 # --------------------------------------------------------------- xxhash64
@@ -178,29 +178,38 @@ def _int_size(spark_type: str) -> int:
     return {"byte": 8, "short": 16, "integer": 32}.get(spark_type, 64)
 
 
-def point_lookup_local(
-    table: LakeTable,
-    key: dict[str, Any],
-    version: int | None = None,
-    max_candidate_files: int = 64,
-):
-    """Resolve one merge key without Spark. Returns the visible row as a
-    plain dict, None when the key is absent/deleted, or the FALLBACK
-    sentinel when this path can't answer safely (schema-version drift
-    among candidate files, too many candidates, unknown dialect)."""
-    import pyarrow.parquet as pq
-
-    snap = table.snapshot(version)
+def key_bucket(snap: Snapshot, key: dict[str, Any]) -> int:
+    """The bucket ``key`` hashes to under the snapshot's spec, with each
+    integer key column hashed at its stored width — the routing both the
+    local and the distributed point lookup use."""
     missing = [k for k in snap.bucket_cols if k not in key]
     if missing:
         raise ValueError(
             f"point_lookup needs all merge keys; missing {missing}")
     type_by_name = {f.name: f.dataType.typeName()
                     for f in snap.schema.fields}
-    bucket = bucket_of(
+    return bucket_of(
         [key[k] for k in snap.bucket_cols], snap.n_buckets,
         int_sizes=[_int_size(type_by_name.get(k, "")) for k in
                    snap.bucket_cols])
+
+
+def point_lookup_local(
+    table: LakeTable,
+    key: dict[str, Any],
+    snap: Snapshot | None = None,
+    max_candidate_files: int = 64,
+):
+    """Resolve one merge key without Spark, in ``snap`` (default: the
+    current snapshot). Returns the visible row as a plain dict, None when
+    the key is absent/deleted, or the FALLBACK sentinel when this path
+    can't answer safely (schema-version drift among candidate files, too
+    many candidates, unknown dialect)."""
+    import pyarrow.parquet as pq
+
+    if snap is None:
+        snap = table.snapshot()
+    bucket = key_bucket(snap, key)
     keys = snap.merge_keys
     cand = [f for f in snap.files
             if f.bucket == bucket % _spec_of(f, snap) and not _bounds_exclude(

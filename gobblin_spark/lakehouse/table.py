@@ -393,6 +393,21 @@ def bucket_expr(bucket_cols: list[str], n_buckets: int):
     return F.expr(f"CAST(pmod(xxhash64({cols}), {int(n_buckets)}) AS INT)")
 
 
+def local_frame(spark: SparkSession, schema: StructType,
+                rows: list[dict[str, Any]]) -> DataFrame:
+    """A DataFrame over driver-held ``rows`` (dicts keyed by column name).
+
+    The rows reach the JVM as one Arrow table and plan as a local relation,
+    so collecting the frame launches no Spark job. A Python list would go
+    through a PythonRDD instead: one Spark job, with Python workers, per
+    action."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)
+
+
 class LakeTable:
     """A versioned Parquet table with atomic snapshot commits.
 
@@ -1187,7 +1202,7 @@ class LakeTable:
         if snap is None:
             snap = self.snapshot()
         if not files:
-            return self.spark.createDataFrame([], snap.schema)
+            return local_frame(self.spark, snap.schema, [])
         by_sv: dict[int, list[str]] = {}
         for f_ in files:
             by_sv.setdefault(f_.schema_version, []).append(

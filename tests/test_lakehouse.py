@@ -45,6 +45,13 @@ def make_df(spark, n=100, seq0=0):
 def test_create_append_read(spark, tmp_table_dir):
     t = LakeTable.create(spark, tmp_table_dir, SCHEMA, ["repo", "path"], n_buckets=8)
     assert t.current_version() == 1
+    # no files yet: the empty read is a driver-local frame that an action
+    # answers without launching a Spark job
+    tracker = spark.sparkContext.statusTracker()
+    jobs_before = len(tracker.getJobIdsForGroup())
+    empty = t.read()
+    assert empty.schema == SCHEMA and empty.collect() == []
+    assert len(tracker.getJobIdsForGroup()) == jobs_before
     snap = t.append(make_df(spark, 100), seq_col="__seq")
     assert snap.version == 2
     assert t.read().count() == 100

@@ -237,3 +237,88 @@ def test_local_lookup_is_fast(spark, tmp_table_dir):
     jobs_after = len(spark.sparkContext.statusTracker().getJobIdsForGroup())
     assert jobs_after == jobs_before, "local lookup must launch no Spark job"
     assert per_key < 0.25, f"{per_key * 1e3:.0f} ms/key"
+
+    # the public API hands the local answer to Spark as an Arrow local
+    # relation: collecting it, hit or miss, launches no job either
+    for key, n in ((keys[0], 1), (("no_such", "x"), 0)):
+        before = len(spark.sparkContext.statusTracker().getJobIdsForGroup())
+        rows = point_lookup(t, {"repo": key[0], "path": key[1]}).collect()
+        after = len(spark.sparkContext.statusTracker().getJobIdsForGroup())
+        assert len(rows) == n
+        assert after == before, f"point_lookup{key} launched a Spark job"
+
+
+def test_point_lookup_reads_one_snapshot(spark, tmp_table_dir):
+    """The schema and the row of one lookup come from one snapshot read,
+    so a commit landing mid-lookup can't pair them across versions."""
+    ev = make_events(spark, 400)
+    t = new_table(spark, tmp_table_dir + "/t")
+    merge_lww(t, data_events(ev), KEYS)
+    k = read_current(t).select(*KEYS).first()
+    calls = []
+    real = t.snapshot
+    t.snapshot = lambda v=None: calls.append(v) or real(v)
+    assert len(point_lookup(t, {"repo": k[0], "path": k[1]}).collect()) == 1
+    assert calls == [None]
+
+
+def test_local_lookup_parity_typed_columns(spark, tmp_table_dir):
+    """The Arrow local relation carries every column type the distributed
+    read does: a full row, an all-null row and an absent key answer the
+    same through the local and the prefer_local=False path — and an
+    integer-keyed table routes the distributed path to the key's bucket
+    (the key hashes at its stored int width, as the data was bucketed)."""
+    import datetime
+    from decimal import Decimal
+
+    from pyspark.sql.types import (
+        ArrayType, BinaryType, BooleanType, DateType, DecimalType,
+        DoubleType, IntegerType, LongType, StringType, StructField,
+        StructType, TimestampType,
+    )
+
+    payload = [
+        StructField("i", IntegerType()),
+        StructField("d", DoubleType()),
+        StructField("b", BooleanType()),
+        StructField("ts", TimestampType()),
+        StructField("dt", DateType()),
+        StructField("dec", DecimalType(12, 3)),
+        StructField("bin", BinaryType()),
+        StructField("arr", ArrayType(StringType())),
+    ]
+    full = (7, 2.5, True, datetime.datetime(2024, 3, 1, 12, 30, 45, 123456),
+            datetime.date(2024, 3, 1), Decimal("123456789.125"),
+            b"\x00\xffbin", ["x", None, "z"])
+    nulls = (None,) * len(payload)
+    meta = [StructField("__seq", LongType()),
+            StructField("__deleted", BooleanType())]
+    batch_meta = [StructField("seq", LongType()), StructField("op", StringType())]
+
+    for key_field, keys in (
+            (StructField("id", StringType()), ["full", "nulls", "gone"]),
+            (StructField("id", IntegerType()), [3, 11, 42])):
+        root = f"{tmp_table_dir}/{key_field.dataType.typeName()}"
+        t = LakeTable.create(
+            spark, root, StructType([key_field] + payload + meta),
+            ["id"], n_buckets=8)
+        batch_schema = StructType(batch_meta + [key_field] + payload)
+        a, b, gone = keys
+        # two MOR deltas: the full row's key is overwritten across files,
+        # the deleted key's tombstone lands in the second delta
+        merge_lww_mor(t, spark.createDataFrame(
+            [(1, "I", a, *nulls), (1, "I", b, *full), (1, "I", gone, *full)],
+            batch_schema), ["id"], seq_col="seq")
+        merge_lww_mor(t, spark.createDataFrame(
+            [(2, "U", a, *full), (2, "U", b, *nulls), (2, "D", gone, *nulls)],
+            batch_schema), ["id"], seq_col="seq")
+        absent = "missing" if isinstance(a, str) else 99
+        for k in (a, b, gone, absent):
+            local = point_lookup(t, {"id": k}).collect()
+            dist = point_lookup(t, {"id": k}, prefer_local=False).collect()
+            assert [r.asDict() for r in local] == \
+                [r.asDict() for r in dist], (key_field, k)
+        assert tuple(point_lookup(t, {"id": a}, prefer_local=False)
+                     .first())[1:] == full
+        assert tuple(point_lookup(t, {"id": b}).first())[1:] == nulls
+        assert point_lookup(t, {"id": gone}, prefer_local=False).count() == 0

@@ -282,6 +282,22 @@ def test_value_range_sound_across_unresolved_mor_deltas(
     assert sorted(map(tuple, hot2)) == sorted(map(tuple, hot))
 
 
+def test_unknown_predicate_column_raises_on_mor_delta_table(
+        spark, tmp_table_dir):
+    """With outstanding deltas read_current skips file pruning, so the
+    column check must happen in read_current itself: a misspelled
+    column names itself in a ValueError instead of failing inside Spark."""
+    t = _new(spark, tmp_table_dir + "/t")
+    merge_lww(t, _batch(spark, _rows(10)), KEYS)
+    merge_lww_mor(t, _batch(spark, [(500, "U", "r0", "p0", "c2", "go")]),
+                  KEYS)
+    assert int(t.snapshot().properties.get("mor_deltas", 0)) > 0
+    with pytest.raises(ValueError, match="value_range column 'lnag' not in"):
+        read_current(t, value_range={"lnag": {"lo": "a", "hi": None}})
+    with pytest.raises(ValueError, match="value_eq column 'lnag' not in"):
+        read_current(t, value_eq={"lnag": "go"})
+
+
 def test_value_range_between_strict_and_inclusive_int(spark, tmp_table_dir):
     """Integer stats column: BETWEEN with inclusive and strict bounds
     against a python-computed oracle."""
