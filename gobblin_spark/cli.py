@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import re
 import sys
 import time
 
@@ -706,6 +707,10 @@ def cmd_purge(args) -> int:
     return 2 if blocking else 0
 
 
+_WHERE_CLAUSE = re.compile(r"\s*([A-Za-z_]\w*)\s*(>=|<=|>|<|=)(.*)",
+                           re.DOTALL)
+
+
 def _parse_where(items: list[str]) -> tuple[dict, dict]:
     """Parse --where clauses into (value_eq, value_range).
 
@@ -715,27 +720,25 @@ def _parse_where(items: list[str]) -> tuple[dict, dict]:
     eq: dict = {}
     rng: dict = {}
     for kv in items or []:
-        for op in (">=", "<=", ">", "<", "="):
-            if op in kv:
-                c, v = kv.split(op, 1)
-                c = c.strip()
-                v = v.strip()
-                if op == "=":
-                    eq[c] = v
-                else:
-                    iv = rng.setdefault(
-                        c, {"lo": None, "hi": None,
-                            "lo_strict": False, "hi_strict": False})
-                    side = "lo" if op[0] == ">" else "hi"
-                    if iv[side] is not None:
-                        raise SystemExit(
-                            f"--where: duplicate {side!r} bound for {c!r}")
-                    iv[side] = v
-                    iv[f"{side}_strict"] = (len(op) == 1)
-                break
-        else:
+        # anchored on the column identifier: the first operator after it
+        # is the clause's, so a value may hold '<', '>' or '='
+        m = _WHERE_CLAUSE.fullmatch(kv)
+        if m is None:
             raise SystemExit(f"--where needs col=value or col>=/<=/>/<"
                              f"value, got {kv!r}")
+        c, op, v = m.group(1), m.group(2), m.group(3).strip()
+        if op == "=":
+            eq[c] = v
+        else:
+            iv = rng.setdefault(
+                c, {"lo": None, "hi": None,
+                    "lo_strict": False, "hi_strict": False})
+            side = "lo" if op[0] == ">" else "hi"
+            if iv[side] is not None:
+                raise SystemExit(
+                    f"--where: duplicate {side!r} bound for {c!r}")
+            iv[side] = v
+            iv[f"{side}_strict"] = (len(op) == 1)
     return eq, rng
 
 
@@ -787,12 +790,18 @@ def cmd_vacuum(args) -> int:
 def cmd_maintain(args) -> int:
     """Catalog-scoped maintenance sweep (maintenance.sweep_catalog): every
     registered table's maintain.* policy applied in one run — the
-    reference's scheduled retention job family as one command."""
-    from gobblin_spark.maintenance import sweep_catalog
+    reference's scheduled retention job family as one command. Exits 1
+    when any table failed; the report names its error, and every other
+    table was still swept."""
+    from gobblin_spark.maintenance import SweepFailed, sweep_catalog
 
     spark = _get_session(args)
-    report = sweep_catalog(spark, args.catalog,
-                           sweep_id=args.sweep_id or None)
+    try:
+        report = sweep_catalog(spark, args.catalog,
+                               sweep_id=args.sweep_id or None)
+    except SweepFailed as exc:  # every other table was still swept
+        print(json.dumps(exc.report))
+        return 1
     print(json.dumps(report))
     return 0
 

@@ -315,7 +315,10 @@ class CdcEngine:
                     f"{table_root} to fork from")
             main = LakeTable(spark, table_root, fs=fs)
             if branch not in main.branches():
-                main.create_branch(branch)
+                try:
+                    main.create_branch(branch)
+                except FileExistsError:
+                    pass  # a concurrent ingest created it: attach to it
             self.table = main.branch(branch)
         elif LakeTable.exists(table_root, fs=fs):
             self.table = LakeTable(spark, table_root, fs=fs)

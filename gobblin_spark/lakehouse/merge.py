@@ -1115,6 +1115,106 @@ def changed_units(
     return changed, unit_n, True
 
 
+def _byte_conf(spark, key: str) -> int:
+    """A byte-size Spark conf as an int ('10485760b', '64MB', '-1')."""
+    v = spark.conf.get(key).strip().lower()
+    units = {"k": 1, "m": 2, "g": 3, "t": 4, "p": 5}
+    num = v.rstrip("bkmgtp")
+    suffix = v[len(num):].rstrip("b")
+    return int(num) * 1024 ** units.get(suffix, 0)
+
+
+def _changes_local(
+    table: LakeTable,
+    snap_old: Snapshot,
+    snap_new: Snapshot,
+    files_old: list,
+    files_new: list,
+    change_col: str,
+    emit_preimages: bool,
+):
+    """The driver-side ``table_changes``: the change rows as a local frame,
+    or FALLBACK when the distributed plan must answer.
+
+    Only a key with a row in a file added or removed between the two
+    snapshots can change state — every other key has the same stored rows
+    at both versions. So: read the keys of the symmetric-difference files
+    (K), resolve K at both snapshots in one pass over the candidate files
+    (pointread.read_key_rows), fold each side with the dialect's Python
+    twin and classify with the rules of the distributed plan."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from gobblin_spark.lakehouse.pointread import (
+        FALLBACK,
+        fold_keys,
+        read_key_rows,
+    )
+
+    if snap_new.merge_dialect not in ("row", "cell"):
+        return FALLBACK  # 'column' is deprecated: its fold stays in Spark
+    cand = {f.path: f for f in (*files_old, *files_new)}
+    if any(f.schema_version != snap_new.schema_version
+           for f in cand.values()):
+        return FALLBACK  # schema conformance lives in the Spark read
+    limit = _byte_conf(table.spark, "spark.sql.autoBroadcastJoinThreshold")
+    if limit < 0 or sum(f.bytes for f in cand.values()) > limit:
+        return FALLBACK
+
+    keys = snap_new.merge_keys
+    diff = ({f.path for f in snap_old.files}
+            ^ {f.path for f in snap_new.files})
+    # every row of a symmetric-difference file is a changed key's row
+    rows = read_key_rows(table, [cand[p] for p in diff], keys, None)
+    changed = {tuple(r[c] for c in keys)
+               for rs in rows.values() for r in rs}
+    rest = [f for p, f in cand.items() if p not in diff]
+    if changed:
+        rows.update(read_key_rows(table, rest, keys, changed))
+    fields = snap_new.schema.fields
+    payload = [f.name for f in fields
+               if f.name not in keys and f.name not in META_COLS]
+
+    def _state(files) -> dict[tuple, dict]:
+        return fold_keys(snap_new.merge_dialect, keys, payload,
+                         (r for f in files for r in rows.get(f.path, ())))
+
+    old, new = _state(files_old), _state(files_new)
+    ident = CELLS_COL if snap_new.merge_dialect == "cell" else SEQ_COL
+
+    def _row(k, image: dict, seq, label: str) -> dict:
+        return {**dict(zip(keys, k)), **{c: image[c] for c in payload},
+                SEQ_COL: seq, change_col: label}
+
+    out = []
+    for k in changed:
+        o, n = old.get(k), new.get(k)
+        o_live = o is not None and not o[DELETED_COL]
+        n_live = n is not None and not n[DELETED_COL]
+        if n_live and not o_live:
+            out.append(_row(k, n, n[SEQ_COL], "insert"))
+        elif o_live and not n_live:
+            seq = (n or o)[SEQ_COL]
+            if emit_preimages or n is None:
+                image = o
+            else:  # the tombstone's payload, the old row's where null
+                image = {c: o[c] if n[c] is None else n[c] for c in payload}
+            out.append(_row(k, image, seq, "delete"))
+        elif n_live and o_live and n[ident] != o[ident]:
+            if emit_preimages:
+                out.append(_row(k, o, o[SEQ_COL], "update_preimage"))
+                out.append(_row(k, n, n[SEQ_COL], "update_postimage"))
+            else:
+                out.append(_row(k, n, n[SEQ_COL], "update"))
+    by_name = {f.name: f for f in fields}
+    schema = StructType(
+        [StructField(c, by_name[c].dataType) for c in (*keys, *payload)]
+        + [StructField(SEQ_COL, by_name[SEQ_COL].dataType),
+           # as the distributed plan types it: explode's image labels are
+           # never null
+           StructField(change_col, StringType(), not emit_preimages)])
+    return local_frame(table.spark, schema, out)
+
+
 def table_changes(
     table: LakeTable,
     from_version: int,
@@ -1132,9 +1232,11 @@ def table_changes(
     and ``to_version`` (default: current), with ``_change_type`` ∈
     {'insert','update','delete'}:
 
-    - insert: live in new, absent-or-tombstoned in old
+    - insert: live in new, absent-or-tombstoned in old; the row is the new
+      state verbatim (a column the new row holds as NULL is NULL)
     - update: live in both with a different winning ``__seq`` (events are
-      immutable, so state identity IS (key, seq) — no payload compare)
+      immutable, so state identity IS (key, seq) — no payload compare);
+      the row is the new state verbatim
     - delete: tombstoned-or-absent in new, live in old. The row carries the
       tombstone's ``__seq`` (the deleting event) but the DELETED ROW'S
       payload wherever the tombstone is null — consumers get the image of
@@ -1144,19 +1246,35 @@ def table_changes(
     'update_preimage' (old payload + old seq) and 'update_postimage' — and
     delete rows carry strictly the old image, so derived-state consumers
     (incremental aggregates, secondary indexes — see aggview.agg_sync) can
-    retract old contributions exactly. Same single diff join, images
-    exploded from one array — never evaluated twice.
+    retract old contributions exactly.
 
-    Scale shape (100 TB): bucket-pruned — a bucket whose manifest file set
-    is IDENTICAL at both versions is untouched (its visible state is a pure
-    function of its files), so only rewritten/delta'd buckets are read on
-    either side. COW merges rewrite exactly the affected buckets and MOR
-    appends delta files only into written buckets, so the diff reads
-    O(changed buckets), not O(table), and the single key-keyed join shuffles
-    only those buckets' rows. Both sides resolve LWW first, so the diff is
-    valid with outstanding MOR deltas on either end. Both reads conform to
-    the NEW snapshot's schema via the schema_log, so diffs span schema
-    evolution (renamed/added columns compare correctly)."""
+    Only a key with a row in a file added or removed between the two
+    snapshots can change state, so a small diff resolves just those keys
+    on the DRIVER, eagerly at call time: the keys of the
+    symmetric-difference files are read with pyarrow, resolved at both
+    snapshots by the point-read resolver (pointread.read_key_rows), and the
+    result is handed to Spark as a local relation — ``collect()`` launches
+    no Spark job and nothing is shuffled. The distributed plan below
+    answers instead when a candidate file is at another schema version
+    than the new snapshot, when bucket pruning is impossible, for the
+    deprecated 'column' dialect, or when the candidate files exceed
+    ``spark.sql.autoBroadcastJoinThreshold`` bytes (-1: always
+    distributed).
+
+    Distributed plan, scale shape (100 TB): bucket-pruned — a bucket whose
+    manifest file set is IDENTICAL at both versions is untouched (its
+    visible state is a pure function of its files), so only rewritten/
+    delta'd buckets are read on either side. COW merges rewrite exactly the
+    affected buckets and MOR appends delta files only into written buckets,
+    so the diff reads O(changed buckets), not O(table), and the single
+    key-keyed join shuffles only those buckets' rows; preimage images are
+    exploded from one array, so the join is never evaluated twice. Both
+    sides resolve LWW first, so the diff is valid with outstanding MOR
+    deltas on either end. Both reads conform to the NEW snapshot's schema
+    via the schema_log, so diffs span schema evolution (renamed/added
+    columns compare correctly)."""
+    from gobblin_spark.lakehouse.pointread import FALLBACK
+
     snap_old = table.snapshot(from_version)
     snap_new = table.snapshot(to_version)
     if snap_new.version < snap_old.version:
@@ -1174,21 +1292,29 @@ def table_changes(
     # a correct superset, just unpruned.
     changed, unit_n, dividable = changed_units(snap_old, snap_new)
 
-    def _state(snap: Snapshot) -> DataFrame:
-        if dividable:
-            files = [
-                f for f in snap.files
-                if any(b in changed for b in range(
-                    f.bucket % file_spec_n(f, snap), unit_n,
-                    file_spec_n(f, snap)))
-            ]
-        else:
-            files = list(snap.files)
+    def _files(snap: Snapshot) -> list:
+        if not dividable:
+            return list(snap.files)
+        return [
+            f for f in snap.files
+            if any(b in changed for b in range(
+                f.bucket % file_spec_n(f, snap), unit_n,
+                file_spec_n(f, snap)))
+        ]
+
+    files_old, files_new = _files(snap_old), _files(snap_new)
+    if dividable:
+        local = _changes_local(table, snap_old, snap_new, files_old,
+                               files_new, change_col, emit_preimages)
+        if local is not FALLBACK:
+            return local
+
+    def _state(files: list) -> DataFrame:
         df = table.read_file_set(files, snap_new)  # conform to NEW schema
         return stored_reduce(snap_new, df, keys)
 
-    old = _state(snap_old)
-    new = _state(snap_new)
+    old = _state(files_old)
+    new = _state(files_new)
     payload = [c for c in new.columns if c not in (*keys, *META_COLS)]
 
     n = new.alias("n")
@@ -1213,8 +1339,12 @@ def table_changes(
             .when(~n_live & o_live, F.lit("delete"))
             .when(n_live & o_live & ident_changed, F.lit("update"))
         )
+        # insert/update (n live): the new row verbatim; delete: the
+        # tombstone's payload, the deleted row's where it is null
         sel = list(keys) + [
-            F.coalesce(F.col(f"n.{c}"), F.col(f"o.{c}")).alias(c)
+            F.when(n_live, F.col(f"n.{c}"))
+            .otherwise(F.coalesce(F.col(f"n.{c}"), F.col(f"o.{c}")))
+            .alias(c)
             for c in payload
         ] + [
             F.coalesce(F.col(f"n.{SEQ_COL}"),
@@ -1227,8 +1357,8 @@ def table_changes(
     # 'update_preimage' (the replaced state: old payload, old seq) and
     # 'update_postimage' — so consumers that maintain derived state
     # (incremental aggregates, secondary indexes) can retract the old
-    # contribution and apply the new one. insert/delete rows are identical
-    # to the default mode. Single pass: one array-of-images per joined key,
+    # contribution and apply the new one. insert rows are identical to the
+    # default mode. Single pass: one array-of-images per joined key,
     # exploded — the diff join is never evaluated twice.
     def _img(pay, seq_expr, label: str):
         return F.struct(
@@ -1237,8 +1367,7 @@ def table_changes(
             F.lit(label).alias(change_col),
         )
 
-    img_ins = _img(lambda c: F.coalesce(F.col(f"n.{c}"), F.col(f"o.{c}")),
-                   F.coalesce(F.col(f"n.{SEQ_COL}"), F.col(f"o.{SEQ_COL}")),
+    img_ins = _img(lambda c: F.col(f"n.{c}"), F.col(f"n.{SEQ_COL}"),
                    "insert")
     # delete payload = strictly the OLD image (the retraction a derived-
     # state consumer must apply); a delete only fires when o was live, so

@@ -1,14 +1,18 @@
-"""Driver-side point lookup: a millisecond primary-key read that never
-launches a Spark job.
+"""Driver-side keyed reads: a millisecond primary-key read that never
+launches a Spark job, and the resolver behind small changelog diffs.
 
-The manifest already holds everything a single-key read needs — bucket
+The manifest already holds everything a keyed read needs — bucket
 layout, per-file key bounds, and (inside each parquet footer) row-group
-stats over the key-sorted compaction output. ``point_lookup_local``
-resolves a merge key entirely on the driver: hash the key to its bucket
-with a Python port of Spark's xxhash64 (parity property-tested against
-the JVM expression), prune candidate files by bucket + key_bounds, read
-only the surviving files' matching row groups via pyarrow, and LWW-fold
-the handful of rows in plain Python.
+stats over the key-sorted compaction output. ``read_key_rows`` resolves a
+SET of merge keys on the driver in one pass over candidate files: prune
+by key_bounds and row-group stats, read the key columns first, and
+materialise only the rows whose key is wanted. ``fold_keys`` LWW-folds
+each key's rows into its stored state with the dialect's plain-Python
+fold. ``point_lookup_local`` hashes one key to its bucket with a Python
+port of Spark's xxhash64 (parity property-tested against the JVM
+expression) and projects the visible row from that state;
+``merge.table_changes`` resolves the keys of a small diff at two
+snapshots with the same two calls.
 
 This is the interactive read an upsert-table consumer expects (≙ a Hive
 consumer of the reference's published tables doing a keyed SELECT;
@@ -28,6 +32,7 @@ memory used is the matched rows (≤ rows per key per file).
 
 from __future__ import annotations
 
+import bisect
 import os
 from typing import Any
 
@@ -159,19 +164,9 @@ FALLBACK = object()  # sentinel: caller should use the Spark path
 
 _SEQ = "__seq"
 _DELETED = "__deleted"
-_META = ("__seq", "__deleted", "__cells", "__del_seq")
-
-
-def _bounds_exclude(f, key: dict[str, Any]) -> bool:
-    if not f.key_bounds:
-        return False  # unknown bounds: never prune (legacy manifests)
-    for col, v in key.items():
-        b = f.key_bounds.get(col)
-        if b is None or b[0] is None or b[1] is None:
-            continue
-        if v < b[0] or v > b[1]:
-            return True
-    return False
+_CELLS = "__cells"
+_DELSEQ = "__del_seq"
+_META = (_SEQ, _DELETED, _CELLS, _DELSEQ)
 
 
 def _int_size(spark_type: str) -> int:
@@ -194,6 +189,120 @@ def key_bucket(snap: Snapshot, key: dict[str, Any]) -> int:
                    snap.bucket_cols])
 
 
+def _may_hold(values: dict[str, list], bounds) -> bool:
+    """False only when, for some key column, no wanted value (``values``:
+    column → sorted distinct values) lies in that column's [min, max] —
+    ``bounds(col)`` returns the pair or None when unknown. Per-column
+    checks make this a sound superset for multi-column keys."""
+    for col, vals in values.items():
+        b = bounds(col)
+        if b is None or b[0] is None or b[1] is None:
+            continue
+        try:
+            i = bisect.bisect_left(vals, b[0])
+            if i == len(vals) or vals[i] > b[1]:
+                return False
+        except TypeError:
+            continue  # incomparable stats type: never prune on it
+    return True
+
+
+def read_key_rows(
+    table: LakeTable,
+    files: list,
+    keys: list[str],
+    wanted: set[tuple] | None,
+) -> dict[str, list[dict]]:
+    """One driver pass over ``files``: the stored rows whose merge key
+    (tuple in ``keys`` order) is in ``wanted`` — every row when ``wanted``
+    is None — grouped by file path.
+
+    A file is skipped when its manifest key_bounds exclude every wanted
+    key, a row group when its parquet stats do. Within the surviving row
+    groups only the key columns are read first; full rows are read and
+    materialised only at the matching positions. The caller guarantees
+    every file is at the snapshot's schema version."""
+    import pyarrow.parquet as pq
+
+    if wanted is None:
+        return {f.path: pq.ParquetFile(
+                    os.path.join(table.root, f.path)).read().to_pylist()
+                for f in files}
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    distinct = {c: list({k[i] for k in wanted}) for i, c in enumerate(keys)}
+    values: dict[str, list] = {}  # sorted, for bounds pruning
+    for c, vals in distinct.items():
+        try:
+            values[c] = sorted(vals)
+        except TypeError:  # unorderable mix: never prune on c
+            pass
+    value_sets: dict[tuple, Any] = {}  # (column, arrow type) → is_in set
+    out: dict[str, list[dict]] = {}
+    for f in files:
+        if not _may_hold(values, (f.key_bounds or {}).get):
+            continue
+        pf = pq.ParquetFile(os.path.join(table.root, f.path))
+        md = pf.metadata
+        idx_of = {c: i for i, c in enumerate(pf.schema_arrow.names)}
+        groups = []
+        for g in range(md.num_row_groups):
+            stats = [(c, md.row_group(g).column(idx_of[c]).statistics)
+                     for c in keys if c in idx_of]
+            bounds = {c: (st.min, st.max) for c, st in stats
+                      if st is not None and st.has_min_max}
+            if _may_hold(values, bounds.get):
+                groups.append(g)
+        if not groups:
+            continue
+        kt = pf.read_row_groups(groups, columns=keys)
+        mask = None
+        try:
+            for c in keys:
+                typ = kt.schema.field(c).type
+                if (c, typ) not in value_sets:
+                    value_sets[c, typ] = pa.array(distinct[c], type=typ)
+                m = pc.is_in(kt.column(c), value_set=value_sets[c, typ])
+                mask = m if mask is None else pc.and_(mask, m)
+        except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError):
+            continue  # a wanted value of another type matches no row
+        pos = pc.indices_nonzero(mask)
+        if len(keys) > 1 and len(pos):
+            # the per-column masks admit cross-products of wanted values;
+            # keep only exact key tuples
+            cand = kt.take(pos)
+            got = zip(*(cand.column(c).to_pylist() for c in keys))
+            pos = [p for p, k in zip(pos.to_pylist(), got) if k in wanted]
+        if len(pos):
+            out[f.path] = pf.read_row_groups(groups).take(pos).to_pylist()
+    return out
+
+
+def fold_keys(
+    dialect: str,
+    keys: list[str],
+    value_cols: list[str],
+    rows,
+) -> dict[tuple, dict]:
+    """LWW-fold stored ``rows`` (any iterable of row dicts) per merge key:
+    key tuple → the key's stored state — payload, ``__seq``,
+    ``__deleted`` and, for the 'cell' dialect, ``__cells`` and
+    ``__del_seq`` — exactly the row the dialect's distributed stored
+    reduce would output. ``value_cols`` are the payload columns without
+    the keys."""
+    fold = _FOLDS[dialect]
+    by_key: dict[tuple, list[dict]] = {}
+    for r in rows:
+        by_key.setdefault(tuple(r[c] for c in keys), []).append(r)
+    out = {}
+    for k, rs in by_key.items():
+        state = fold(rs, value_cols)
+        state.update(zip(keys, k))
+        out[k] = state
+    return out
+
+
 def point_lookup_local(
     table: LakeTable,
     key: dict[str, Any],
@@ -205,15 +314,15 @@ def point_lookup_local(
     the key is absent/deleted, or the FALLBACK sentinel when this path
     can't answer safely (schema-version drift among candidate files, too
     many candidates, unknown dialect)."""
-    import pyarrow.parquet as pq
-
     if snap is None:
         snap = table.snapshot()
     bucket = key_bucket(snap, key)
     keys = snap.merge_keys
-    cand = [f for f in snap.files
-            if f.bucket == bucket % _spec_of(f, snap) and not _bounds_exclude(
-                f, {k: key[k] for k in keys if k in key})]
+    missing = [k for k in keys if k not in key]
+    if missing:
+        raise ValueError(
+            f"point_lookup needs all merge keys; missing {missing}")
+    cand = [f for f in snap.files if f.bucket == bucket % _spec_of(f, snap)]
     if not cand:
         return None
     if len(cand) > max_candidate_files:
@@ -222,104 +331,95 @@ def point_lookup_local(
         # old-layout files need the registry's rename/widen conversions —
         # that logic lives in the Spark read path; don't duplicate it here
         return FALLBACK
-
-    eq = {k: key[k] for k in keys if k in key}
-    matched: list[dict] = []
-    for f in cand:
-        path = os.path.join(table.root, f.path)
-        pf = pq.ParquetFile(path)
-        name_to_idx = {c: i for i, c in
-                       enumerate(pf.schema_arrow.names)}
-        groups = []
-        for g in range(pf.metadata.num_row_groups):
-            rg = pf.metadata.row_group(g)
-            hit = True
-            for col, v in eq.items():
-                idx = name_to_idx.get(col)
-                if idx is None:
-                    continue
-                st = rg.column(idx).statistics
-                if st is None or not st.has_min_max:
-                    continue
-                if v < st.min or v > st.max:
-                    hit = False
-                    break
-            if hit:
-                groups.append(g)
-        if not groups:
-            continue
-        tbl = pf.read_row_groups(groups)
-        for row in tbl.to_pylist():
-            if all(row.get(c) == v for c, v in eq.items()):
-                matched.append(row)
-    if not matched:
-        return None
-    fold = {"row": _fold_row, "column": _fold_patch,
-            "cell": _fold_cell}.get(snap.merge_dialect)
-    if fold is None:
+    if snap.merge_dialect not in _FOLDS:
         return FALLBACK
-    payload_cols = [c for c in matched[0] if c not in _META]
-    return fold(matched, payload_cols)
+
+    want = tuple(key[k] for k in keys)
+    rows = read_key_rows(table, cand, keys, {want})
+    cols = [f.name for f in snap.schema.fields if f.name not in _META]
+    state = fold_keys(snap.merge_dialect, keys,
+                      [c for c in cols if c not in keys],
+                      (r for rs in rows.values() for r in rs)).get(want)
+    if state is None or state[_DELETED]:
+        return None
+    return {c: state[c] for c in cols}
 
 
 # ---------------------------------------------------- local dialect folds
 # Plain-Python twins of merge.py's stored reduces over ONE key's candidate
-# rows (a handful of rows read from pruned row groups). Each mirrors the
-# distributed fold's semantics exactly; duplicates of the same event are
-# byte-identical, so seq ties are content-neutral.
+# rows (a handful of rows read from pruned row groups). Each returns the
+# key's stored state as the distributed fold outputs it (merge keys are
+# added by fold_keys); duplicates of the same event are byte-identical, so
+# seq ties are content-neutral.
 
 _NEG = -(1 << 62)
 
 
-def _fold_row(rows: list[dict], payload_cols: list[str]):
+def _fold_row(rows: list[dict], value_cols: list[str]) -> dict:
     """LWW by (__seq, tombstone-beats-upsert) — twin of lww_reduce over the
-    stored shape (rank: delete 3, live 2)."""
+    stored shape (rank: delete 3, live 2). The state is the winning row,
+    a tombstone's payload included."""
     def rank(r):
         return (r[_SEQ], 3 if r.get(_DELETED) else 2)
-    best = max(rows, key=rank)
-    if best.get(_DELETED):
-        return None
-    return {c: best[c] for c in payload_cols}
+    return dict(max(rows, key=rank))
 
 
-def _fold_patch(rows: list[dict], payload_cols: list[str]):
+def _fold_patch(rows: list[dict], value_cols: list[str]) -> dict:
     """Twin of patch_reduce_stored ('column' dialect): per-column latest
-    non-null among live rows after the key's last tombstone."""
+    non-null among live rows after the key's last tombstone; a key whose
+    last word is the tombstone keeps it at the delete's seq."""
     dels = [r[_SEQ] for r in rows if r.get(_DELETED)]
     last_del = max(dels) if dels else _NEG
     live = [r for r in rows if not r.get(_DELETED) and r[_SEQ] > last_del]
     if not live:
-        return None
+        return {**dict.fromkeys(value_cols), _SEQ: last_del,
+                _DELETED: True}
     out = {}
-    for c in payload_cols:
+    for c in value_cols:
         vals = [(r[_SEQ], r[c]) for r in live if r.get(c) is not None]
         out[c] = max(vals, key=lambda t: t[0])[1] if vals else None
+    out[_SEQ] = max(r[_SEQ] for r in live)
+    out[_DELETED] = False
     return out
 
 
 def _cells_map(r: dict) -> dict:
-    cells = r.get("__cells") or {}
+    cells = r.get(_CELLS) or {}
     if isinstance(cells, list):  # pyarrow map → list of (k, v) pairs
         cells = dict(cells)
     return cells
 
 
-def _fold_cell(rows: list[dict], payload_cols: list[str]):
+def _fold_cell(rows: list[dict], value_cols: list[str]) -> dict:
     """Twin of cell_reduce_stored: per-column latest CELL seq, cells at or
     below the key's max delete seq excluded; key live iff any non-tombstone
-    row's __seq exceeds the max delete seq."""
-    dels = [r["__del_seq"] for r in rows if r.get("__del_seq") is not None]
-    last_del = max(dels) if dels else _NEG
-    live = any(not r.get(_DELETED) and r[_SEQ] > last_del for r in rows)
+    row's __seq exceeds the max delete seq. A dead key keeps only its
+    seqs: payload NULL, no cells."""
+    dels = [r[_DELSEQ] for r in rows if r.get(_DELSEQ) is not None]
+    del_max = max(dels) if dels else None
+    last_del = _NEG if del_max is None else del_max
+    live = [r[_SEQ] for r in rows
+            if not r.get(_DELETED) and r[_SEQ] > last_del]
     if not live:
-        return None
-    out = {}
-    for c in payload_cols:
+        return {**dict.fromkeys(value_cols), _SEQ: del_max,
+                _DELETED: True, _CELLS: {}, _DELSEQ: del_max}
+    maps = [_cells_map(r) for r in rows]
+    out: dict[str, Any] = {}
+    cells: dict[str, int] = {}
+    for c in value_cols:
         vals = [
             (cs, r.get(c))
-            for r in rows
-            for cs in [_cells_map(r).get(c)]
+            for r, m in zip(rows, maps)
+            for cs in [m.get(c)]
             if cs is not None and cs > last_del
         ]
-        out[c] = max(vals, key=lambda t: t[0])[1] if vals else None
+        best = max(vals, key=lambda t: t[0]) if vals else None
+        out[c] = best[1] if best else None
+        if best:
+            cells[c] = best[0]
+    out.update({_SEQ: max(live), _DELETED: False, _CELLS: cells,
+                _DELSEQ: del_max})
     return out
+
+
+_FOLDS = {"row": _fold_row, "column": _fold_patch, "cell": _fold_cell}

@@ -33,7 +33,10 @@ additionally publishes a per-table completion marker under
 ``<catalog>/maintenance/<sweep_id>/`` (publish_if_absent — exactly-once
 even against a concurrent duplicate sweep) and a rerun with the same id
 SKIPS completed tables — the resume semantics a scheduler wants when a
-sweep over thousands of tables dies at table 700.
+sweep over thousands of tables dies at table 700. A table whose
+maintenance raises does not stop the sweep: its error goes into the
+report, it gets no marker, and the sweep ends with ``SweepFailed``
+(the ``maintain`` CLI exits 1).
 
 Scale shape: the sweep itself is driver-side manifest math per table; the
 only cluster work is the compactions it decides to run, each O(that
@@ -46,6 +49,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import traceback
 from typing import Any
 
 from gobblin_spark.catalog import Catalog
@@ -121,11 +125,26 @@ def maintain_table(spark, table_root: str,
     return actions
 
 
+class SweepFailed(RuntimeError):
+    """Some tables' maintenance raised. The sweep still ran every other
+    table; ``report`` holds each table's outcome, a failed one as
+    ``{"error": "<type>: <message>"}``."""
+
+    def __init__(self, report: dict[str, Any]):
+        failed = [n for n, r in report["tables"].items() if "error" in r]
+        super().__init__(f"maintenance failed for tables {failed}")
+        self.report = report
+
+
 def sweep_catalog(spark, catalog_root: str, sweep_id: str | None = None,
                   fs: CommitFs | None = None) -> dict[str, Any]:
-    """Run every registered table's policy. With ``sweep_id``, tables
-    completed by an earlier run of the SAME sweep are skipped (crash
-    resume / concurrent-duplicate dedup via publish_if_absent markers)."""
+    """Run every registered table's policy and return the report. With
+    ``sweep_id``, tables completed by an earlier run of the SAME sweep are
+    skipped (crash resume / concurrent-duplicate dedup via
+    publish_if_absent markers). A table whose maintenance raises is
+    recorded as failed — it gets no marker, so a resumed sweep retries
+    it — and the sweep goes on to the next table; at the end SweepFailed
+    carries the report."""
     cat = Catalog(catalog_root, fs=fs)
     cfs = cat.fs
     marker_dir = (os.path.join(catalog_root, "maintenance", sweep_id)
@@ -135,26 +154,36 @@ def sweep_catalog(spark, catalog_root: str, sweep_id: str | None = None,
     report: dict[str, Any] = {"catalog": catalog_root, "sweep_id": sweep_id,
                               "tables": {}}
     for e in cat.list():
-        policy = parse_policy(e.properties)
-        if not policy:
-            report["tables"][e.name] = {"skipped": "no maintain.* policy"}
-            continue
         marker = (os.path.join(marker_dir, f"{e.name}.json")
                   if marker_dir else None)
-        if marker and cfs.exists(marker):
-            report["tables"][e.name] = {"skipped": "already swept"}
-            continue
-        if not LakeTable.exists(e.table_root, fs=fs):
-            report["tables"][e.name] = {"skipped": "no table at root"}
-            continue
-        actions = maintain_table(spark, e.table_root, policy, fs=fs)
-        if marker:
-            try:
-                cfs.publish_if_absent(
-                    json.dumps({"name": e.name, "actions": actions,
-                                "completed_ms": int(time.time() * 1000)}
-                               ).encode(), marker)
-            except CommitConflict:
-                pass  # concurrent duplicate sweep finished it first
-        report["tables"][e.name] = {"actions": actions}
+        try:
+            outcome = _sweep_table(spark, e, cfs, marker, fs)
+        except Exception as exc:  # isolate the table, sweep on
+            traceback.print_exc()
+            outcome = {"error": f"{type(exc).__name__}: {exc}"}
+        report["tables"][e.name] = outcome
+    if any("error" in r for r in report["tables"].values()):
+        raise SweepFailed(report)
     return report
+
+
+def _sweep_table(spark, e, cfs: CommitFs, marker: str | None,
+                 fs: CommitFs | None) -> dict[str, Any]:
+    """One catalog entry's sweep outcome."""
+    policy = parse_policy(e.properties)
+    if not policy:
+        return {"skipped": "no maintain.* policy"}
+    if marker and cfs.exists(marker):
+        return {"skipped": "already swept"}
+    if not LakeTable.exists(e.table_root, fs=fs):
+        return {"skipped": "no table at root"}
+    actions = maintain_table(spark, e.table_root, policy, fs=fs)
+    if marker:
+        try:
+            cfs.publish_if_absent(
+                json.dumps({"name": e.name, "actions": actions,
+                            "completed_ms": int(time.time() * 1000)}
+                           ).encode(), marker)
+        except CommitConflict:
+            pass  # concurrent duplicate sweep finished it first
+    return {"actions": actions}

@@ -391,3 +391,29 @@ def test_fast_forward_race_window_is_closed_by_atomic_publish(
     # the racing commit is intact; nothing from the branch leaked in
     assert main.current_version() == base_v + 1
     assert _fp(main) == racer_fp
+
+
+def test_branch_auto_create_race_attaches_the_loser(spark, tmp_table_dir,
+                                                   monkeypatch):
+    """Two ingests auto-create the same branch: the other one creates it
+    between this one's existence check and its create. The loser attaches
+    to the winner's branch instead of failing."""
+    d = tmp_table_dir
+    ev = _events(spark, d, n=600)
+    CdcEngine(spark, ev, d + "/t", d + "/s",
+              max_records_per_batch=100000, n_buckets=4).run_until_caught_up()
+    real = LakeTable.create_branch
+
+    def racing(self, name, version=None):
+        real(LakeTable(spark, d + "/t"), name, version)  # the winner
+        return real(self, name, version)
+
+    monkeypatch.setattr(LakeTable, "create_branch", racing)
+    eng = CdcEngine(spark, ev, d + "/t", d + "/s_b",
+                    max_records_per_batch=100000, n_buckets=4,
+                    branch="audit")
+    monkeypatch.undo()
+    main = LakeTable(spark, d + "/t")
+    assert main.branches() == {"audit": main.current_version()}
+    assert eng.table.branch_name == "audit"
+    assert eng.table.current_version() == main.current_version()

@@ -7,10 +7,13 @@ instead, MRCompactor.java:147-157). Expected values are computed by an
 independent pure-Python LWW replay of the same events.
 """
 
+import contextlib
+
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 import pytest
 
-from gobblin_spark.lakehouse import LakeTable, merge_lww
+from gobblin_spark.lakehouse import LakeTable, merge_lww, pointread
 from gobblin_spark.lakehouse.merge import (
     compact,
     merge_lww_mor,
@@ -20,12 +23,52 @@ from gobblin_spark.lakehouse.merge import (
 
 from tests.test_merge import (
     KEYS,
+    TARGET_SCHEMA,
     data_events,
     make_events,
     new_table,
 )
 
 COLS = ["seq", "op", "repo", "path", "commit", "lang", "content"]
+# typed, for batches whose payload columns may be all NULL
+EVENTS = ("seq long, op string, repo string, path string, commit string, "
+          "lang string, content string")
+
+
+THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
+@contextlib.contextmanager
+def conf(spark, key, value):
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def distributed(spark):
+    """table_changes on its distributed plan: -1 disables the driver-local
+    path, as it disables broadcast joins."""
+    return conf(spark, THRESHOLD, "-1")
+
+
+def change_rows(t, v_from, v_to=None, **kw):
+    """table_changes as a sorted list of plain tuples."""
+    return sorted((tuple(r) for r in
+                   table_changes(t, v_from, v_to, **kw).collect()), key=repr)
+
+
+def both_paths(spark, t, v_from, v_to=None, **kw):
+    """(local rows, distributed rows, jobs the local read launched)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup())
+    local = change_rows(t, v_from, v_to, **kw)
+    jobs = len(tracker.getJobIdsForGroup()) - before
+    with distributed(spark):
+        dist = change_rows(t, v_from, v_to, **kw)
+    return local, dist, jobs
 
 
 def _py_lww(rows, max_seq=None):
@@ -144,9 +187,11 @@ def test_table_changes_mor_matches_cow(spark, tmp_table_dir, tmp_path):
     assert got2 == got
 
 
-def test_table_changes_prunes_unchanged_buckets(spark, tmp_table_dir):
+def test_table_changes_prunes_unchanged_buckets(spark, tmp_table_dir,
+                                               monkeypatch):
     """Buckets with identical file sets at both versions are never read:
-    the diff is O(changed buckets), not O(table)."""
+    the diff is O(changed buckets), not O(table) — on the driver-local
+    path and on the distributed plan."""
     ev = make_events(spark, 2000)
     t = new_table(spark, tmp_table_dir)
     merge_lww(t, data_events(ev), KEYS)
@@ -156,7 +201,23 @@ def test_table_changes_prunes_unchanged_buckets(spark, tmp_table_dir):
         COLS,
     )
     merge_lww(t, one_key, KEYS)
+    total_files = len(t.snapshot().files)
+    want = {("repo-0001", "src/f_0000.py")}
 
+    # local path: every file the driver-side resolver opens
+    local_files = set()
+    real_rows = pointread.read_key_rows
+
+    def spy_rows(table, files, keys, wanted):
+        local_files.update(f.path for f in files)
+        return real_rows(table, files, keys, wanted)
+
+    monkeypatch.setattr(pointread, "read_key_rows", spy_rows)
+    changes = table_changes(t, v1).collect()
+    assert 0 < len(local_files) < total_files  # pruned
+    assert {(r["repo"], r["path"]) for r in changes} == want
+
+    # distributed plan: the file sets each side reads
     seen_files = []
     orig = t.read_file_set
 
@@ -165,15 +226,157 @@ def test_table_changes_prunes_unchanged_buckets(spark, tmp_table_dir):
         return orig(files, snap)
 
     t.read_file_set = spy
-    changes = table_changes(t, v1).collect()
+    with distributed(spark):
+        changes = table_changes(t, v1).collect()
     t.read_file_set = orig
 
-    total_files = len(t.snapshot().files)
     read_files = max(len(fl) for fl in seen_files)
     assert read_files < total_files  # pruned
-    assert {(r["repo"], r["path"]) for r in changes} == {
-        ("repo-0001", "src/f_0000.py")
+    assert {(r["repo"], r["path"]) for r in changes} == want
+
+
+def test_table_changes_reports_new_payload_verbatim(spark, tmp_table_dir):
+    """Insert and update rows carry the new row as stored: a column the
+    new row holds as NULL is NULL, never a stale value from the old row or
+    a tombstone. Delete rows keep their old-image fallback. Both paths."""
+    t = new_table(spark, tmp_table_dir)
+    merge_lww(t, spark.createDataFrame([
+        (1, "I", "r", "a", "c1", "py", "old"),
+        (2, "I", "r", "b", "c1", "py", "b1"),
+        (3, "D", "r", "b", "c3", "py", "gone"),   # tombstone with payload
+        (4, "I", "r", "c", "c1", "py", "c1"),
+    ], EVENTS), KEYS)
+    v1 = t.current_version()
+    merge_lww(t, spark.createDataFrame([
+        (10, "U", "r", "a", "c2", "py", None),    # content set to NULL
+        (11, "I", "r", "b", "c4", None, None),    # re-insert after the D
+        (12, "D", "r", "c", None, None, None),    # delete, empty tombstone
+    ], EVENTS), KEYS)
+    want = {
+        ("r", "a"): ("c2", "py", None, 10, "update"),
+        ("r", "b"): ("c4", None, None, 11, "insert"),
+        ("r", "c"): ("c1", "py", "c1", 12, "delete"),
     }
+    local, dist, _ = both_paths(spark, t, v1)
+    assert {r[:2]: r[2:] for r in local} == want
+    assert dist == local
+
+    pre = {
+        ("r", "a", "update_preimage"): ("c1", "py", "old", 1),
+        ("r", "a", "update_postimage"): ("c2", "py", None, 10),
+        ("r", "b", "insert"): ("c4", None, None, 11),
+        ("r", "c", "delete"): ("c1", "py", "c1", 12),
+    }
+    local, dist, _ = both_paths(spark, t, v1, emit_preimages=True)
+    assert {(*r[:2], r[-1]): r[2:-1] for r in local} == pre
+    assert dist == local
+
+    # 'cell': a delete and a partial re-insert inside the diff leave the
+    # re-insert's NULL columns NULL (state before the delete is dead)
+    from pyspark.sql.types import LongType, MapType, StringType, StructField
+
+    cell = LakeTable.create(
+        spark, tmp_table_dir + "/cell", T.StructType(
+            list(TARGET_SCHEMA.fields)
+            + [StructField("__cells", MapType(StringType(), LongType())),
+               StructField("__del_seq", LongType())]),
+        KEYS, n_buckets=4, properties={"merge_dialect": "cell"})
+    merge_lww(cell, spark.createDataFrame(
+        [(1, "I", "r", "a", "c1", "py", "x")], EVENTS), KEYS)
+    c1 = cell.current_version()
+    merge_lww(cell, spark.createDataFrame([
+        (5, "D", "r", "a", None, None, None),
+        (6, "I", "r", "a", "c6", None, None),
+    ], EVENTS), KEYS)
+    for kw in ({}, {"emit_preimages": True}):
+        local, dist, _ = both_paths(spark, cell, c1, **kw)
+        assert local[-1][:5] == ("r", "a", "c6", None, None)
+        assert dist == local
+
+
+def test_table_changes_small_diff_launches_no_job(spark, tmp_table_dir):
+    """A small diff resolves on the driver and reaches Spark as a local
+    relation: building and collecting it launches no Spark job."""
+    ev = make_events(spark, 1500, dup_frac=0.1, delete_frac=0.1,
+                     ooo_window=200)
+    d = data_events(ev)
+    w1 = d.agg(F.max("seq")).first()[0] // 2
+    t = new_table(spark, tmp_table_dir)
+    merge_lww(t, d.filter(F.col("seq") <= w1), KEYS)
+    v1 = t.current_version()
+    merge_lww_mor(t, d.filter(F.col("seq") > w1), KEYS)
+    for pre in (False, True):
+        local, dist, jobs = both_paths(spark, t, v1, emit_preimages=pre)
+        assert jobs == 0, f"table_changes launched {jobs} Spark jobs"
+        assert local and local == dist
+
+
+def test_table_changes_fallbacks_take_distributed_path(spark, tmp_table_dir):
+    """Schema drift among the candidate files, a read above the size gate
+    and the deprecated 'column' dialect are answered by the distributed
+    plan, with the same rows."""
+    seen = []
+    t = new_table(spark, tmp_table_dir + "/t")
+    orig = t.read_file_set
+
+    def spy(files, snap=None):
+        seen.append(len(files))
+        return orig(files, snap)
+
+    t.read_file_set = spy
+    merge_lww(t, spark.createDataFrame([
+        (1, "I", "r", "a", "c1", "py", "a1"),
+        (2, "I", "r", "b", "c1", "py", "b1"),
+    ], COLS), KEYS)
+    v1 = t.current_version()
+    merge_lww(t, spark.createDataFrame([
+        (3, "U", "r", "a", "c2", "py", "a2"),
+        (4, "I", "r", "c", "c1", "py", "c1"),
+    ], COLS), KEYS)
+    v2 = t.current_version()
+
+    # oversize: a positive gate below the candidate bytes
+    seen.clear()
+    local = change_rows(t, v1, v2)
+    assert not seen  # the driver-local path answered
+    with conf(spark, THRESHOLD, "1b"):
+        assert change_rows(t, v1, v2) == local
+    assert seen  # the distributed plan answered
+    assert [r[-1] for r in local] == ["update", "insert"]
+
+    # schema drift: a column added after v2, then a write at the new
+    # schema version; v2's files are at the old one
+    snap = t.snapshot()
+    t.commit(
+        keep_files=snap.files, add_files=[],
+        schema=T.StructType(list(snap.schema.fields)
+                            + [T.StructField("stars", T.LongType())]),
+        schema_version=snap.schema_version + 1,
+        schema_log_append=[{"v": snap.schema_version + 1, "op": "add",
+                            "col": "stars"}],
+        expected_version=snap.version)
+    merge_lww(t, spark.createDataFrame(
+        [(5, "U", "r", "b", "c2", "py", "b2", 7)],
+        COLS + ["stars"]), KEYS)
+    seen.clear()
+    rows = change_rows(t, v2)
+    assert seen
+    assert rows == [("r", "b", "c2", "py", "b2", 7, 5, "update")]
+
+    # 'column' dialect (deprecated): its fold stays distributed
+    col = LakeTable.create(
+        spark, tmp_table_dir + "/col", TARGET_SCHEMA, KEYS, n_buckets=4,
+        properties={"merge_dialect": "column"})
+    merge_lww(col, spark.createDataFrame(
+        [(1, "I", "r", "a", "c1", "py", "a1")], COLS), KEYS)
+    c1 = col.current_version()
+    merge_lww(col, spark.createDataFrame(
+        [(2, "U", "r", "a", None, None, "a2")], EVENTS), KEYS)
+    tracker = spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup())
+    rows = change_rows(col, c1)
+    assert len(tracker.getJobIdsForGroup()) > before
+    assert rows == [("r", "a", "c1", "py", "a2", 2, "update")]
 
 
 def test_table_changes_bad_range(spark, tmp_table_dir):

@@ -18,7 +18,7 @@ from gobblin_spark.cli import main as cli_main
 from gobblin_spark.lakehouse import LakeTable, merge_lww
 from gobblin_spark.lakehouse.merge import merge_lww_mor, read_current
 from gobblin_spark.maintenance import (
-    maintain_table, parse_policy, sweep_catalog,
+    SweepFailed, maintain_table, parse_policy, sweep_catalog,
 )
 
 SCHEMA = StructType([
@@ -142,3 +142,39 @@ def test_cli_sweep_three_tables_with_distinct_policies_and_resume(
     rep2 = sweep_catalog(spark, d + "/cat", sweep_id="s2")
     assert rep2["tables"]["t1"]["actions"] == {}
     assert rep2["tables"]["t2"]["actions"] == {}
+
+
+def test_sweep_isolates_a_failing_table(spark, tmp_table_dir, capsys):
+    """Table 2 of 3 is broken (its current manifest is unreadable): its
+    error lands in the report, tables 1 and 3 are still compacted,
+    expired and vacuumed, and the CLI exits non-zero."""
+    d = tmp_table_dir
+    cat = Catalog(d + "/cat")
+    policy = {"maintain.compact_delta_ratio": "0.1",
+              "maintain.expire_keep_last": "1", "maintain.vacuum": "true"}
+    for name in ("t1", "t2", "t3"):
+        t = _mk(spark, f"{d}/{name}")
+        merge_lww(t, _batch(spark, 30), ["k"])
+        merge_lww_mor(t, _batch(spark, 30, seq0=50), ["k"])
+        cat.register(name, f"{d}/{name}", properties=policy)
+    broken = LakeTable(spark, d + "/t2")
+    with open(broken._manifest_path(broken.current_version()), "w") as fh:
+        fh.write("{not json")
+
+    assert cli_main(["maintain", "--catalog", d + "/cat"]) == 1
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep["tables"]["t2"]["error"].startswith("JSONDecodeError")
+    for name in ("t1", "t3"):
+        actions = rep["tables"][name]["actions"]
+        assert set(actions) == {"compacted", "snapshots_expired",
+                                "files_removed"}
+        t = LakeTable(spark, f"{d}/{name}")
+        assert int(t.snapshot().properties.get("mor_deltas", 0)) == 0
+        assert len(t.history()) == 1
+        assert read_current(t).count() == 30
+
+    # the library call reports the same way
+    with pytest.raises(SweepFailed, match="t2") as err:
+        sweep_catalog(spark, d + "/cat")
+    assert set(err.value.report["tables"]) == {"t1", "t2", "t3"}
+    assert "error" in err.value.report["tables"]["t2"]

@@ -287,3 +287,88 @@ def test_range_pruned_read_equals_full_filter(spark, tmp_path_factory,
 
     want = sorted((f"p{i}", v) for i, v in enumerate(values) if keep(v))
     assert got == want
+
+
+# the commit sequence every table_changes parity example runs: COW and MOR
+# writes, a rescale between MOR deltas, then a compaction folding them
+CHANGES_STEPS = ("cow", "mor", "rescale", "mor", "compact", "cow")
+CHANGES_EVENT = st.tuples(
+    st.integers(0, 5),                                  # key
+    st.sampled_from("IUD"),                             # op
+    st.one_of(st.none(), st.sampled_from(["x", "y"])),  # a (NULLs too)
+    st.one_of(st.none(), st.integers(0, 3)),            # b
+)
+
+
+@pytest.mark.parametrize("dialect", ["row", "cell"])
+@settings(max_examples=3, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                 HealthCheck.too_slow])
+@given(
+    batches=st.lists(st.lists(CHANGES_EVENT, min_size=1, max_size=8),
+                     min_size=4, max_size=4),
+    seed=st.integers(0, 2**16),
+    dup_count=st.integers(0, 4),
+)
+def test_table_changes_local_equals_distributed(
+        spark, tmp_path_factory, dialect, batches, seed, dup_count):
+    """PROPERTY: the driver-local table_changes returns exactly the rows of
+    the distributed plan (spark.sql.autoBroadcastJoinThreshold=-1), in
+    both emit_preimages modes, for every consecutive version pair and for
+    (v0, vN) — across deletes (tombstones with and without payload),
+    exact duplicate re-deliveries, out-of-order seqs, NULL payload
+    columns, COW and MOR commits, a rescale and a compaction. The local
+    answers launch no Spark job."""
+    from pyspark.sql.types import (BooleanType, LongType, MapType,
+                                   StringType, StructField, StructType)
+
+    from gobblin_spark.lakehouse import LakeTable, merge_lww
+    from gobblin_spark.lakehouse.merge import compact, merge_lww_mor
+
+    from tests.test_changelog import both_paths
+
+    keys = ["g", "k"]
+    fields = [StructField("g", StringType()), StructField("k", StringType()),
+              StructField("a", StringType()), StructField("b", LongType()),
+              StructField("__seq", LongType()),
+              StructField("__deleted", BooleanType())]
+    if dialect == "cell":
+        fields += [StructField("__cells", MapType(StringType(), LongType())),
+                   StructField("__del_seq", LongType())]
+    d = str(tmp_path_factory.mktemp("changesprop"))
+    t = LakeTable.create(spark, d + "/t", StructType(fields), keys,
+                         n_buckets=2, properties={"merge_dialect": dialect})
+
+    # seqs are a random permutation across all batches (out-of-order
+    # delivery); duplicates re-deliver an earlier event verbatim
+    rng = random.Random(seed)
+    seqs = list(range(1, sum(map(len, batches)) + 1))
+    rng.shuffle(seqs)
+    it = iter(seqs)
+    delivered = [[(next(it), op, f"g{k % 2}", f"k{k}", a, b)
+                  for k, op, a, b in batch] for batch in batches]
+    for _ in range(dup_count):
+        i = rng.randrange(len(delivered))
+        j = rng.randrange(i, len(delivered))
+        delivered[j].append(rng.choice(delivered[i]))
+
+    schema = "seq long, op string, g string, k string, a string, b long"
+    versions = [t.current_version()]
+    writes = iter(delivered)
+    for step in CHANGES_STEPS:
+        if step == "rescale":
+            t.rescale_buckets(t.snapshot().n_buckets * 2)
+        elif step == "compact":
+            compact(t)
+        else:
+            apply = merge_lww if step == "cow" else merge_lww_mor
+            apply(t, spark.createDataFrame(next(writes), schema), keys)
+        versions.append(t.current_version())
+
+    pairs = list(zip(versions, versions[1:])) + [(versions[0], versions[-1])]
+    for v_from, v_to in pairs:
+        for pre in (False, True):
+            local, dist, jobs = both_paths(spark, t, v_from, v_to,
+                                           emit_preimages=pre)
+            assert local == dist, (v_from, v_to, pre)
+            assert jobs == 0, (v_from, v_to, pre)

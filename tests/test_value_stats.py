@@ -378,3 +378,22 @@ def test_export_where_range_cli(spark, tmp_table_dir):
         cli(["export", "--table", tmp_table_dir + "/t",
              "--out", tmp_table_dir + "/y", "--where", "lang!!go",
              "--local-cores", "4"])
+
+
+def test_where_clause_anchors_on_the_column():
+    """The operator right after the column identifier is the clause's: a
+    value may contain '<', '>' or '=' and an equality stays an equality."""
+    from gobblin_spark.cli import _parse_where
+
+    eq, rng = _parse_where(["msg=a>b", "note <= x=y", "size>3"])
+    assert eq == {"msg": "a>b"}
+    assert rng == {
+        "note": {"lo": None, "hi": "x=y",
+                 "lo_strict": False, "hi_strict": False},
+        "size": {"lo": "3", "hi": None,
+                 "lo_strict": True, "hi_strict": False},
+    }
+    assert _parse_where(["a>b>"])[1]["a"]["lo"] == "b>"
+    for bad in ("=v", "lang!!go"):
+        with pytest.raises(SystemExit, match="col=value"):
+            _parse_where([bad])
