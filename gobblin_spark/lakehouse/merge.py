@@ -1115,13 +1115,17 @@ def changed_units(
     return changed, unit_n, True
 
 
-def _byte_conf(spark, key: str) -> int:
-    """A byte-size Spark conf as an int ('10485760b', '64MB', '-1')."""
-    v = spark.conf.get(key).strip().lower()
-    units = {"k": 1, "m": 2, "g": 3, "t": 4, "p": 5}
-    num = v.rstrip("bkmgtp")
-    suffix = v[len(num):].rstrip("b")
-    return int(num) * 1024 ** units.get(suffix, 0)
+# Size bounds of the driver-local table_changes, in manifest row counts.
+# It folds every row of the symmetric-difference files in Python: measured
+# on a 4-thread host against the distributed plan, ~20k such rows (a COW or
+# compaction diff) take 0.47-0.51 s locally vs 0.78-0.84 s, ~40k break
+# even and ~60k lose (1.1-1.2 s vs 0.8 s), so the bound is half the break-
+# even. It also scans the key columns of the other candidate files
+# (~0.8 µs/row: 1M rows 0.9 s vs 6.6 s distributed); that bound caps the
+# single-threaded scan near a second, which a cluster's distributed read
+# can beat. LOCAL_CHANGES_MAX_ROWS = -1 keeps every diff distributed.
+LOCAL_CHANGES_MAX_ROWS = 20_000
+LOCAL_CHANGES_MAX_SCAN_ROWS = 1_000_000
 
 
 def _changes_local(
@@ -1156,18 +1160,18 @@ def _changes_local(
     if any(f.schema_version != snap_new.schema_version
            for f in cand.values()):
         return FALLBACK  # schema conformance lives in the Spark read
-    limit = _byte_conf(table.spark, "spark.sql.autoBroadcastJoinThreshold")
-    if limit < 0 or sum(f.bytes for f in cand.values()) > limit:
+    diff = ({f.path for f in snap_old.files}
+            ^ {f.path for f in snap_new.files})
+    rest = [f for p, f in cand.items() if p not in diff]
+    if (sum(cand[p].rows for p in diff) > LOCAL_CHANGES_MAX_ROWS
+            or sum(f.rows for f in rest) > LOCAL_CHANGES_MAX_SCAN_ROWS):
         return FALLBACK
 
     keys = snap_new.merge_keys
-    diff = ({f.path for f in snap_old.files}
-            ^ {f.path for f in snap_new.files})
     # every row of a symmetric-difference file is a changed key's row
     rows = read_key_rows(table, [cand[p] for p in diff], keys, None)
     changed = {tuple(r[c] for c in keys)
                for rs in rows.values() for r in rs}
-    rest = [f for p, f in cand.items() if p not in diff]
     if changed:
         rows.update(read_key_rows(table, rest, keys, changed))
     fields = snap_new.schema.fields
@@ -1257,9 +1261,10 @@ def table_changes(
     no Spark job and nothing is shuffled. The distributed plan below
     answers instead when a candidate file is at another schema version
     than the new snapshot, when bucket pruning is impossible, for the
-    deprecated 'column' dialect, or when the candidate files exceed
-    ``spark.sql.autoBroadcastJoinThreshold`` bytes (-1: always
-    distributed).
+    deprecated 'column' dialect, or past the size bounds: more than
+    ``LOCAL_CHANGES_MAX_ROWS`` rows in the symmetric-difference files
+    (every one is folded in Python) or ``LOCAL_CHANGES_MAX_SCAN_ROWS`` in
+    the other candidate files (their key columns are scanned).
 
     Distributed plan, scale shape (100 TB): bucket-pruned — a bucket whose
     manifest file set is IDENTICAL at both versions is untouched (its

@@ -322,7 +322,12 @@ def point_lookup_local(
     if missing:
         raise ValueError(
             f"point_lookup needs all merge keys; missing {missing}")
-    cand = [f for f in snap.files if f.bucket == bucket % _spec_of(f, snap)]
+    # files whose key_bounds exclude the key are pruned before the gates,
+    # so they neither count as candidates nor force a schema fallback
+    values = {k: [key[k]] for k in keys}
+    cand = [f for f in snap.files
+            if f.bucket == bucket % _spec_of(f, snap)
+            and _may_hold(values, (f.key_bounds or {}).get)]
     if not cand:
         return None
     if len(cand) > max_candidate_files:

@@ -13,7 +13,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 import pytest
 
-from gobblin_spark.lakehouse import LakeTable, merge_lww, pointread
+from gobblin_spark.lakehouse import LakeTable, merge, merge_lww, pointread
 from gobblin_spark.lakehouse.merge import (
     compact,
     merge_lww_mor,
@@ -35,23 +35,24 @@ EVENTS = ("seq long, op string, repo string, path string, commit string, "
           "lang string, content string")
 
 
-THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
-
-
 @contextlib.contextmanager
-def conf(spark, key, value):
-    prev = spark.conf.get(key)
-    spark.conf.set(key, value)
+def local_bounds(**bounds):
+    """table_changes with its driver-local size bounds
+    (merge.LOCAL_CHANGES_MAX_ROWS, merge.LOCAL_CHANGES_MAX_SCAN_ROWS) set."""
+    prev = {k: getattr(merge, k) for k in bounds}
+    for k, v in bounds.items():
+        setattr(merge, k, v)
     try:
         yield
     finally:
-        spark.conf.set(key, prev)
+        for k, v in prev.items():
+            setattr(merge, k, v)
 
 
 def distributed(spark):
-    """table_changes on its distributed plan: -1 disables the driver-local
-    path, as it disables broadcast joins."""
-    return conf(spark, THRESHOLD, "-1")
+    """table_changes on its distributed plan: a bound of -1 rows disables
+    the driver-local path."""
+    return local_bounds(LOCAL_CHANGES_MAX_ROWS=-1)
 
 
 def change_rows(t, v_from, v_to=None, **kw):
@@ -309,10 +310,18 @@ def test_table_changes_small_diff_launches_no_job(spark, tmp_table_dir):
         local, dist, jobs = both_paths(spark, t, v1, emit_preimages=pre)
         assert jobs == 0, f"table_changes launched {jobs} Spark jobs"
         assert local and local == dist
+    # the base files' key scan above its bound: the distributed plan
+    # answers, with the same rows
+    tracker = spark.sparkContext.statusTracker()
+    local = change_rows(t, v1)
+    before = len(tracker.getJobIdsForGroup())
+    with local_bounds(LOCAL_CHANGES_MAX_SCAN_ROWS=0):
+        assert change_rows(t, v1) == local
+    assert len(tracker.getJobIdsForGroup()) > before
 
 
 def test_table_changes_fallbacks_take_distributed_path(spark, tmp_table_dir):
-    """Schema drift among the candidate files, a read above the size gate
+    """Schema drift among the candidate files, a diff above the size bound
     and the deprecated 'column' dialect are answered by the distributed
     plan, with the same rows."""
     seen = []
@@ -335,11 +344,12 @@ def test_table_changes_fallbacks_take_distributed_path(spark, tmp_table_dir):
     ], COLS), KEYS)
     v2 = t.current_version()
 
-    # oversize: a positive gate below the candidate bytes
+    # oversize: a positive gate below the rows of the diff's files (at
+    # least the old and the new file holding key a)
     seen.clear()
     local = change_rows(t, v1, v2)
     assert not seen  # the driver-local path answered
-    with conf(spark, THRESHOLD, "1b"):
+    with local_bounds(LOCAL_CHANGES_MAX_ROWS=1):
         assert change_rows(t, v1, v2) == local
     assert seen  # the distributed plan answered
     assert [r[-1] for r in local] == ["update", "insert"]

@@ -21,6 +21,7 @@ from gobblin_spark.lakehouse.merge import (
 from gobblin_spark.lakehouse.pointread import (
     FALLBACK,
     bucket_of,
+    key_bucket,
     point_lookup_local,
     xxhash64,
 )
@@ -217,6 +218,55 @@ def test_local_lookup_fallbacks(spark, tmp_table_dir):
     assert point_lookup_local(t3, key, max_candidate_files=0) is FALLBACK
     rows = point_lookup(t3, key).collect()
     assert len(rows) == 1
+
+
+def test_local_lookup_prunes_by_bounds_before_gates(spark, tmp_table_dir):
+    """Files of the key's bucket whose key_bounds exclude the key are
+    pruned BEFORE the candidate cap and the schema-drift check: delta
+    files the key cannot be in neither exceed max_candidate_files nor, at
+    an older schema version, force the distributed read."""
+    import dataclasses
+
+    t = new_table(spark, tmp_table_dir + "/t")
+    merge_lww(t, spark.createDataFrame(
+        [(1, "I", "a", "x", "c1", "py", "v1")],
+        "seq long, op string, repo string, path string, commit string, "
+        "lang string, content string"), KEYS)
+    key = {"repo": "a", "path": "x"}
+    bucket = key_bucket(t.snapshot(), key)
+    # three one-event MOR deltas into the same bucket, every repo > "a"
+    others = (k for k in (f"z{i}" for i in range(10_000))
+              if key_bucket(t.snapshot(), {"repo": k, "path": "x"}) == bucket)
+    for seq, repo in zip((2, 3, 4), others):
+        merge_lww_mor(t, spark.createDataFrame(
+            [(seq, "I", repo, "x", "c1", "py", "v")],
+            "seq long, op string, repo string, path string, commit string, "
+            "lang string, content string"), KEYS)
+    snap = t.snapshot()
+    in_bucket = [f for f in snap.files if f.bucket == bucket]
+    assert len(in_bucket) == 4
+
+    got = point_lookup_local(t, key, max_candidate_files=2)
+    assert got is not FALLBACK and got["content"] == "v1"
+    # the deltas' files at an older schema version: still answered locally
+    drift = dataclasses.replace(snap, files=[
+        f if f.bucket != bucket or f.key_bounds["repo"][0] == "a"
+        else dataclasses.replace(f, schema_version=snap.schema_version - 1)
+        for f in snap.files])
+    t.snapshot = lambda v=None: drift
+    got = point_lookup_local(t, key, max_candidate_files=2)
+    assert got is not FALLBACK and got["content"] == "v1"
+    # ... while a key inside a drifted file's bounds does fall back
+    z = next(f for f in drift.files
+             if f.bucket == bucket and f.key_bounds["repo"][0] != "a")
+    assert point_lookup_local(
+        t, {"repo": z.key_bounds["repo"][0], "path": "x"}) is FALLBACK
+
+    before = len(spark.sparkContext.statusTracker().getJobIdsForGroup())
+    rows = point_lookup(t, key).collect()
+    after = len(spark.sparkContext.statusTracker().getJobIdsForGroup())
+    assert [r["content"] for r in rows] == ["v1"]
+    assert after == before, "point_lookup launched a Spark job"
 
 
 def test_local_lookup_is_fast(spark, tmp_table_dir):

@@ -313,7 +313,7 @@ CHANGES_EVENT = st.tuples(
 def test_table_changes_local_equals_distributed(
         spark, tmp_path_factory, dialect, batches, seed, dup_count):
     """PROPERTY: the driver-local table_changes returns exactly the rows of
-    the distributed plan (spark.sql.autoBroadcastJoinThreshold=-1), in
+    the distributed plan (merge.LOCAL_CHANGES_MAX_ROWS=-1), in
     both emit_preimages modes, for every consecutive version pair and for
     (v0, vN) — across deletes (tombstones with and without payload),
     exact duplicate re-deliveries, out-of-order seqs, NULL payload
