@@ -40,12 +40,10 @@ from pyspark.sql import DataFrame, SparkSession
 from gobblin_spark.engine import KEYS, default_registry, target_schema_for
 from gobblin_spark.lakehouse import LakeTable
 from gobblin_spark.lakehouse.merge import (
-    CELLS_COL,
-    DELETED_COL,
-    DELSEQ_COL,
     META_COLS,
     SEQ_COL,
     batch_to_stored,
+    stored_schema,
 )
 from gobblin_spark.state.store import StateStore, WorkUnitState
 
@@ -109,23 +107,8 @@ def bootstrap_snapshot(
         table = LakeTable(spark, table_root, fs=fs)
         merge_dialect = table.snapshot().merge_dialect
     else:
-        if schema is not None:
-            from pyspark.sql.types import (
-                BooleanType, LongType, MapType, StringType, StructField,
-                StructType,
-            )
-            fields = list(schema.fields) + [
-                StructField(SEQ_COL, LongType()),
-                StructField(DELETED_COL, BooleanType()),
-            ]
-            if merge_dialect == "cell":
-                fields += [
-                    StructField(CELLS_COL, MapType(StringType(), LongType())),
-                    StructField(DELSEQ_COL, LongType()),
-                ]
-            full = StructType(fields)
-        else:
-            full = target_schema_for(registry, 1, merge_dialect)
+        full = (stored_schema(schema, merge_dialect) if schema is not None
+                else target_schema_for(registry, 1, merge_dialect))
         table = LakeTable.create(
             spark, table_root, full,
             keys, n_buckets=n_buckets,

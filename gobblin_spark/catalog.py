@@ -167,7 +167,8 @@ class Catalog:
                 "merge_keys": snap.merge_keys,
                 "bucket_cols": snap.bucket_cols,
                 "n_buckets": snap.n_buckets,
-                "merge_dialect": snap.merge_dialect,
+                # stored value: a retired dialect is reported, not raised
+                "merge_dialect": snap.properties.get("merge_dialect", "row"),
                 "schema_version": snap.schema_version,
                 "files": len(snap.files),
                 "rows": sum(f.rows for f in snap.files),

@@ -1119,13 +1119,11 @@ def main(argv: list[str] | None = None) -> int:
                           "keeps file sizes/parallelism bounded as the "
                           "table grows")
     ing.add_argument("--max-batches", type=int, default=1000)
-    ing.add_argument("--merge-dialect", choices=["row", "column", "cell"],
+    ing.add_argument("--merge-dialect", choices=["row", "cell"],
                      default="row", help="'cell' = patch semantics (null "
                      "payload column in an update means unchanged) with "
                      "per-column write seqs: order-independent folds, valid "
-                     "for batch, streaming and DLQ replay; 'column' = the "
-                     "same without cell seqs — DEPRECATED (order-dependent, "
-                     "batch-only; kept for existing tables)")
+                     "for batch, streaming and DLQ replay")
     ing.add_argument("--merge-mode", choices=["cow", "mor", "auto"],
                      default="cow",
                      help="cow: rewrite affected buckets per batch; "
@@ -1193,7 +1191,7 @@ def main(argv: list[str] | None = None) -> int:
                     help="alternative to --groups: derive the group list "
                          "from this change-event parquet path")
     bo.add_argument("--buckets", type=int, default=32)
-    bo.add_argument("--merge-dialect", choices=["row", "column", "cell"],
+    bo.add_argument("--merge-dialect", choices=["row", "cell"],
                     default="row")
     bo.add_argument("--distribution", choices=["cluster", "fanout"],
                     default="cluster",
@@ -1266,7 +1264,8 @@ def main(argv: list[str] | None = None) -> int:
                     help="include every batch (default: last 3)")
     mt.add_argument("--top-groups", type=int, default=5)
 
-    cp = sub.add_parser("compact", help="fold MOR delta files (LWW by key)")
+    cp = sub.add_parser("compact", help="fold MOR delta files (LWW by "
+                        "key); migrates a 'column'-dialect table to 'cell'")
     cp.add_argument("--table", required=True,
                     help="LakeTable root, or a catalog NAME with --catalog")
     cp.add_argument("--catalog", default="")
@@ -1483,8 +1482,8 @@ def main(argv: list[str] | None = None) -> int:
     st.add_argument("--merge-dialect", choices=["row", "cell"],
                     default="row",
                     help="'cell' = patch semantics with per-column write "
-                         "seqs (the order-independent dialect streaming "
-                         "epochs require; 'column' is batch-only)")
+                         "seqs (order-independent, as streaming epochs "
+                         "require)")
     st.add_argument("--interval", default="",
                     help="processing-time trigger (e.g. '30 seconds'); "
                          "empty = availableNow drain-and-exit")

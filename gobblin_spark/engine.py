@@ -37,10 +37,8 @@ from typing import Any, Callable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
-    BooleanType,
     IntegerType,
     LongType,
-    MapType,
     StringType,
     StructField,
     StructType,
@@ -49,13 +47,10 @@ from pyspark.sql.types import (
 from gobblin_spark.lakehouse import LakeTable, merge_lww
 from gobblin_spark.lakehouse.table import plan_rescale_factor
 from gobblin_spark.lakehouse.merge import (
-    CELLS_COL,
-    DELETED_COL,
-    DELSEQ_COL,
-    SEQ_COL,
     compact,
     merge_lww_mor,
     read_current,
+    stored_schema,
 )
 from gobblin_spark.operators.converters import (
     ConverterChain,
@@ -85,6 +80,13 @@ SCHEMA_V1 = StructType(
 )
 
 
+def check_choice(name: str, value: Any, allowed: tuple) -> None:
+    """A named error for a bad enum argument — unlike ``assert``, it
+    survives ``python -O``."""
+    if value not in allowed:
+        raise ValueError(f"{name}={value!r}: expected one of {allowed}")
+
+
 def default_registry(path: str | None = None) -> SchemaRegistry:
     reg = SchemaRegistry(path)
     if reg.versions:
@@ -110,16 +112,7 @@ def default_registry(path: str | None = None) -> SchemaRegistry:
 
 def target_schema_for(registry: SchemaRegistry, version: int,
                       dialect: str = "row") -> StructType:
-    base = registry.schema(version)
-    fields = base.fields + [
-        StructField(SEQ_COL, LongType()), StructField(DELETED_COL, BooleanType())
-    ]
-    if dialect == "cell":
-        fields = fields + [
-            StructField(CELLS_COL, MapType(StringType(), LongType())),
-            StructField(DELSEQ_COL, LongType()),
-        ]
-    return StructType(fields)
+    return stored_schema(registry.schema(version), dialect)
 
 
 def evolve_target_to(table: "LakeTable", registry: SchemaRegistry,
@@ -219,25 +212,14 @@ class CdcEngine:
         'cluster' (one shuffle, one file per bucket) or 'fanout' (no
         shuffle, per-task bucketed files; see LakeTable.write_data_files).
 
-        merge_dialect: 'row' (whole-row LWW), 'column' (DEPRECATED — see
-        below), or 'cell' (patch semantics: a null payload column in an
-        update means "unchanged"; each stored column carries its own write
-        seq and the max delete seq is retained — Cassandra-style cell
-        timestamps, making the fold order-independent so it is safe for
-        batch, streaming epochs, DLQ replay, and any non-monotone replay;
-        costs one map<string,bigint> per stored row).
-        Stored on the table at create; an existing table's dialect wins
-        over this argument.
-
-        'column' is the same patch semantics WITHOUT per-cell seqs: each
-        column resolves to its latest non-null value, relying on the
-        planner's seq-monotone batch admission for correctness. Two of the
-        three consumers already refuse it (streaming ingest and DLQ replay
-        — both can fold out of admission order), which makes it a foot-gun
-        whose remaining niche over 'cell' is only the map-column storage
-        cost. It is DEPRECATED: batch ingest still honors it for existing
-        tables but emits a DeprecationWarning; create new tables with
-        'cell'.
+        merge_dialect: 'row' (whole-row LWW) or 'cell' (patch semantics:
+        a null payload column in an update means "unchanged"; each stored
+        column carries its own write seq and the max delete seq is
+        retained — Cassandra-style cell timestamps, making the fold
+        order-independent so it is safe for batch, streaming epochs, DLQ
+        replay, and any non-monotone replay; costs one map<string,bigint>
+        per stored row). Stored on the table at create; an existing
+        table's dialect wins over this argument.
 
         branch: write-audit-publish — ingest into this zero-copy branch of
         an EXISTING table (auto-created at main's current version on first
@@ -264,21 +246,12 @@ class CdcEngine:
         self.converters = converters
         self.row_policies = row_policies or []
         self.err_path = err_path
-        assert merge_mode in ("cow", "mor", "auto")
+        check_choice("merge_mode", merge_mode, ("cow", "mor", "auto"))
+        check_choice("merge_dialect", merge_dialect, ("row", "cell"))
+        check_choice("delta_distribution", delta_distribution,
+                     ("cluster", "fanout"))
         self.merge_mode = merge_mode
         self.auto_cow_ratio = auto_cow_ratio
-        assert merge_dialect in ("row", "column", "cell")
-        if merge_dialect == "column":
-            import warnings
-
-            warnings.warn(
-                "merge_dialect='column' is deprecated: its fold is "
-                "order-dependent (correct only under the batch planner's "
-                "seq-monotone admission), so streaming ingest and DLQ "
-                "replay refuse it. Use 'cell' — same patch semantics, "
-                "order-independent via per-cell write seqs.",
-                DeprecationWarning, stacklevel=2)
-        assert delta_distribution in ("cluster", "fanout")
         self.delta_distribution = delta_distribution
         # commit-log retention: fold history into a rollup so planning cost
         # stays O(log_keep_last) however long the stream runs (None = never)
@@ -335,6 +308,8 @@ class CdcEngine:
                 fs=fs,
                 stats_cols=stats_cols,
             )
+        # a table in a retired dialect fails here, not mid-batch
+        self.table.snapshot().merge_dialect
 
     # ------------------------------------------------------------------ api
     def events(self) -> DataFrame:

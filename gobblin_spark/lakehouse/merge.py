@@ -39,6 +39,9 @@ from typing import Any, Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import (
+    BooleanType, LongType, MapType, StringType, StructField, StructType,
+)
 from pyspark.sql.window import Window
 
 from gobblin_spark.lakehouse.table import (
@@ -57,6 +60,18 @@ DELETED_COL = "__deleted"
 CELLS_COL = "__cells"
 DELSEQ_COL = "__del_seq"
 META_COLS = (SEQ_COL, DELETED_COL, CELLS_COL, DELSEQ_COL)
+
+
+def stored_schema(payload: StructType, dialect: str) -> StructType:
+    """The stored row shape: payload columns plus the dialect's system
+    columns (``__seq``, ``__deleted``; 'cell' adds ``__cells`` and
+    ``__del_seq``)."""
+    fields = list(payload.fields) + [StructField(SEQ_COL, LongType()),
+                                     StructField(DELETED_COL, BooleanType())]
+    if dialect == "cell":
+        fields += [StructField(CELLS_COL, MapType(StringType(), LongType())),
+                   StructField(DELSEQ_COL, LongType())]
+    return StructType(fields)
 
 
 def lww_reduce(
@@ -159,67 +174,6 @@ def lww_patch_reduce(
     return live.groupBy(*keys).agg(*aggs)
 
 
-def patch_reduce_stored(
-    df: DataFrame,
-    keys: Sequence[str],
-) -> DataFrame:
-    """Patch (column-granular) resolution over the STORED row shape
-    (payload + __seq + __deleted): one output row per key —
-
-    - a key with any live row after its last tombstone folds to per-column
-      latest-non-null values, ``__seq`` = max live seq, ``__deleted`` false
-      (the tombstone is superseded: every pre-delete row is removed by this
-      same fold, so nothing it guarded can resurface);
-    - a key whose last word is the tombstone keeps ONE tombstone row at the
-      delete's seq (dropped only by compaction's gc_horizon, same contract
-      as the row dialect).
-
-    Safe to apply to already-folded data (idempotent: a folded row is a
-    single live row that wins every per-column race). Plan: one window
-    (last-delete seq) + an aggregate on the same keys reusing the window's
-    partitioning — a single shuffle, mirroring lww_patch_reduce."""
-    payload_cols = [c for c in df.columns
-                    if c not in (*keys, SEQ_COL, DELETED_COL)]
-    w = Window.partitionBy(*keys)
-    last_del = F.max(
-        F.when(F.col(DELETED_COL), F.col(SEQ_COL))).over(w)
-    live = (~F.col(DELETED_COL)) & (
-        F.col(SEQ_COL) > F.coalesce(F.col("__last_del"),
-                                    F.lit(-(1 << 62))))
-    agg = (
-        df.withColumn("__last_del", last_del)
-        .withColumn("__live", live)
-        .groupBy(*keys)
-        .agg(
-            F.max(F.when(F.col("__live"), F.col(SEQ_COL))).alias("__live_seq"),
-            F.max(F.when(F.col(DELETED_COL), F.col(SEQ_COL))).alias("__del_seq"),
-            *[
-                F.max_by(
-                    F.col(c),
-                    F.when(F.col("__live") & F.col(c).isNotNull(),
-                           F.col(SEQ_COL)),
-                ).alias(c)
-                for c in payload_cols
-            ],
-        )
-    )
-    dead = F.col("__live_seq").isNull()
-
-    def out_col(c: str):
-        if c in keys:
-            return F.col(c)
-        if c == SEQ_COL:
-            return F.coalesce(
-                F.col("__live_seq"), F.col("__del_seq")).alias(SEQ_COL)
-        if c == DELETED_COL:
-            return dead.alias(DELETED_COL)
-        return F.when(~dead, F.col(c)).alias(c)
-
-    # preserve the input column order — writers/readers union by name, but
-    # a stable order keeps written files schema-identical to the row path
-    return agg.select(*[out_col(c) for c in df.columns])
-
-
 def batch_to_stored(
     batch: DataFrame,
     payload_cols: Sequence[str],
@@ -256,31 +210,27 @@ def cell_reduce_stored(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     ``__seq`` + ``__deleted`` + ``__cells`` map<col,seq> + ``__del_seq``):
     one output row per key.
 
-    Unlike ``patch_reduce_stored`` — which attributes every surviving column
-    of a folded row to the row's max seq and is therefore only correct when
-    folds happen in seq-monotone order (the batch planner's admission
-    guarantee) — this fold carries each column's ORIGINAL write seq in the
-    ``__cells`` map and the maximum delete seq in ``__del_seq`` even when the
-    key is live (Cassandra-style cell timestamps + tombstone retention). That
+    A folded row stands for many events, so its ``__seq`` (the max) says
+    nothing about when each surviving column was written. The fold
+    therefore carries each column's ORIGINAL write seq in the ``__cells``
+    map, and the maximum delete seq in ``__del_seq`` even when the key is
+    live (Cassandra-style cell timestamps + tombstone retention). That
     makes the fold **associative and commutative**: fold(fold(A), B) =
     fold(A ∪ B) for any split and any arrival order, so COW merges,
-    compaction and STREAMING epochs may fold in any order without
-    resurrecting stale columns or dropped pre-delete state. The two failure
-    modes this closes (both reachable in the 'column' dialect under
-    cross-epoch disorder):
+    compaction and STREAMING epochs may fold in any order:
 
-    - stale-cell win: fold attributes col a (set at seq 3) to the row max
-      seq 7; a late a@4 would lose 4 < 7. Here a's cell seq stays 3 → 4 wins.
-    - tombstone loss: fold sees D@4 superseded by b@7 and drops the delete;
-      a late c@3 (pre-delete state) would resurface. Here ``__del_seq`` = 4
-      is retained on the live row and kills any cell ≤ 4.
+    - a late a@4 after a@3 and b@7 were folded still wins a's race: a's
+      cell seq stays 3, not the row's 7;
+    - a late pre-delete c@3 after D@4 was superseded by b@7 stays dead:
+      ``__del_seq`` = 4 is retained on the live row and kills any cell
+      ≤ 4.
 
     Per-column race: latest cell by cell seq, cells ≤ the key's max delete
     seq excluded. Key liveness: any non-tombstone row with ``__seq`` greater
     than the max delete seq (an all-null patch still counts, mirroring
     ``lww_patch_reduce``). Plan shape: one window (max delete seq per key) +
     one aggregate on the same keys reusing the window's partitioning — a
-    single shuffle, same as the other stored reduces. Retained ``__del_seq``
+    single shuffle, same as ``lww_reduce``. Retained ``__del_seq``
     on live keys costs 8 bytes/key and is nulled only by tombstone GC
     semantics (events older than the horizon are out of contract)."""
     payload_cols = [c for c in df.columns if c not in (*keys, *META_COLS)]
@@ -344,10 +294,8 @@ def stored_reduce(
     hot_keys: DataFrame | None = None,
 ) -> DataFrame:
     """Dialect-routed LWW resolution over stored rows. Salting applies only
-    to the row dialect: the patch/cell folds are single declarative
-    aggregates whose per-column races a two-stage row fold would break."""
-    if snap.merge_dialect == "column":
-        return patch_reduce_stored(df, keys)
+    to the row dialect: the cell fold is a single declarative aggregate
+    whose per-column races a two-stage row fold would break."""
     if snap.merge_dialect == "cell":
         return cell_reduce_stored(df, keys)
     return lww_reduce(df, keys, SEQ_COL,
@@ -420,9 +368,9 @@ def merge_lww(
 
     # 3. Union + ONE LWW reduce (tombstones included on both sides; partial
     # aggregation collapses in-batch duplicate keys map-side, so a separate
-    # in-batch pre-reduce would only add a shuffle). The 'column' dialect
-    # resolves per-column latest-non-null instead (salting doesn't apply:
-    # its two-stage row fold would erase which column came from which seq).
+    # in-batch pre-reduce would only add a shuffle). The 'cell' dialect
+    # resolves per-column latest cell instead (salting doesn't apply: its
+    # two-stage row fold would erase which column came from which seq).
     combined = target_subset.unionByName(batch_rows)
     hot_norm = (hot_keys.select(*keys).distinct()
                 if hot_keys is not None else None)
@@ -496,13 +444,9 @@ def merge_lww_mor(
     ]
     batch_rows = batch_to_stored(
         batch, payload_cols, seq_col, op_col, snap.merge_dialect)
-    if snap.merge_dialect in ("column", "cell"):
-        # patch deltas stay RAW: a row fold would collapse each key to one
-        # row; for 'column' that loses which column was set at which seq
-        # (resolution belongs to read_current/compact), and for 'cell' the
-        # raw append is simply the cheapest correct delta (the cell fold
-        # WOULD be safe, but folding per batch buys nothing MOR wants).
-        pre_reduce = False
+    # cell deltas stay RAW: a row fold would drop the per-column seqs, and
+    # the (safe) cell fold per batch buys nothing MOR wants
+    pre_reduce = pre_reduce and snap.merge_dialect == "row"
     if pre_reduce:
         batch_rows = lww_reduce(batch_rows, keys, SEQ_COL, salt_buckets,
                                 hot_keys)
@@ -681,10 +625,20 @@ def compact(
     from the new snapshot, up to ``max_commit_retries`` rounds. ≙ the
     reference running compaction as a separate job family (MRCompactor
     racing ingest is the production shape), with Iceberg's
-    validate-and-retry instead of its job-level lock."""
+    validate-and-retry instead of its job-level lock.
+
+    A table still stored in the retired 'column' dialect is migrated to
+    'cell' instead: one full rewrite (``_migrate_column_table``)."""
     last_exc: Exception | None = None
     for _ in range(max_commit_retries + 1):
         snap = table.snapshot()
+        if snap.properties.get("merge_dialect") == "column":
+            try:
+                return _migrate_column_table(table, snap, properties,
+                                             gc_horizon_seq)
+            except ConcurrentCommitError as exc:
+                last_exc = exc
+                continue
         if int(snap.properties.get("mor_deltas", 0)) == 0:
             return snap
         # Current-spec bucket occupancy, residue-mapped across bucket-spec
@@ -801,6 +755,44 @@ def compact(
     raise last_exc  # type: ignore[misc]
 
 
+def _migrate_column_table(
+    table: LakeTable,
+    snap: Snapshot,
+    properties: dict[str, Any] | None,
+    gc_horizon_seq: int | None,
+) -> Snapshot:
+    """One-time rewrite of a table in the retired 'column' dialect (per-
+    column latest non-null, one seq per row) into 'cell'. Each stored row
+    is re-read as the event it stands for, a tombstone as a delete: a
+    non-null live column's cell seq is the row's seq, a tombstone's seq is
+    its ``__del_seq``. Both folds then decide liveness, the last-delete
+    cut and each column's winner alike, so the visible state is kept."""
+    payload = [f.name for f in snap.schema.fields if f.name not in META_COLS]
+    events = table.read(snap.version).selectExpr(
+        *[f"`{c}`" for c in payload], f"`{SEQ_COL}` AS seq",
+        f"IF(`{DELETED_COL}`, 'D', 'U') AS op")
+    final = cell_reduce_stored(
+        batch_to_stored(events, payload, "seq", "op", "cell"),
+        snap.merge_keys)
+    props = {**(properties or {}), "merge_dialect": "cell", "mor_deltas": 0}
+    if gc_horizon_seq is not None:
+        final = final.filter(
+            ~(F.col(DELETED_COL) & (F.col(SEQ_COL) <= gc_horizon_seq)))
+        props["gc_horizon_seq"] = gc_horizon_seq
+    new_files = table.write_data_files(final, seq_col=SEQ_COL,
+                                       sort_cols=list(snap.merge_keys))
+    schema = stored_schema(
+        StructType([f for f in snap.schema.fields if f.name in payload]),
+        "cell")
+    try:
+        return table.commit(keep_files=[], add_files=new_files,
+                            properties=props, schema=schema,
+                            expected_version=snap.version)
+    except ConcurrentCommitError:
+        _discard_files(table, new_files)
+        raise
+
+
 def read_current(
     table: LakeTable,
     version: int | None = None,
@@ -827,6 +819,7 @@ def read_current(
     bounds under the same compacted-only soundness gate, with the exact
     row filter always applied."""
     snap = table.snapshot(version)
+    snap.merge_dialect  # a retired dialect fails before any read
     types = {f.name: f.dataType.typeName() for f in snap.schema.fields}
     for arg, preds in (("value_eq", value_eq), ("value_range", value_range)):
         for c in preds or {}:
@@ -1043,7 +1036,7 @@ def point_lookup(
     manifest plus pyarrow row-group stats answer a single-key read in
     milliseconds, and the answer is handed to Spark as an Arrow local
     relation, so ``point_lookup(...).collect()`` launches ZERO Spark jobs.
-    Falls back to the distributed path (all three merge dialects fold
+    Falls back to the distributed path (both merge dialects fold
     locally) for schema-version drift or oversized candidate sets."""
     from gobblin_spark.lakehouse.pointread import (
         FALLBACK,
@@ -1154,8 +1147,6 @@ def _changes_local(
         read_key_rows,
     )
 
-    if snap_new.merge_dialect not in ("row", "cell"):
-        return FALLBACK  # 'column' is deprecated: its fold stays in Spark
     cand = {f.path: f for f in (*files_old, *files_new)}
     if any(f.schema_version != snap_new.schema_version
            for f in cand.values()):
@@ -1260,8 +1251,8 @@ def table_changes(
     result is handed to Spark as a local relation — ``collect()`` launches
     no Spark job and nothing is shuffled. The distributed plan below
     answers instead when a candidate file is at another schema version
-    than the new snapshot, when bucket pruning is impossible, for the
-    deprecated 'column' dialect, or past the size bounds: more than
+    than the new snapshot, when bucket pruning is impossible, or past the
+    size bounds: more than
     ``LOCAL_CHANGES_MAX_ROWS`` rows in the symmetric-difference files
     (every one is folded in Python) or ``LOCAL_CHANGES_MAX_SCAN_ROWS`` in
     the other candidate files (their key columns are scanned).
@@ -1282,6 +1273,8 @@ def table_changes(
 
     snap_old = table.snapshot(from_version)
     snap_new = table.snapshot(to_version)
+    for snap in (snap_old, snap_new):
+        snap.merge_dialect  # a retired dialect on either side fails here
     if snap_new.version < snap_old.version:
         raise ValueError(
             f"to_version v{snap_new.version} < from_version v{snap_old.version}"

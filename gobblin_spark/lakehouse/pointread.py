@@ -17,12 +17,13 @@ snapshots with the same two calls.
 This is the interactive read an upsert-table consumer expects (≙ a Hive
 consumer of the reference's published tables doing a keyed SELECT;
 StunlockPartitionedHiveDataPublisher.java registers partitions precisely
-so those reads prune). All three merge dialects resolve locally
-(plain-Python twins of the stored reduces — row LWW, 'column' patch,
-'cell' per-column write seqs). The Spark ``point_lookup`` stays the
-general path: the local read FALLS BACK (returns the ``FALLBACK``
-sentinel) for schema-version drift or oversized candidate sets rather
-than re-implementing schema conformance driver-side.
+so those reads prune). Both merge dialects resolve locally, with
+plain-Python twins of the stored reduces: row LWW, and 'cell' patches,
+whose per-column write seqs let a few rows from several files fold in
+any order. The Spark ``point_lookup`` stays the general path: the local
+read FALLS BACK (returns the ``FALLBACK`` sentinel) for schema-version
+drift or oversized candidate sets rather than re-implementing schema
+conformance driver-side.
 
 Scale shape: reads stay O(candidate files within one bucket) — at 100 TB
 with 4096 buckets and key-bounds pruning that is typically 1-3 parquet
@@ -291,7 +292,7 @@ def fold_keys(
     ``__del_seq`` — exactly the row the dialect's distributed stored
     reduce would output. ``value_cols`` are the payload columns without
     the keys."""
-    fold = _FOLDS[dialect]
+    fold = _fold_cell if dialect == "cell" else _fold_row
     by_key: dict[tuple, list[dict]] = {}
     for r in rows:
         by_key.setdefault(tuple(r[c] for c in keys), []).append(r)
@@ -313,9 +314,10 @@ def point_lookup_local(
     current snapshot). Returns the visible row as a plain dict, None when
     the key is absent/deleted, or the FALLBACK sentinel when this path
     can't answer safely (schema-version drift among candidate files, too
-    many candidates, unknown dialect)."""
+    many candidates)."""
     if snap is None:
         snap = table.snapshot()
+    dialect = snap.merge_dialect
     bucket = key_bucket(snap, key)
     keys = snap.merge_keys
     missing = [k for k in keys if k not in key]
@@ -336,13 +338,11 @@ def point_lookup_local(
         # old-layout files need the registry's rename/widen conversions —
         # that logic lives in the Spark read path; don't duplicate it here
         return FALLBACK
-    if snap.merge_dialect not in _FOLDS:
-        return FALLBACK
 
     want = tuple(key[k] for k in keys)
     rows = read_key_rows(table, cand, keys, {want})
     cols = [f.name for f in snap.schema.fields if f.name not in _META]
-    state = fold_keys(snap.merge_dialect, keys,
+    state = fold_keys(dialect, keys,
                       [c for c in cols if c not in keys],
                       (r for rs in rows.values() for r in rs)).get(want)
     if state is None or state[_DELETED]:
@@ -367,25 +367,6 @@ def _fold_row(rows: list[dict], value_cols: list[str]) -> dict:
     def rank(r):
         return (r[_SEQ], 3 if r.get(_DELETED) else 2)
     return dict(max(rows, key=rank))
-
-
-def _fold_patch(rows: list[dict], value_cols: list[str]) -> dict:
-    """Twin of patch_reduce_stored ('column' dialect): per-column latest
-    non-null among live rows after the key's last tombstone; a key whose
-    last word is the tombstone keeps it at the delete's seq."""
-    dels = [r[_SEQ] for r in rows if r.get(_DELETED)]
-    last_del = max(dels) if dels else _NEG
-    live = [r for r in rows if not r.get(_DELETED) and r[_SEQ] > last_del]
-    if not live:
-        return {**dict.fromkeys(value_cols), _SEQ: last_del,
-                _DELETED: True}
-    out = {}
-    for c in value_cols:
-        vals = [(r[_SEQ], r[c]) for r in live if r.get(c) is not None]
-        out[c] = max(vals, key=lambda t: t[0])[1] if vals else None
-    out[_SEQ] = max(r[_SEQ] for r in live)
-    out[_DELETED] = False
-    return out
 
 
 def _cells_map(r: dict) -> dict:
@@ -425,6 +406,3 @@ def _fold_cell(rows: list[dict], value_cols: list[str]) -> dict:
     out.update({_SEQ: max(live), _DELETED: False, _CELLS: cells,
                 _DELSEQ: del_max})
     return out
-
-
-_FOLDS = {"row": _fold_row, "column": _fold_patch, "cell": _fold_cell}

@@ -46,7 +46,7 @@ import json
 import os
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any, Iterable
 
 import pyspark.sql.functions as F
@@ -198,11 +198,20 @@ class Snapshot:
     @property
     def merge_dialect(self) -> str:
         """'row' (default): whole-row LWW — the max-seq event carries every
-        column. 'column': patch semantics — null payload column = unchanged,
-        each column resolves to its latest non-null value (delete still
-        clears all state). Stored in properties at create time; properties
-        carry forward on every commit, so the dialect is durable."""
-        return self.properties.get("merge_dialect", "row")
+        column. 'cell': patch semantics — a null payload column in an
+        update means unchanged; each stored column carries the seq that
+        wrote it, so folds agree in any order. Stored in properties at
+        create time and carried forward on every commit. Every read and
+        write path asks here, so any other stored value raises."""
+        d = self.properties.get("merge_dialect", "row")
+        if d in ("row", "cell"):
+            return d
+        if d == "column":
+            raise ValueError(
+                "merge_dialect 'column' is retired: run `compact` once to "
+                "migrate this table to 'cell'")
+        raise ValueError(
+            f"unknown merge_dialect {d!r} (expected 'row' or 'cell')")
 
     def to_json(self) -> dict[str, Any]:
         out = {
@@ -1328,13 +1337,34 @@ class LakeTable:
         return out
 
     def branch(self, name: str) -> "LakeTable":
-        """A handle onto an existing branch's chain (same root/fs)."""
+        """A handle onto an existing branch's chain (same root/fs). A
+        marker without a manifest is a creator that crashed between its
+        two publishes: the fork image is republished here."""
         self._require_main("branch")
         marker = os.path.join(self._branches_dir(),
                               f"{name}{self._BRANCH_MARKER_SUFFIX}")
         if not self.fs.exists(marker):
             raise KeyError(f"no branch {name!r} at {self.root}")
-        return LakeTable(self.spark, self.root, fs=self.fs, branch=name)
+        b = LakeTable(self.spark, self.root, fs=self.fs, branch=name)
+        if b.current_version() is None:
+            base = json.loads(self.fs.read(marker))["base_version"]
+            self._publish_fork_image(b, self.snapshot(int(base)))
+        return b
+
+    def _publish_fork_image(self, b: "LakeTable", base: Snapshot) -> None:
+        """The branch's first manifest: ``base`` republished into the
+        branch dir at the SAME version number (shard refs reused
+        byte-for-byte). Idempotent — publish_if_absent decides, and a
+        concurrent repairer publishing the same image is benign."""
+        self.fs.makedirs(b._manifest_dir)
+        props = {**base.properties, "branch_name": b.branch_name,
+                 "branch_base_version": base.version}
+        try:
+            b._publish_manifest(replace(
+                base, timestamp_ms=int(time.time() * 1000),
+                properties=props))
+        except ConcurrentCommitError:
+            pass
 
     def create_branch(self, name: str,
                       version: int | None = None) -> "LakeTable":
@@ -1345,7 +1375,8 @@ class LakeTable:
         byte-for-byte), so branch reads, commits, compaction and time
         travel all work unchanged through the branch handle. The creation
         marker is published with publish_if_absent: exactly one creator
-        wins, even on object stores."""
+        wins, even on object stores. A crash between the marker and the
+        fork image is repaired by the next ``branch(name)``."""
         self._require_main("create_branch")
         if (not name or "/" in name or name.startswith(".")
                 or name.endswith(".json")):
@@ -1362,27 +1393,7 @@ class LakeTable:
             raise FileExistsError(
                 f"branch {name!r} already exists at {self.root}") from exc
         b = LakeTable(self.spark, self.root, fs=self.fs, branch=name)
-        self.fs.makedirs(b._manifest_dir)
-        props = dict(base.properties)
-        props["branch_name"] = name
-        props["branch_base_version"] = base.version
-        snap = Snapshot(
-            version=base.version,
-            parent=base.parent,
-            timestamp_ms=int(time.time() * 1000),
-            schema_json=base.schema_json,
-            schema_version=base.schema_version,
-            schema_log=base.schema_log,
-            n_buckets=base.n_buckets,
-            bucket_cols=base.bucket_cols,
-            key_cols=base.key_cols,
-            partition_spec=base.partition_spec,
-            properties=props,
-            files=base.files,
-            shard_refs=base.shard_refs,
-            shard_map=base.shard_map,
-        )
-        b._publish_manifest(snap)
+        self._publish_fork_image(b, base)
         return b
 
     def drop_branch(self, name: str) -> None:
@@ -1432,22 +1443,9 @@ class LakeTable:
         props.pop("branch_base_version", None)
         props["published_from_branch"] = name
         props["branch_head_version"] = head.version
-        snap = Snapshot(
-            version=base + 1,
-            parent=base,
-            timestamp_ms=int(time.time() * 1000),
-            schema_json=head.schema_json,
-            schema_version=head.schema_version,
-            schema_log=head.schema_log,
-            n_buckets=head.n_buckets,
-            bucket_cols=head.bucket_cols,
-            key_cols=head.key_cols,
-            partition_spec=head.partition_spec,
-            properties=props,
-            files=head.files,
-            shard_refs=head.shard_refs,
-            shard_map=head.shard_map,
-        )
+        snap = replace(head, version=base + 1, parent=base,
+                       timestamp_ms=int(time.time() * 1000),
+                       properties=props)
         self._publish_manifest(snap)
         return snap
 

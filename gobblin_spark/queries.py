@@ -116,7 +116,8 @@ def q_cdc_patch_cell_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     where each chunk spans the whole seq range. Per-column write seqs +
     retained delete seqs make the fold associative, so the out-of-order
     incremental fold must equal the DuckDB full-replay oracle bit-exactly
-    (the 'column' dialect fold would corrupt under this split)."""
+    (a fold attributing each column to its row's max seq would corrupt
+    under this split)."""
     ev = load(spark, sf_dir, "events")
     from gobblin_spark.lakehouse.merge import (
         batch_to_stored,

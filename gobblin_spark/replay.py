@@ -41,13 +41,6 @@ staged keys promoted. The invariant every crash window preserves is
 harmlessly (re-merging is LWW-idempotent, policy re-checks re-filter),
 while a subset would silently lose DLQ rows. Without the marker, a crash
 mid-delete of the old partition leaves exactly such a subset.
-
-Dialect restriction: tables with ``merge_dialect='column'`` are refused,
-mirroring streaming ingest — the stored-column fold keeps only each
-column's latest value attributed to the row-max seq, so replaying an
-out-of-order patch can resurrect deleted column state or lose a
-legitimate race. Migrate to the order-independent 'cell' dialect (per-cell
-write seqs) to replay patches.
 """
 
 from __future__ import annotations
@@ -113,16 +106,7 @@ def replay_errors(
     table = LakeTable(spark, table_root, fs=fs)
     fs = store.fs
     snap = table.snapshot()
-    if snap.merge_dialect == "column":
-        raise NotImplementedError(
-            "merge_dialect='column' is not supported by DLQ replay: the "
-            "stored-column fold is only correct under seq-monotone "
-            "admission — a replayed pre-delete patch would resurrect "
-            "deleted column state (superseded tombstones are dropped by "
-            "the fold) and old-seq column writes would lose races to the "
-            "fold's row-max seq attribution. Replay the errors against a "
-            "table migrated to the order-independent 'cell' dialect, or "
-            "re-ingest them in seq order.")
+    snap.merge_dialect  # a retired dialect fails before any replay
     horizon = int(snap.properties.get("gc_horizon_seq", -1))
     target_v = int(snap.properties.get("registry_version", 1))
 

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from gobblin_spark.engine import (
     KEYS,
+    check_choice,
     default_registry,
     evolve_target_to,
     target_schema_for,
@@ -63,9 +64,10 @@ def stream_ingest(
     ``processing_interval``.
     """
     registry = registry or default_registry()
-    assert merge_dialect in ("row", "cell")
+    check_choice("merge_dialect", merge_dialect, ("row", "cell"))
     if LakeTable.exists(table_root):
         table = LakeTable(spark, table_root)
+        table.snapshot().merge_dialect  # a retired dialect fails here
     else:
         table = LakeTable.create(
             spark, table_root,
@@ -75,21 +77,6 @@ def stream_ingest(
                         "merge_dialect": merge_dialect},
             stats_cols=stats_cols,
         )
-    if table.snapshot().merge_dialect == "column":
-        # The per-epoch COW fold keeps one seq per ROW; patch correctness
-        # needs per-COLUMN seqs unless batches are seq-monotone. The batch
-        # engine guarantees that through planner admission (seq > committed
-        # watermark); a streaming epoch is file-granular and cannot, so a
-        # late cross-epoch patch could lose a per-column race to a folded
-        # row. Refuse rather than silently resurrect stale columns. For
-        # patch semantics under a stream, use merge_dialect='cell': its
-        # per-column write seqs make the fold order-independent.
-        raise NotImplementedError(
-            "merge_dialect='column' is not supported by streaming ingest: "
-            "epoch boundaries don't guarantee the seq-monotone admission "
-            "patch folding relies on — use batch ingest "
-            "(run_job.py ingest --merge-dialect column) or the order-"
-            "independent 'cell' dialect for streaming patch upserts")
     store = StateStore(state_root)
     static_schema = spark.read.parquet(events_path).schema
 

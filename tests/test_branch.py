@@ -417,3 +417,37 @@ def test_branch_auto_create_race_attaches_the_loser(spark, tmp_table_dir,
     assert main.branches() == {"audit": main.current_version()}
     assert eng.table.branch_name == "audit"
     assert eng.table.current_version() == main.current_version()
+
+
+def test_branch_marker_without_fork_image_is_repaired(spark, tmp_table_dir,
+                                                     monkeypatch):
+    """A creator that crashes between publishing the branch marker and the
+    fork image leaves a listed branch with no manifest. Opening it
+    republishes the fork image: an engine attaching to the branch ingests,
+    and main.branch(name) reads main's fork-version state."""
+    d = tmp_table_dir
+    ev = _events(spark, d, n=600)
+    CdcEngine(spark, ev, d + "/t", d + "/s",
+              max_records_per_batch=100000, n_buckets=4).run_until_caught_up()
+    main = LakeTable(spark, d + "/t")
+    base_v, base_fp = main.current_version(), _fp(main)
+
+    def crash(self, snap):
+        raise OSError("crashed before the fork image")
+
+    monkeypatch.setattr(LakeTable, "_publish_manifest", crash)
+    with pytest.raises(OSError):
+        main.create_branch("audit")
+    monkeypatch.undo()
+    assert main.branches() == {"audit": base_v}
+    with pytest.raises(FileExistsError):
+        main.create_branch("audit")
+
+    eng = CdcEngine(spark, ev, d + "/t", d + "/s_b",
+                    max_records_per_batch=100000, n_buckets=4,
+                    branch="audit")
+    assert eng.table.branch_name == "audit"
+    assert eng.table.current_version() == base_v
+    b = main.branch("audit")
+    assert b.snapshot().properties["branch_base_version"] == base_v
+    assert _fp(b) == base_fp

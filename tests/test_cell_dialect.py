@@ -1,8 +1,8 @@
 """The 'cell' merge dialect: patch semantics with per-column write seqs
 (Cassandra-style cell timestamps) + retained max delete seq, making the
 stored fold associative/commutative — correct under ANY fold order, which is
-what streaming epochs and non-monotone replays need and what the 'column'
-dialect (fold attributes every column to the row max seq) cannot give.
+what streaming epochs and non-monotone replays need and what a fold that
+attributes every column to the row max seq cannot give.
 
 Covers the two corruption modes the dialect closes, engine e2e convergence
 (COW + MOR + compaction + restart), explicitly out-of-order COW batches,
@@ -22,7 +22,6 @@ from gobblin_spark.lakehouse.merge import (
     cell_reduce_stored,
     compact,
     merge_lww_mor,
-    patch_reduce_stored,
     point_lookup,
     read_current,
     table_changes,
@@ -48,13 +47,12 @@ def stored(spark, rows, dialect="cell"):
 
 
 def test_cell_fold_closes_both_column_dialect_corruptions(spark):
-    """(1) stale-cell win: after folding a@3 + b@5 into one row, a late a@4
-    must still win a's race (the 'column' fold attributes a to seq 5 and
-    would keep the stale value). (2) tombstone loss: after a fold where
-    b@7 supersedes D@4, a late pre-delete c@3 must NOT resurface (the
-    'column' fold drops the delete entirely). Assert cell gets both right
-    AND that the column fold really does corrupt — pinning why the dialect
-    exists."""
+    """The two corruptions a fold with one seq per row suffers when folds
+    happen out of seq order: (1) stale-cell win: after folding a@3 + b@5
+    into one row, a late a@4 must still win a's race (a row-seq fold
+    attributes a to seq 5 and keeps the stale value). (2) tombstone loss:
+    after a fold where b@7 supersedes D@4, a late pre-delete c@3 must NOT
+    resurface (a row-seq fold drops the delete entirely)."""
     early = [ev("k1", 3, a="stale"), ev("k1", 5, b="B5"),
              ev("k2", 2, c="pre"), ev("k2", 4, op="D"), ev("k2", 7, b="B7")]
     late = [ev("k1", 4, a="fresh"), ev("k2", 3, c="PRE2")]
@@ -64,15 +62,6 @@ def test_cell_fold_closes_both_column_dialect_corruptions(spark):
            for r in f.collect()}
     assert got["k1"] == ("fresh", "B5", None, None)
     assert got["k2"] == (None, "B7", None, 4)  # c dead, delete seq retained
-
-    # the 'column' dialect fold, fed the same out-of-order split, corrupts
-    s_early = stored(spark, early, "column").drop("__cells", "__del_seq")
-    s_late = stored(spark, late, "column").drop("__cells", "__del_seq")
-    bad = patch_reduce_stored(
-        patch_reduce_stored(s_early, ["k"]).unionByName(s_late), ["k"])
-    bad_got = {r["k"]: (r["a"], r["c"]) for r in bad.collect()}
-    assert bad_got["k1"][0] == "stale"   # late a@4 lost to the folded seq 5
-    assert bad_got["k2"][1] == "PRE2"    # pre-delete state resurrected
 
 
 def test_cell_fold_associative_any_split(spark):
@@ -96,9 +85,9 @@ def test_cell_fold_associative_any_split(spark):
 
 @pytest.mark.parametrize("merge_mode", ["cow", "mor"])
 def test_cell_dialect_engine_convergence(spark, tmp_table_dir, merge_mode):
-    """Full engine loop on the adversarial patch stream: cell and column
-    dialects agree with the pure-Python oracle; restart rediscovers the
-    dialect from the table property."""
+    """Full engine loop on the adversarial patch stream agrees with the
+    pure-Python oracle; restart rediscovers the dialect from the table
+    property."""
     rows = patch_stream()
     events = spark.createDataFrame(rows, EVENT_SCHEMA)
     want = patch_oracle(rows)
@@ -135,9 +124,9 @@ def test_cell_dialect_engine_convergence(spark, tmp_table_dir, merge_mode):
 
 
 def test_cell_cow_out_of_order_batches(spark, tmp_table_dir):
-    """Direct COW merges applied in REVERSED seq order — exactly the replay
-    the 'column' dialect forbids (the engine enforces monotone admission for
-    it) — still converge to the full-replay oracle."""
+    """Direct COW merges applied in REVERSED seq order — a replay the
+    engine's monotone batch admission never produces — still converge to
+    the full-replay oracle."""
     rows = patch_stream()
     want = patch_oracle(rows)
     from gobblin_spark.engine import default_registry, target_schema_for
@@ -201,8 +190,8 @@ def test_cell_mor_compaction_mid_disorder(spark, tmp_table_dir):
 def test_streaming_cell_dialect_out_of_order_epochs(spark, tmp_table_dir):
     """Streaming ingest with merge_dialect='cell': epoch 1 drains the LATE
     half of the stream, epoch 2 (separate drain, same checkpoint) the EARLY
-    half — the cross-epoch disorder that makes 'column' refuse. Final state
-    equals the full-replay oracle."""
+    half — cross-epoch disorder. Final state equals the full-replay
+    oracle."""
     from gobblin_spark.streaming.ingest import stream_ingest
 
     rows = patch_stream()

@@ -321,9 +321,8 @@ def test_table_changes_small_diff_launches_no_job(spark, tmp_table_dir):
 
 
 def test_table_changes_fallbacks_take_distributed_path(spark, tmp_table_dir):
-    """Schema drift among the candidate files, a diff above the size bound
-    and the deprecated 'column' dialect are answered by the distributed
-    plan, with the same rows."""
+    """Schema drift among the candidate files and a diff above the size
+    bound are answered by the distributed plan, with the same rows."""
     seen = []
     t = new_table(spark, tmp_table_dir + "/t")
     orig = t.read_file_set
@@ -372,21 +371,6 @@ def test_table_changes_fallbacks_take_distributed_path(spark, tmp_table_dir):
     rows = change_rows(t, v2)
     assert seen
     assert rows == [("r", "b", "c2", "py", "b2", 7, 5, "update")]
-
-    # 'column' dialect (deprecated): its fold stays distributed
-    col = LakeTable.create(
-        spark, tmp_table_dir + "/col", TARGET_SCHEMA, KEYS, n_buckets=4,
-        properties={"merge_dialect": "column"})
-    merge_lww(col, spark.createDataFrame(
-        [(1, "I", "r", "a", "c1", "py", "a1")], COLS), KEYS)
-    c1 = col.current_version()
-    merge_lww(col, spark.createDataFrame(
-        [(2, "U", "r", "a", None, None, "a2")], EVENTS), KEYS)
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup())
-    rows = change_rows(col, c1)
-    assert len(tracker.getJobIdsForGroup()) > before
-    assert rows == [("r", "a", "c1", "py", "a2", 2, "update")]
 
 
 def test_table_changes_bad_range(spark, tmp_table_dir):

@@ -340,3 +340,27 @@ def test_auto_merge_mode_converges_and_picks_both_regimes(
     assert fa["fingerprint"] == table_fingerprint(cow.table)["fingerprint"]
     assert fa["fingerprint"] == table_fingerprint(mor.table)["fingerprint"]
     assert fa["rows"] > 0
+
+
+@pytest.mark.parametrize("name, value", [
+    ("merge_mode", "cwo"), ("merge_dialect", "column"),
+    ("merge_dialect", "cel"), ("delta_distribution", "hash")])
+def test_bad_engine_arguments_are_named_errors(spark, tmp_table_dir,
+                                               name, value):
+    """A bad enum argument fails up front with a ValueError naming the
+    argument — an assert would vanish under ``python -O`` — and before any
+    table is created in a dialect no reader accepts."""
+    import re
+
+    from gobblin_spark.lakehouse import LakeTable
+    from gobblin_spark.streaming.ingest import stream_ingest
+
+    d = tmp_table_dir
+    named = re.escape(f"{name}={value!r}")
+    with pytest.raises(ValueError, match=named):
+        CdcEngine(spark, lambda: None, d + "/t", d + "/s", **{name: value})
+    if name == "merge_dialect":
+        with pytest.raises(ValueError, match=named):
+            stream_ingest(spark, d + "/ev", d + "/t", d + "/s", d + "/ckpt",
+                          merge_dialect=value)
+    assert not LakeTable.exists(d + "/t")

@@ -1,8 +1,10 @@
-"""Engine e2e for the 'column' (patch) merge dialect: Debezium/Mongo-style
-patch streams — null payload column = unchanged — through the FULL engine
-loop (planning, batching, MOR deltas + compaction or COW, restart, replay),
-converging to a pure-Python patch oracle. The dialect is a table property,
-so a restarted engine rediscovers it from the manifest."""
+"""Patch streams (Debezium/Mongo-style: null payload column = unchanged)
+through the engine in the 'cell' dialect: engine convergence in small
+batches (COW + MOR, restart, replay), compaction with tombstone GC,
+patches across schema evolution, and the one-time migration of a table
+stored in the retired 'column' dialect by ``compact``. ``patch_stream`` /
+``patch_oracle`` / ``EVENT_SCHEMA`` are the shared pure-Python reference
+the other patch tests compare against."""
 
 from __future__ import annotations
 
@@ -13,9 +15,13 @@ from pyspark.sql.types import (
     IntegerType, LongType, StringType, StructField, StructType,
 )
 
-from gobblin_spark.engine import CdcEngine
+from gobblin_spark.engine import (
+    KEYS, CdcEngine, default_registry, target_schema_for,
+)
 from gobblin_spark.lakehouse import LakeTable
-from gobblin_spark.lakehouse.merge import point_lookup, read_current
+from gobblin_spark.lakehouse.merge import (
+    compact, merge_lww_mor, point_lookup, read_current, table_changes,
+)
 
 EVENT_SCHEMA = StructType([
     StructField("seq", LongType()),
@@ -85,59 +91,46 @@ def patch_oracle(rows):
 
 @pytest.mark.parametrize("merge_mode", ["cow", "mor"])
 def test_patch_dialect_engine_convergence(spark, tmp_table_dir, merge_mode):
+    """The patch stream through the full engine loop in small batches (a
+    different fold split from ``test_cell_dialect_engine_convergence``):
+    a mid-run read resolves across unfolded deltas, a restart rediscovers
+    the dialect from the table property, the result equals the oracle, a
+    replay from scratch is a no-op and a deleted key stays gone."""
     rows = patch_stream()
     events = spark.createDataFrame(rows, EVENT_SCHEMA)
     want = patch_oracle(rows)
+    root = os.path.join(tmp_table_dir, merge_mode)
 
-    def make_engine():
+    def make_engine(**dialect):
         return CdcEngine(
             spark, events,
-            table_root=os.path.join(tmp_table_dir, merge_mode, "table"),
-            state_root=os.path.join(tmp_table_dir, merge_mode, "state"),
-            max_records_per_batch=25,
-            n_buckets=4,
-            merge_mode=merge_mode,
-            merge_dialect="column",
-            compact_every=2,
+            table_root=os.path.join(root, "table"),
+            state_root=os.path.join(root, "state"),
+            max_records_per_batch=10, n_buckets=4,
+            merge_mode=merge_mode, compact_every=3, **dialect,
         )
 
-    eng = make_engine()
-    first = eng.run_batch()
-    assert first is not None
-
+    eng = make_engine(merge_dialect="cell")
+    assert eng.run_batch() is not None
     if merge_mode == "mor":
         # read across UNFOLDED deltas mid-run: patch resolution on read
-        mid = read_current(eng.table)
-        assert mid.count() > 0
-
-    # restart: dialect must be rediscovered from the table property, and
-    # the default 'row' argument must NOT override it
-    eng = CdcEngine(
-        spark, events,
-        table_root=os.path.join(tmp_table_dir, merge_mode, "table"),
-        state_root=os.path.join(tmp_table_dir, merge_mode, "state"),
-        max_records_per_batch=25,
-        n_buckets=4,
-        merge_mode=merge_mode,
-        compact_every=2,
-    )
-    assert eng.table.snapshot().merge_dialect == "column"
+        assert read_current(eng.table).count() > 0
+    # restart with the default dialect argument: the table property wins
+    eng = make_engine()
+    assert eng.table.snapshot().merge_dialect == "cell"
     eng.run_until_caught_up()
 
     got = {(r["repo"], r["path"]): (r["commit"], r["lang"], r["content"])
            for r in read_current(eng.table).collect()}
     assert got == want
-
     # replay from scratch over the same state is a no-op
-    res = make_engine().run_until_caught_up()
-    assert res == []
+    assert make_engine().run_until_caught_up() == []
 
     # point lookup honors the dialect (rebuilt-after-delete key)
     row = point_lookup(eng.table,
                        {"repo": "repo_0", "path": "src/f0.txt"}).collect()
     assert len(row) == 1
     assert (row[0]["commit"], row[0]["lang"]) == ("c0_3", "rs")
-
     # deleted, never-rebuilt key stays gone
     assert point_lookup(eng.table,
                         {"repo": "repo_2", "path": "src/f5.txt"}).count() == 0
@@ -157,7 +150,7 @@ def test_patch_dialect_compaction_folds_and_gc(spark, tmp_table_dir):
         max_records_per_batch=30,
         n_buckets=4,
         merge_mode="mor",
-        merge_dialect="column",
+        merge_dialect="cell",
         compact_every=None,
         compact_delta_ratio=None,
     )
@@ -173,29 +166,6 @@ def test_patch_dialect_compaction_folds_and_gc(spark, tmp_table_dir):
     got = {(r["repo"], r["path"]): (r["commit"], r["lang"], r["content"])
            for r in read_current(t).collect()}
     assert got == patch_oracle(rows)
-
-
-def test_streaming_refuses_column_dialect(spark, tmp_table_dir):
-    """Streaming ingest must refuse a patch-dialect table: epoch boundaries
-    can't guarantee the seq-monotone admission the per-epoch fold needs."""
-    from pyspark.sql.types import StructType
-
-    from gobblin_spark.streaming.ingest import stream_ingest
-
-    rows = patch_stream()
-    ev_dir = os.path.join(tmp_table_dir, "ev")
-    spark.createDataFrame(rows, EVENT_SCHEMA).write.parquet(ev_dir)
-    eng = CdcEngine(
-        spark, spark.read.parquet(ev_dir),
-        table_root=os.path.join(tmp_table_dir, "table"),
-        state_root=os.path.join(tmp_table_dir, "state"),
-        merge_dialect="column", n_buckets=4,
-    )
-    eng.run_batch()
-    with pytest.raises(NotImplementedError, match="column"):
-        stream_ingest(spark, ev_dir, os.path.join(tmp_table_dir, "table"),
-                      os.path.join(tmp_table_dir, "state"),
-                      os.path.join(tmp_table_dir, "ckpt"))
 
 
 def test_patch_dialect_across_schema_evolution(spark, tmp_table_dir):
@@ -226,7 +196,7 @@ def test_patch_dialect_across_schema_evolution(spark, tmp_table_dir):
         max_records_per_batch=5,  # evolution happens mid-run
         n_buckets=4,
         merge_mode="mor",
-        merge_dialect="column",
+        merge_dialect="cell",
         compact_every=2,
     )
     eng.run_until_caught_up()
@@ -244,30 +214,105 @@ def test_patch_dialect_across_schema_evolution(spark, tmp_table_dir):
     assert len(got) == 6
 
 
-def test_column_dialect_is_deprecated_with_warning(spark, tmp_table_dir):
-    """Disposition of the 'column' dialect: DEPRECATED in favor of 'cell'
-    (same patch semantics, order-independent). Batch ingest still honors
-    it for existing tables but must say so loudly; 'cell' and 'row' stay
-    warning-free."""
-    import warnings
+def column_fold(rows):
+    """The stored rows the retired 'column' dialect's fold left for event
+    tuples ``rows``: per key, each column's latest non-null value among
+    the live events after the key's last delete, all under one ``__seq``
+    (the max live seq); a key whose last word is the delete keeps one
+    tombstone at the delete's seq."""
+    live = patch_oracle(rows)
+    out = []
+    for key in {(r[3], r[4]) for r in rows}:
+        evs = [r for r in rows if (r[3], r[4]) == key]
+        last_del = max((r[0] for r in evs if r[2] == "D"), default=-1)
+        if key in live:
+            seq = max(r[0] for r in evs if r[2] != "D" and r[0] > last_del)
+            out.append((*key, *live[key], seq, False))
+        else:
+            out.append((*key, None, None, None, last_del, True))
+    return out
+
+
+def column_table(spark, root, folded, raw_chunks):
+    """A table in the retired 'column' dialect as the old engine left it:
+    the events ``folded`` pre-folded into v1 files, the schema then evolved
+    to v2 (adds size_bytes), and each chunk of ``raw_chunks`` appended raw
+    — tombstones for deletes — as one MOR delta commit."""
+    reg = default_registry()
+    t = LakeTable.create(
+        spark, root, target_schema_for(reg, 1), KEYS, n_buckets=4,
+        properties={"merge_dialect": "column", "registry_version": 1},
+        key_cols=KEYS)
+
+    def append(rows, version, props=None):
+        df = spark.createDataFrame(rows, target_schema_for(reg, version))
+        files = t.write_data_files(df, seq_col="__seq",
+                                   reduced=props is None)
+        t.commit(keep_files=t.snapshot().files, add_files=files,
+                 properties=props)
+
+    if folded:
+        append(column_fold(folded), 1)
+    t.commit(keep_files=t.snapshot().files, add_files=[],
+             schema=target_schema_for(reg, 2), schema_version=2,
+             schema_log_append=[{"v": 2, "op": "add", "col": "size_bytes",
+                                 "type": "int"}],
+             properties={"registry_version": 2})
+    for chunk in filter(None, raw_chunks):
+        append([(r[3], r[4], r[5], r[6], r[7], r[10], r[0], r[2] == "D")
+                for r in chunk], 2, {"mor_deltas": 1})
+    return t
+
+
+def merge_events(spark, table, rows):
+    """MOR-append event tuples to a v2 table."""
+    df = spark.createDataFrame(rows, EVENT_SCHEMA).selectExpr(
+        *KEYS, "commit", "lang", "content",
+        "CAST(size_bytes AS INT) AS size_bytes", "seq", "op")
+    merge_lww_mor(table, df, KEYS)
+
+
+def visible(table):
+    return {(r["repo"], r["path"]): (r["commit"], r["lang"], r["content"])
+            for r in read_current(table).collect()}
+
+
+def test_column_table_migrates_at_compact(spark, tmp_table_dir):
+    """A table stored in the retired 'column' dialect — pre-folded rows in
+    a v1 file (key f5 a bare tombstone), raw MOR deltas at v2 (f0 and f10
+    rebuilt after their delete, a tombstone-only ghost key) — is refused
+    by every reader and writer with an error naming ``compact``. One
+    compact migrates it to 'cell' with the oracle's visible state, and a
+    late pre-delete patch the old fold would have resurrected (it dropped
+    f10's superseded delete) stays dead."""
+    from gobblin_spark.replay import replay_errors
+    from gobblin_spark.streaming.ingest import stream_ingest
 
     d = tmp_table_dir
-    with warnings.catch_warnings(record=True) as rec:
-        warnings.simplefilter("always")
-        CdcEngine(spark,
-                  spark.createDataFrame(patch_stream(), EVENT_SCHEMA),
-                  d + "/t", d + "/s",
-                  merge_dialect="column", n_buckets=4)
-    dep = [w for w in rec if issubclass(w.category, DeprecationWarning)
-           and "column" in str(w.message)]
-    assert dep, "column dialect must emit a DeprecationWarning"
-    assert "cell" in str(dep[0].message)  # points at the replacement
+    rows = patch_stream() + [
+        (59, 0, "D", "repo_9", "src/ghost.txt", None, None, None, 1, 0, None)]
+    t = column_table(spark, d + "/t", [r for r in rows if r[0] < 52],
+                     [[r for r in rows if 52 <= r[0] < 55],
+                      [r for r in rows if r[0] >= 55]])
+    events = spark.createDataFrame(rows, EVENT_SCHEMA)
+    key = {"repo": "repo_1", "path": "src/f10.txt"}
+    for call in (
+            lambda: CdcEngine(spark, events, d + "/t", d + "/s"),
+            lambda: stream_ingest(spark, d + "/ev", d + "/t", d + "/s",
+                                  d + "/ckpt"),
+            lambda: replay_errors(spark, d + "/err", d + "/t", d + "/s"),
+            lambda: point_lookup(t, key),
+            lambda: read_current(t),
+            lambda: table_changes(t, 1)):
+        with pytest.raises(ValueError, match="'column'.*compact"):
+            call()
 
-    with warnings.catch_warnings(record=True) as rec:
-        warnings.simplefilter("always")
-        CdcEngine(spark,
-                  spark.createDataFrame(patch_stream(), EVENT_SCHEMA),
-                  d + "/t2", d + "/s2",
-                  merge_dialect="cell", n_buckets=4)
-    assert not [w for w in rec
-                if issubclass(w.category, DeprecationWarning)]
+    compact(t)
+    assert t.snapshot().merge_dialect == "cell"
+    assert visible(t) == patch_oracle(rows)
+
+    late = [(51, 2, "U", "repo_1", "src/f10.txt", None, None, "late", 1, 0, 4),
+            (60, 3, "U", "repo_0", "src/f3.txt", None, None, "new", 1, 0, 3)]
+    merge_events(spark, t, late)
+    assert visible(t) == patch_oracle(rows + late)
+    assert visible(t)[("repo_1", "src/f10.txt")] == ("c10_3", "rs", None)

@@ -3,7 +3,7 @@ read. Two contracts: (1) the Python xxhash64 port is BIT-EXACT against
 Spark's expression (the bucket routing depends on it); (2) the local read
 returns exactly what the distributed point_lookup returns — live, deleted,
 missing keys, across COW and unfolded-MOR tables — and falls back rather
-than guessing for dialects/layouts it doesn't handle."""
+than guessing for layouts it doesn't handle."""
 
 import random
 import string
@@ -130,9 +130,9 @@ def test_local_lookup_parity_cow_and_mor(spark, tmp_table_dir):
 
 
 def test_local_lookup_parity_patch_and_cell_dialects(spark, tmp_table_dir):
-    """The 'column' and 'cell' dialects fold locally too: partial updates
-    (null = unchanged), per-column write seqs, pre-delete cell exclusion —
-    each probe must equal the distributed path exactly."""
+    """Both dialects fold locally: whole-row LWW, and 'cell' partial
+    updates (null = unchanged), per-column write seqs, pre-delete cell
+    exclusion — each probe must equal the distributed path exactly."""
     rows = [
         # key a: partial updates — b set at seq 2, a updated at seq 3
         (1, "I", "r", "a", "a1", "b1"),
@@ -147,7 +147,7 @@ def test_local_lookup_parity_patch_and_cell_dialects(spark, tmp_table_dir):
         (2, "D", "r", "c", None, None),
         (6, "U", "r", "c", "c6", None),
     ]
-    for dialect in ("column", "cell"):
+    for dialect in ("row", "cell"):
         batch = spark.createDataFrame(
             rows, ["seq", "op", "repo", "path", "ca", "cb"])
         from pyspark.sql.types import (
@@ -187,14 +187,15 @@ def test_local_lookup_parity_patch_and_cell_dialects(spark, tmp_table_dir):
         got = {r["path"]: (r["ca"], r["cb"])
                for r in point_lookup(
                    t, {"repo": "r", "path": "a"}).collect()}
-        assert got == {"a": ("a3", "b2")}
+        assert got == {"a": ("a3", "b2" if dialect == "cell" else None)}
         assert point_lookup(t, {"repo": "r", "path": "b"}).count() == 0
 
 
 def test_local_lookup_fallbacks(spark, tmp_table_dir):
-    """Unknown dialects and schema-version drift answer FALLBACK (the
-    Spark path owns those folds); the public API still answers
-    correctly."""
+    """Schema-version drift answers FALLBACK (the Spark path owns schema
+    conformance) and the public API still answers correctly; an unknown
+    dialect is a named error, not a guess."""
+    import pytest
     import dataclasses
 
     ev = make_events(spark, 600)
@@ -207,7 +208,8 @@ def test_local_lookup_fallbacks(spark, tmp_table_dir):
     odd = dataclasses.replace(
         snap, properties={**snap.properties, "merge_dialect": "exotic"})
     t.snapshot = lambda v=None: odd
-    assert point_lookup_local(t, key) is FALLBACK
+    with pytest.raises(ValueError, match="exotic"):
+        point_lookup(t, key)
     t2 = LakeTable(spark, tmp_table_dir + "/t")
     drift = dataclasses.replace(
         t2.snapshot(), schema_version=t2.snapshot().schema_version + 1)

@@ -372,3 +372,50 @@ def test_table_changes_local_equals_distributed(
                                            emit_preimages=pre)
             assert local == dist, (v_from, v_to, pre)
             assert jobs == 0, (v_from, v_to, pre)
+
+
+PATCH_EVENT = st.tuples(
+    st.integers(0, 3),                                     # key
+    st.sampled_from("UUUD"),                               # op
+    st.one_of(st.none(), st.sampled_from(["c1", "c2"])),   # commit
+    st.one_of(st.none(), st.sampled_from(["py", "rs"])),   # lang
+    st.one_of(st.none(), st.sampled_from(["x", "y"])),     # content
+)
+
+
+@settings(max_examples=4, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                 HealthCheck.too_slow])
+@given(events=st.lists(PATCH_EVENT, min_size=1, max_size=24),
+       split=st.integers(0, 24), seed=st.integers(0, 2**16))
+def test_column_migration_equals_patch_oracle(spark, tmp_path_factory,
+                                              events, split, seed):
+    """PROPERTY: for any patch stream, folded up to any split point as the
+    retired 'column' dialect left it (seq < split) with the rest stored as
+    raw MOR deltas or held back as late events, compact's one-time
+    migration to 'cell' keeps the visible state (the patch oracle of what
+    is stored), and the late events — merged after it, out of order
+    relative to the deltas — reach the oracle of the whole stream."""
+    from gobblin_spark.lakehouse.merge import compact
+
+    from tests.test_patch_dialect import (
+        column_table, merge_events, patch_oracle, visible,
+    )
+
+    rows = [(seq, 0, op, f"repo_{k % 2}", f"src/f{k}.txt",
+             *((None,) * 3 if op == "D" else cols), 1, 0, None)
+            for seq, (k, op, *cols) in enumerate(events)]
+    rng = random.Random(seed)
+    rest = [r for r in rows if r[0] >= split]
+    late = [r for r in rest if rng.random() < 0.4]
+    raw = [r for r in rest if r not in late]
+    cut = rng.randrange(len(raw) + 1)
+    d = str(tmp_path_factory.mktemp("migrate"))
+    t = column_table(spark, d + "/t", [r for r in rows if r[0] < split],
+                     [raw[:cut], raw[cut:]])
+    compact(t)
+    assert t.snapshot().merge_dialect == "cell"
+    assert visible(t) == patch_oracle([r for r in rows if r not in late])
+    if late:
+        merge_events(spark, t, late)
+        assert visible(t) == patch_oracle(rows)

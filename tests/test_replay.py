@@ -163,27 +163,6 @@ def test_replay_cli(spark, tmp_table_dir, capsys):
                           _data(ev))
 
 
-def test_replay_refuses_column_dialect(spark, tmp_table_dir):
-    """merge_dialect='column' is only correct under seq-monotone admission
-    (the stored fold drops superseded tombstones and attributes row-max
-    seq to every surviving column) — replaying an old-seq patch against it
-    can resurrect deleted state. Replay must refuse, mirroring streaming
-    ingest, BEFORE touching any quarantine partition."""
-    import pytest
-
-    from gobblin_spark.engine import default_registry, target_schema_for
-
-    d = tmp_table_dir
-    LakeTable.create(
-        spark, d + "/t",
-        target_schema_for(default_registry(), 1, "column"),
-        ["repo", "path"], n_buckets=4,
-        properties={"merge_dialect": "column"}, key_cols=["repo", "path"])
-    os.makedirs(d + "/err")
-    with pytest.raises(NotImplementedError, match="cell"):
-        replay_errors(spark, d + "/err", d + "/t", d + "/s")
-
-
 def test_replay_objectstore_swap_crash_recovery(spark, tmp_table_dir,
                                                 monkeypatch):
     """DLQ replay runs entirely through CommitFs (here ObjectStoreFs — no
