@@ -597,8 +597,25 @@ def compact(
     max_rows_per_file: int | None = None,
 ) -> Snapshot:
     """Fold MOR delta files into one row per key (LWW by __seq) — the
-    reference's standalone compaction job (MRCompactor), as one bucketed
-    Spark job: shuffle by key is bucket-aligned with the storage layout.
+    reference's standalone compaction job (MRCompactor). The fold runs on
+    one of two paths, chosen per pass from manifest metadata alone:
+
+    - **driver** (``compact_path: "local"``): when the consumed files hold
+      at most ``LOCAL_COMPACT_MAX_ROWS`` rows, live on a local data plane,
+      all sit at the snapshot's schema version and bucket spec, the table
+      is unpartitioned and no ``max_rows_per_file`` split applies, they
+      are read with pyarrow, folded by the Arrow kernel the point and
+      changelog reads share (``pointread.fold_keys``) and written as one
+      key-sorted file per bucket by ``LakeTable.write_local_files``: no
+      Spark job at all;
+    - **Spark** (``compact_path: "distributed"``, with ``compact_reason``
+      naming the first condition that failed: ``remote``,
+      ``partitioned``, ``schema_drift``, ``spec``, ``split`` or
+      ``size``): one bucketed job whose shuffle by key is aligned with
+      the storage layout.
+
+    Both record their path in the commit's properties; the commit, the
+    retry and everything below are the same for both.
 
     ``gc_horizon_seq`` folds tombstone GC into the same rewrite: tombstones
     at or below the horizon (no event with smaller seq can still arrive —
@@ -628,7 +645,8 @@ def compact(
     validate-and-retry instead of its job-level lock.
 
     A table still stored in the retired 'column' dialect is migrated to
-    'cell' instead: one full rewrite (``_migrate_column_table``)."""
+    'cell' instead: one full rewrite on Spark (``_migrate_column_table``,
+    ``compact_reason: "migration"``)."""
     last_exc: Exception | None = None
     for _ in range(max_commit_retries + 1):
         snap = table.snapshot()
@@ -685,19 +703,10 @@ def compact(
             except ConcurrentCommitError as exc:
                 last_exc = exc
                 continue  # metadata-only: replan from the winner, cheap
+        consumed = [f for f in snap.files
+                    if any(b in target_buckets for b in mapped[f.path])]
         keep = [f for f in snap.files
                 if not any(b in target_buckets for b in mapped[f.path])]
-        # pinned read: fold exactly the snapshot the commit will validate
-        # against, never files a concurrent commit lands mid-job
-        df = table.read(snap.version, buckets=target_buckets)
-        final = stored_reduce(snap, df, snap.merge_keys, salt_buckets,
-                              hot_keys)
-        if gc_horizon_seq is not None:
-            final = final.filter(
-                ~(F.col(DELETED_COL) & (F.col(SEQ_COL) <= gc_horizon_seq)))
-        # compaction is the write that pays for read layout: key-sorted
-        # files give narrow parquet row-group stats, so point lookups skip
-        # row groups in-file on top of manifest bucket + key_bounds skipping
         splits = None
         if max_rows_per_file:
             # giant-bucket guard (one tenant holding most of a table):
@@ -706,23 +715,42 @@ def compact(
             # task and the output file size without touching cold buckets.
             # Row counts from manifest metadata (upper bound: pre-fold).
             rows_per_bucket: dict[int, float] = {}
-            for f in snap.files:
+            for f in consumed:
                 m = mapped[f.path]
-                if any(b in target_buckets for b in m):
-                    share = f.rows / len(m)
-                    for b in m:
-                        if b in target_buckets:
-                            rows_per_bucket[b] = (
-                                rows_per_bucket.get(b, 0.0) + share)
+                share = f.rows / len(m)
+                for b in m:
+                    if b in target_buckets:
+                        rows_per_bucket[b] = (
+                            rows_per_bucket.get(b, 0.0) + share)
             splits = {
                 b: int(-(-r // max_rows_per_file))
                 for b, r in rows_per_bucket.items()
                 if r > max_rows_per_file
             } or None
-        new_files = table.write_data_files(final, seq_col=SEQ_COL,
-                                           sort_cols=list(snap.merge_keys),
-                                           splits_by_bucket=splits)
+        reason = _distributed_reason(table, snap, consumed, splits)
+        if reason is None:
+            new_files = _compact_local(table, snap, consumed, gc_horizon_seq)
+        else:
+            # pinned read: fold exactly the snapshot the commit will
+            # validate against, never files a concurrent commit lands
+            # mid-job
+            df = table.read(snap.version, buckets=target_buckets)
+            final = stored_reduce(snap, df, snap.merge_keys, salt_buckets,
+                                  hot_keys)
+            if gc_horizon_seq is not None:
+                final = final.filter(
+                    ~(F.col(DELETED_COL)
+                      & (F.col(SEQ_COL) <= gc_horizon_seq)))
+            # compaction is the write that pays for read layout:
+            # key-sorted files give narrow parquet row-group stats, so
+            # point lookups skip row groups in-file on top of manifest
+            # bucket + key_bounds skipping
+            new_files = table.write_data_files(
+                final, seq_col=SEQ_COL, sort_cols=list(snap.merge_keys),
+                splits_by_bucket=splits)
         props = dict(properties or {})
+        props["compact_path"] = "local" if reason is None else "distributed"
+        props["compact_reason"] = reason
         if gc_horizon_seq is not None:
             props["gc_horizon_seq"] = gc_horizon_seq
         # deltas remain only if a bucket subset was explicitly requested
@@ -739,8 +767,6 @@ def compact(
             )
         except ConcurrentCommitError as exc:
             last_exc = exc
-            consumed = [f for f in snap.files
-                        if any(b in target_buckets for b in mapped[f.path])]
             rebased, landed = _rebase_rewrite(
                 table, snap, consumed, new_files, props)
             _discard_files(
@@ -753,6 +779,75 @@ def compact(
             # already landed metadata-only stays landed
             continue
     raise last_exc  # type: ignore[misc]
+
+
+# Size bound of the driver-side compaction, in manifest rows of the
+# consumed files (pre-fold). Measured on a 4-thread host, rewrite only
+# (read, fold, write; the commit is the same), 8 buckets of the benchmark's
+# row shape, median of 3 alternating runs:
+#
+#       rows    driver    Spark
+#     26,318   0.096 s  1.138 s
+#    105,091   0.312 s  1.664 s
+#    315,170   0.886 s  2.463 s
+#    630,123   1.750 s  3.718 s
+#  1,050,118   3.208 s  5.641 s
+#
+# The driver stays ahead to the largest size measured, so the break-even
+# lies above ~1M rows on this host (a cluster moves it down: the driver
+# side is one thread, Spark's scales with executors). The bound is half of
+# that, which also keeps the driver's Arrow copy of the input near 200 MB.
+# LOCAL_COMPACT_MAX_ROWS = -1 keeps every compaction on Spark.
+LOCAL_COMPACT_MAX_ROWS = 500_000
+
+
+def _distributed_reason(
+    table: LakeTable, snap: Snapshot, consumed: list,
+    splits: dict[int, int] | None,
+) -> str | None:
+    """Why this compaction pass must fold on Spark, or None when the
+    driver-side path may take it. Manifest metadata only."""
+    if table.local_root is None:
+        return "remote"
+    if snap.partition_spec is not None:
+        return "partitioned"
+    if any(f.schema_version != snap.schema_version for f in consumed):
+        return "schema_drift"  # conformance lives in the Spark read
+    if any(file_spec_n(f, snap) != snap.n_buckets for f in consumed):
+        return "spec"  # a rescale migration regroups keys across buckets
+    if splits:
+        return "split"
+    if sum(f.rows for f in consumed) > LOCAL_COMPACT_MAX_ROWS:
+        return "size"
+    return None
+
+
+def _compact_local(
+    table: LakeTable,
+    snap: Snapshot,
+    consumed: list,
+    gc_horizon_seq: int | None,
+) -> list:
+    """The driver-side compaction rewrite: each consumed bucket's files
+    read with pyarrow, folded by ``pointread.fold_keys`` (key-sorted
+    output), dead tombstones dropped at the horizon, one file per bucket."""
+    import pyarrow.compute as pc
+
+    from gobblin_spark.lakehouse.pointread import fold_keys, read_key_rows
+
+    rows = read_key_rows(table, consumed, snap.merge_keys, None)
+    by_bucket: dict[int, list] = {}
+    for f in consumed:
+        by_bucket.setdefault(f.bucket, []).append(rows[f.path])
+    parts = {}
+    for b, tables in by_bucket.items():
+        state = fold_keys(snap, tables)
+        if gc_horizon_seq is not None:
+            state = state.filter(pc.invert(pc.and_kleene(
+                state[DELETED_COL],
+                pc.less_equal(state[SEQ_COL], gc_horizon_seq))))
+        parts[b] = state
+    return table.write_local_files(snap, parts, seq_col=SEQ_COL)
 
 
 def _migrate_column_table(
@@ -774,7 +869,8 @@ def _migrate_column_table(
     final = cell_reduce_stored(
         batch_to_stored(events, payload, "seq", "op", "cell"),
         snap.merge_keys)
-    props = {**(properties or {}), "merge_dialect": "cell", "mor_deltas": 0}
+    props = {**(properties or {}), "merge_dialect": "cell", "mor_deltas": 0,
+             "compact_path": "distributed", "compact_reason": "migration"}
     if gc_horizon_seq is not None:
         final = final.filter(
             ~(F.col(DELETED_COL) & (F.col(SEQ_COL) <= gc_horizon_seq)))
@@ -1034,10 +1130,10 @@ def point_lookup(
 
     ``prefer_local``: first try the DRIVER-side read (pointread.py) — the
     manifest plus pyarrow row-group stats answer a single-key read in
-    milliseconds, and the answer is handed to Spark as an Arrow local
-    relation, so ``point_lookup(...).collect()`` launches ZERO Spark jobs.
-    Falls back to the distributed path (both merge dialects fold
-    locally) for schema-version drift or oversized candidate sets."""
+    milliseconds, folded by the Arrow kernel and handed to Spark as an
+    Arrow local relation, so ``point_lookup(...).collect()`` launches ZERO
+    Spark jobs. Falls back to the distributed path for a remote data
+    plane, schema-version drift or oversized candidate sets."""
     from gobblin_spark.lakehouse.pointread import (
         FALLBACK,
         key_bucket,
@@ -1052,7 +1148,7 @@ def point_lookup(
             visible = StructType(
                 [f for f in snap.schema.fields if f.name not in META_COLS])
             return local_frame(table.spark, visible,
-                               [row] if row is not None else [])
+                               row if row is not None else [])
     # bucket id under the PINNED snapshot's spec (buckets_of would use the
     # current spec — wrong for a version pinned from before a rescale)
     bucket = key_bucket(snap, key)
@@ -1109,11 +1205,12 @@ def changed_units(
 
 
 # Size bounds of the driver-local table_changes, in manifest row counts.
-# It folds every row of the symmetric-difference files in Python: measured
-# on a 4-thread host against the distributed plan, ~20k such rows (a COW or
-# compaction diff) take 0.47-0.51 s locally vs 0.78-0.84 s, ~40k break
-# even and ~60k lose (1.1-1.2 s vs 0.8 s), so the bound is half the break-
-# even. It also scans the key columns of the other candidate files
+# It folds every row of the symmetric-difference files on the driver:
+# measured on a 4-thread host against the distributed plan, with the
+# per-row Python fold the Arrow kernel since replaced, ~20k such rows (a
+# COW or compaction diff) took 0.47-0.51 s locally vs 0.78-0.84 s, ~40k
+# broke even and ~60k lost (1.1-1.2 s vs 0.8 s), so the bound is half the
+# break-even; re-measuring it needs a benchmark workload above the bound. It also scans the key columns of the other candidate files
 # (~0.8 µs/row: 1M rows 0.9 s vs 6.6 s distributed); that bound caps the
 # single-threaded scan near a second, which a cluster's distributed read
 # can beat. LOCAL_CHANGES_MAX_ROWS = -1 keeps every diff distributed.
@@ -1135,10 +1232,11 @@ def _changes_local(
 
     Only a key with a row in a file added or removed between the two
     snapshots can change state — every other key has the same stored rows
-    at both versions. So: read the keys of the symmetric-difference files
-    (K), resolve K at both snapshots in one pass over the candidate files
-    (pointread.read_key_rows), fold each side with the dialect's Python
-    twin and classify with the rules of the distributed plan."""
+    at both versions. So: read the symmetric-difference files (their keys
+    are K), resolve K at both snapshots in one pass over the candidate
+    files (pointread.read_key_rows), fold each side with the Arrow kernel
+    (pointread.fold_keys) and classify K's folded states with the rules of
+    the distributed plan."""
     from pyspark.sql.types import StringType, StructField, StructType
 
     from gobblin_spark.lakehouse.pointread import (
@@ -1147,6 +1245,8 @@ def _changes_local(
         read_key_rows,
     )
 
+    if table.local_root is None:
+        return FALLBACK
     cand = {f.path: f for f in (*files_old, *files_new)}
     if any(f.schema_version != snap_new.schema_version
            for f in cand.values()):
@@ -1161,20 +1261,28 @@ def _changes_local(
     keys = snap_new.merge_keys
     # every row of a symmetric-difference file is a changed key's row
     rows = read_key_rows(table, [cand[p] for p in diff], keys, None)
-    changed = {tuple(r[c] for c in keys)
-               for rs in rows.values() for r in rs}
+    changed: set[tuple] = set()
+    for t in rows.values():
+        distinct = t.group_by(keys).aggregate([])
+        changed.update(zip(*(distinct[c].to_pylist() for c in keys)))
     if changed:
         rows.update(read_key_rows(table, rest, keys, changed))
     fields = snap_new.schema.fields
     payload = [f.name for f in fields
                if f.name not in keys and f.name not in META_COLS]
+    cell = snap_new.merge_dialect == "cell"
 
     def _state(files) -> dict[tuple, dict]:
-        return fold_keys(snap_new.merge_dialect, keys, payload,
-                         (r for f in files for r in rows.get(f.path, ())))
+        parts = [rows[f.path] for f in files if f.path in rows]
+        if not parts:
+            return {}
+        states = fold_keys(snap_new, parts).to_pylist()
+        return {tuple(r[c] for c in keys): r for r in states}
 
     old, new = _state(files_old), _state(files_new)
-    ident = CELLS_COL if snap_new.merge_dialect == "cell" else SEQ_COL
+
+    def _ident(state: dict):
+        return dict(state[CELLS_COL]) if cell else state[SEQ_COL]
 
     def _row(k, image: dict, seq, label: str) -> dict:
         return {**dict(zip(keys, k)), **{c: image[c] for c in payload},
@@ -1194,7 +1302,7 @@ def _changes_local(
             else:  # the tombstone's payload, the old row's where null
                 image = {c: o[c] if n[c] is None else n[c] for c in payload}
             out.append(_row(k, image, seq, "delete"))
-        elif n_live and o_live and n[ident] != o[ident]:
+        elif n_live and o_live and _ident(n) != _ident(o):
             if emit_preimages:
                 out.append(_row(k, o, o[SEQ_COL], "update_preimage"))
                 out.append(_row(k, n, n[SEQ_COL], "update_postimage"))
@@ -1247,14 +1355,15 @@ def table_changes(
     snapshots can change state, so a small diff resolves just those keys
     on the DRIVER, eagerly at call time: the keys of the
     symmetric-difference files are read with pyarrow, resolved at both
-    snapshots by the point-read resolver (pointread.read_key_rows), and the
-    result is handed to Spark as a local relation — ``collect()`` launches
-    no Spark job and nothing is shuffled. The distributed plan below
-    answers instead when a candidate file is at another schema version
-    than the new snapshot, when bucket pruning is impossible, or past the
-    size bounds: more than
-    ``LOCAL_CHANGES_MAX_ROWS`` rows in the symmetric-difference files
-    (every one is folded in Python) or ``LOCAL_CHANGES_MAX_SCAN_ROWS`` in
+    snapshots by the point-read resolver (pointread.read_key_rows), folded
+    by the Arrow kernel, and the result is handed to Spark as a local
+    relation — ``collect()`` launches no Spark job and nothing is
+    shuffled. The distributed plan below answers instead on a remote data
+    plane, when a candidate file is at another schema version than the
+    new snapshot, when bucket pruning is impossible, or past the size
+    bounds: more than ``LOCAL_CHANGES_MAX_ROWS`` rows in the
+    symmetric-difference files (every one is read and folded on the
+    driver) or ``LOCAL_CHANGES_MAX_SCAN_ROWS`` in
     the other candidate files (their key columns are scanned).
 
     Distributed plan, scale shape (100 TB): bucket-pruned — a bucket whose

@@ -1,34 +1,28 @@
-"""Driver-side keyed reads: a millisecond primary-key read that never
-launches a Spark job, and the resolver behind small changelog diffs.
+"""Driver-side keyed reads and the Arrow LWW fold: a millisecond
+primary-key read that never launches a Spark job, and the resolver and
+fold behind small changelog diffs and small compactions.
 
-The manifest already holds everything a keyed read needs — bucket
-layout, per-file key bounds, and (inside each parquet footer) row-group
-stats over the key-sorted compaction output. ``read_key_rows`` resolves a
-SET of merge keys on the driver in one pass over candidate files: prune
-by key_bounds and row-group stats, read the key columns first, and
-materialise only the rows whose key is wanted. ``fold_keys`` LWW-folds
-each key's rows into its stored state with the dialect's plain-Python
-fold. ``point_lookup_local`` hashes one key to its bucket with a Python
-port of Spark's xxhash64 (parity property-tested against the JVM
-expression) and projects the visible row from that state;
-``merge.table_changes`` resolves the keys of a small diff at two
-snapshots with the same two calls.
+``read_key_rows`` resolves a SET of merge keys in one pass over candidate
+files: prune by manifest key_bounds and parquet row-group stats (over the
+key-sorted compaction output), read the key columns first, then full rows
+only where the key is wanted, as pyarrow Tables. ``fold_keys`` folds
+stored rows per key with one vectorised kernel per dialect, Arrow in and
+out — the driver-side twin of merge.py's stored reduces, property-tested
+against them. ``point_lookup_local`` routes one key to its bucket with a
+Python port of Spark's xxhash64 (parity property-tested against the JVM
+expression) and hands the visible row to Spark as Arrow;
+``merge.table_changes`` and ``merge.compact`` use the same two calls. All
+need a local data plane (``LakeTable.local_root``).
 
 This is the interactive read an upsert-table consumer expects (≙ a Hive
 consumer of the reference's published tables doing a keyed SELECT;
 StunlockPartitionedHiveDataPublisher.java registers partitions precisely
-so those reads prune). Both merge dialects resolve locally, with
-plain-Python twins of the stored reduces: row LWW, and 'cell' patches,
-whose per-column write seqs let a few rows from several files fold in
-any order. The Spark ``point_lookup`` stays the general path: the local
-read FALLS BACK (returns the ``FALLBACK`` sentinel) for schema-version
-drift or oversized candidate sets rather than re-implementing schema
-conformance driver-side.
-
-Scale shape: reads stay O(candidate files within one bucket) — at 100 TB
-with 4096 buckets and key-bounds pruning that is typically 1-3 parquet
-footers + 1-2 row groups, independent of table size. The only driver
-memory used is the matched rows (≤ rows per key per file).
+so those reads prune). The Spark ``point_lookup`` stays the general path:
+the local read FALLS BACK (the ``FALLBACK`` sentinel) for a remote data
+plane, schema-version drift or oversized candidate sets rather than
+re-implementing schema conformance driver-side. Reads stay O(candidate
+files within one bucket): at 100 TB with 4096 buckets, typically 1-3
+footers + 1-2 row groups, independent of table size.
 """
 
 from __future__ import annotations
@@ -213,21 +207,21 @@ def read_key_rows(
     files: list,
     keys: list[str],
     wanted: set[tuple] | None,
-) -> dict[str, list[dict]]:
+) -> dict[str, Any]:
     """One driver pass over ``files``: the stored rows whose merge key
     (tuple in ``keys`` order) is in ``wanted`` — every row when ``wanted``
-    is None — grouped by file path.
+    is None — as one pyarrow Table per file path that has any.
 
     A file is skipped when its manifest key_bounds exclude every wanted
     key, a row group when its parquet stats do. Within the surviving row
-    groups only the key columns are read first; full rows are read and
-    materialised only at the matching positions. The caller guarantees
-    every file is at the snapshot's schema version."""
+    groups only the key columns are read first; full rows are read only at
+    the matching positions. The caller guarantees a local data plane and
+    every file at the snapshot's schema version."""
     import pyarrow.parquet as pq
 
+    root = table.local_root
     if wanted is None:
-        return {f.path: pq.ParquetFile(
-                    os.path.join(table.root, f.path)).read().to_pylist()
+        return {f.path: pq.ParquetFile(os.path.join(root, f.path)).read()
                 for f in files}
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -240,11 +234,11 @@ def read_key_rows(
         except TypeError:  # unorderable mix: never prune on c
             pass
     value_sets: dict[tuple, Any] = {}  # (column, arrow type) → is_in set
-    out: dict[str, list[dict]] = {}
+    out: dict[str, Any] = {}
     for f in files:
         if not _may_hold(values, (f.key_bounds or {}).get):
             continue
-        pf = pq.ParquetFile(os.path.join(table.root, f.path))
+        pf = pq.ParquetFile(os.path.join(root, f.path))
         md = pf.metadata
         idx_of = {c: i for i, c in enumerate(pf.schema_arrow.names)}
         groups = []
@@ -276,31 +270,7 @@ def read_key_rows(
             got = zip(*(cand.column(c).to_pylist() for c in keys))
             pos = [p for p, k in zip(pos.to_pylist(), got) if k in wanted]
         if len(pos):
-            out[f.path] = pf.read_row_groups(groups).take(pos).to_pylist()
-    return out
-
-
-def fold_keys(
-    dialect: str,
-    keys: list[str],
-    value_cols: list[str],
-    rows,
-) -> dict[tuple, dict]:
-    """LWW-fold stored ``rows`` (any iterable of row dicts) per merge key:
-    key tuple → the key's stored state — payload, ``__seq``,
-    ``__deleted`` and, for the 'cell' dialect, ``__cells`` and
-    ``__del_seq`` — exactly the row the dialect's distributed stored
-    reduce would output. ``value_cols`` are the payload columns without
-    the keys."""
-    fold = _fold_cell if dialect == "cell" else _fold_row
-    by_key: dict[tuple, list[dict]] = {}
-    for r in rows:
-        by_key.setdefault(tuple(r[c] for c in keys), []).append(r)
-    out = {}
-    for k, rs in by_key.items():
-        state = fold(rs, value_cols)
-        state.update(zip(keys, k))
-        out[k] = state
+            out[f.path] = pf.read_row_groups(groups).take(pos)
     return out
 
 
@@ -311,19 +281,21 @@ def point_lookup_local(
     max_candidate_files: int = 64,
 ):
     """Resolve one merge key without Spark, in ``snap`` (default: the
-    current snapshot). Returns the visible row as a plain dict, None when
-    the key is absent/deleted, or the FALLBACK sentinel when this path
-    can't answer safely (schema-version drift among candidate files, too
-    many candidates)."""
+    current snapshot). Returns the visible row as a one-row pyarrow Table,
+    None when the key is absent/deleted, or the FALLBACK sentinel when this
+    path can't answer safely (a remote data plane, schema-version drift
+    among candidate files, too many candidates)."""
     if snap is None:
         snap = table.snapshot()
-    dialect = snap.merge_dialect
+    snap.merge_dialect  # a retired dialect fails before any read
     bucket = key_bucket(snap, key)
     keys = snap.merge_keys
     missing = [k for k in keys if k not in key]
     if missing:
         raise ValueError(
             f"point_lookup needs all merge keys; missing {missing}")
+    if table.local_root is None:
+        return FALLBACK
     # files whose key_bounds exclude the key are pruned before the gates,
     # so they neither count as candidates nor force a schema fallback
     values = {k: [key[k]] for k in keys}
@@ -339,70 +311,134 @@ def point_lookup_local(
         # that logic lives in the Spark read path; don't duplicate it here
         return FALLBACK
 
-    want = tuple(key[k] for k in keys)
-    rows = read_key_rows(table, cand, keys, {want})
-    cols = [f.name for f in snap.schema.fields if f.name not in _META]
-    state = fold_keys(dialect, keys,
-                      [c for c in cols if c not in keys],
-                      (r for rs in rows.values() for r in rs)).get(want)
-    if state is None or state[_DELETED]:
+    rows = read_key_rows(table, cand, keys, {tuple(key[k] for k in keys)})
+    if not rows:
         return None
-    return {c: state[c] for c in cols}
+    state = fold_keys(snap, list(rows.values()))
+    if state[_DELETED][0].as_py():
+        return None
+    return state.select([f.name for f in snap.schema.fields
+                         if f.name not in _META])
 
 
-# ---------------------------------------------------- local dialect folds
-# Plain-Python twins of merge.py's stored reduces over ONE key's candidate
-# rows (a handful of rows read from pruned row groups). Each returns the
-# key's stored state as the distributed fold outputs it (merge keys are
-# added by fold_keys); duplicates of the same event are byte-identical, so
-# seq ties are content-neutral.
-
-_NEG = -(1 << 62)
+# ------------------------------------------------------------ Arrow folds
+# Duplicates of one event are byte-identical, so seq ties are
+# content-neutral.
 
 
-def _fold_row(rows: list[dict], value_cols: list[str]) -> dict:
-    """LWW by (__seq, tombstone-beats-upsert) — twin of lww_reduce over the
-    stored shape (rank: delete 3, live 2). The state is the winning row,
-    a tombstone's payload included."""
-    def rank(r):
-        return (r[_SEQ], 3 if r.get(_DELETED) else 2)
-    return dict(max(rows, key=rank))
+def fold_keys(snap: Snapshot, tables: list):
+    """LWW-fold stored rows — pyarrow Tables read from files at the
+    snapshot's schema version — per merge key, with the snapshot's
+    dialect: one row per key, in key order, holding exactly the stored
+    state ``stored_reduce`` outputs. The tables are first cast to the
+    snapshot's Arrow schema: Spark writes timestamps as INT96 (read back as
+    nanoseconds), the driver-side writer as microseconds."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(snap.schema)
+    table = pa.concat_tables(
+        [t.select(schema.names).cast(schema) for t in tables])
+    fold = _fold_cell if snap.merge_dialect == "cell" else _fold_row
+    return fold(table, snap.merge_keys) if table.num_rows else table
 
 
-def _cells_map(r: dict) -> dict:
-    cells = r.get(_CELLS) or {}
-    if isinstance(cells, list):  # pyarrow map → list of (k, v) pairs
-        cells = dict(cells)
-    return cells
+def _key_sort(table, keys: list[str], *extra):
+    """``table`` sorted by merge key, then by the ``extra`` arrays (nulls
+    first, as Spark orders), and a mask that is True where a row's key
+    differs from the previous row's — two nulls are one key, as in Spark's
+    groupBy."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    cols = [table[k] for k in keys] + list(extra)
+    names = [str(i) for i in range(len(cols))]
+    order = pc.sort_indices(pa.table(cols, names=names),
+                            sort_keys=[(n, "ascending") for n in names],
+                            null_placement="at_start")
+    table = table.take(order)
+    new_key = pa.array([True])
+    if table.num_rows > 1:
+        diff = None
+        for k in keys:
+            col = table[k].combine_chunks()
+            a, b = col[:-1], col[1:]
+            d = pc.or_(pc.fill_null(pc.not_equal(a, b), False),
+                       pc.not_equal(pc.is_null(a), pc.is_null(b)))
+            diff = d if diff is None else pc.or_(diff, d)
+        new_key = pa.concat_arrays([new_key, diff])
+    return table, new_key
 
 
-def _fold_cell(rows: list[dict], value_cols: list[str]) -> dict:
-    """Twin of cell_reduce_stored: per-column latest CELL seq, cells at or
-    below the key's max delete seq excluded; key live iff any non-tombstone
-    row's __seq exceeds the max delete seq. A dead key keeps only its
-    seqs: payload NULL, no cells."""
-    dels = [r[_DELSEQ] for r in rows if r.get(_DELSEQ) is not None]
-    del_max = max(dels) if dels else None
-    last_del = _NEG if del_max is None else del_max
-    live = [r[_SEQ] for r in rows
-            if not r.get(_DELETED) and r[_SEQ] > last_del]
-    if not live:
-        return {**dict.fromkeys(value_cols), _SEQ: del_max,
-                _DELETED: True, _CELLS: {}, _DELSEQ: del_max}
-    maps = [_cells_map(r) for r in rows]
-    out: dict[str, Any] = {}
-    cells: dict[str, int] = {}
-    for c in value_cols:
-        vals = [
-            (cs, r.get(c))
-            for r, m in zip(rows, maps)
-            for cs in [m.get(c)]
-            if cs is not None and cs > last_del
-        ]
-        best = max(vals, key=lambda t: t[0]) if vals else None
-        out[c] = best[1] if best else None
-        if best:
-            cells[c] = best[0]
-    out.update({_SEQ: max(live), _DELETED: False, _CELLS: cells,
+def _fold_row(table, keys: list[str]):
+    """Twin of lww_reduce over the stored shape: per key the row with the
+    greatest (__seq, rank), rank 3 for a tombstone and 2 otherwise. The
+    state is the winning row, a tombstone's payload included."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    rank = pc.if_else(pc.fill_null(table[_DELETED], False), 3, 2)
+    s, new_key = _key_sort(table, keys, table[_SEQ], rank)
+    last = pa.concat_arrays([new_key[1:], pa.array([True])])
+    return s.filter(last)
+
+
+def _group_max(gid, arrays: dict) -> dict:
+    """Per-group max of each array (null when a group has no value),
+    indexed by group id."""
+    import pyarrow as pa
+
+    agg = (pa.table({"__g": gid, **arrays}).group_by("__g")
+           .aggregate([(n, "max") for n in arrays]).sort_by("__g"))
+    return {n: agg[f"{n}_max"] for n in arrays}
+
+
+def _fold_cell(table, keys: list[str]):
+    """Twin of cell_reduce_stored: per key, the max ``__del_seq`` is the
+    delete cut; the key is live iff some non-tombstone row's ``__seq`` is
+    above the cut; each payload column takes the value of its latest cell
+    above the cut (``map_lookup`` on ``__cells``). A dead key keeps only
+    its seqs: payload NULL, no cells."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    payload = [c for c in table.column_names
+               if c not in keys and c not in _META]
+    s, new_key = _key_sort(table, keys)
+    gid = pc.subtract(pc.cumulative_sum(new_key.cast(pa.int64())), 1)
+    firsts = pc.indices_nonzero(new_key)
+    del_max = _group_max(gid, {"d": s[_DELSEQ]})["d"]
+    cut = pc.fill_null(pc.take(del_max, gid), -(1 << 62))
+    live = pc.and_kleene(pc.invert(s[_DELETED]), pc.greater(s[_SEQ], cut))
+    cells = {}
+    for c in payload:
+        cs = pc.map_lookup(s[_CELLS], pa.scalar(c), "first")
+        cells[c] = pc.if_else(pc.greater(cs, cut), cs, None)
+    best = _group_max(gid, {_SEQ: pc.if_else(live, s[_SEQ], None), **cells})
+    # each column's winning row: the last one holding the group's max cell
+    row = pa.array(np.arange(s.num_rows))
+    win = _group_max(gid, {
+        c: pc.if_else(pc.equal(cs, pc.take(best[c], gid)), row, None)
+        for c, cs in cells.items()})
+
+    dead = pc.is_null(best[_SEQ])
+    out = {k: pc.take(s[k], firsts) for k in keys}
+    out.update({c: pc.if_else(dead, None, pc.take(s[c], win[c]))
+                for c in payload})
+    out.update({_SEQ: pc.coalesce(best[_SEQ], del_max), _DELETED: dead,
                 _DELSEQ: del_max})
-    return out
+    # the cell map: each live key's winning cell seqs, in payload order
+    n = len(firsts)
+    valid = (np.array([pc.is_valid(best[c]) for c in payload], bool)
+             .reshape(-1, n).T & ~np.asarray(dead)[:, None])
+    seqs = np.array([pc.fill_null(best[c], 0) for c in payload],
+                    np.int64).reshape(-1, n).T
+    at, col = np.nonzero(valid)
+    out[_CELLS] = pa.MapArray.from_arrays(
+        np.concatenate([[0], np.cumsum(valid.sum(axis=1))]).astype(np.int32),
+        pa.array(np.array(payload, dtype=object)[col], pa.string()),
+        pa.array(seqs[at, col], pa.int64()),
+        type=table.schema.field(_CELLS).type)
+    return pa.table([out[c] for c in table.column_names],
+                    schema=table.schema)

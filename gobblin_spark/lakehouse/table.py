@@ -48,6 +48,7 @@ import time
 import uuid
 from dataclasses import dataclass, field, replace
 from typing import Any, Iterable
+from urllib.parse import unquote, urlsplit
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -403,8 +404,9 @@ def bucket_expr(bucket_cols: list[str], n_buckets: int):
 
 
 def local_frame(spark: SparkSession, schema: StructType,
-                rows: list[dict[str, Any]]) -> DataFrame:
-    """A DataFrame over driver-held ``rows`` (dicts keyed by column name).
+                rows) -> DataFrame:
+    """A DataFrame over driver-held ``rows``: a pyarrow Table, or dicts
+    keyed by column name.
 
     The rows reach the JVM as one Arrow table and plan as a local relation,
     so collecting the frame launches no Spark job. A Python list would go
@@ -413,8 +415,138 @@ def local_frame(spark: SparkSession, schema: StructType,
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    arrow_schema = to_arrow_schema(schema)
+    if isinstance(rows, pa.Table):
+        table = rows.select(arrow_schema.names).cast(arrow_schema)
+    else:
+        table = pa.Table.from_pylist(rows, schema=arrow_schema)
     return spark.createDataFrame(table, schema=schema)
+
+
+# ------------------------------------------------------- manifest entries
+# Key-column types whose [min, max] round-trips exactly through the JSON
+# manifest: a type that round-trips lossily could prune wrongly.
+_KEY_BOUND_TYPES = ("string", "int", "bigint", "smallint", "tinyint",
+                    "double", "float")
+
+
+def key_bound_cols(key_cols: list[str] | None,
+                   schema: StructType) -> list[str]:
+    """The key columns a written file records [min, max] bounds for."""
+    names = set(schema.fieldNames())
+    return [kc for kc in key_cols or [] if kc in names
+            and schema[kc].dataType.simpleString() in _KEY_BOUND_TYPES]
+
+
+def data_file_entry(
+    path: str,
+    bucket: int,
+    rows: int,
+    nbytes: int,
+    schema_version: int,
+    seq_bounds: tuple,
+    tombstones: bool | None,
+    key_bounds: dict[str, tuple],
+    blooms: dict[str, set[int]],
+    value_bounds: dict[str, tuple],
+    partition: str | None = None,
+    reduced: bool = True,
+    spec_n: int | None = None,
+    value_stats_m: int = 8192,
+) -> DataFile:
+    """One manifest entry from a written file's per-column aggregates, the
+    one place both writers (the Spark stats scan and the driver-side Arrow
+    writer) turn aggregates into DataFile fields. ``key_bounds`` and
+    ``value_bounds`` map a column to the (min, max) of its non-null values,
+    (None, None) when every value is null; ``blooms`` maps a stats column
+    to the bloom bit positions of its values. A column with no bounds is
+    left out, and an empty mapping records None (not tracked)."""
+    def bounds(by_col: dict[str, tuple]) -> dict[str, list] | None:
+        return {c: [lo, hi] for c, (lo, hi) in by_col.items()
+                if lo is not None} or None
+
+    lo, hi = seq_bounds
+    return DataFile(
+        path=path,
+        bucket=bucket,
+        rows=int(rows),
+        bytes=int(nbytes),
+        schema_version=schema_version,
+        min_seq=None if lo is None else int(lo),
+        max_seq=None if hi is None else int(hi),
+        has_tombstones=None if tombstones is None else bool(tombstones),
+        partition=partition or None,
+        reduced=reduced,
+        key_bounds=bounds(key_bounds),
+        spec_n=spec_n,
+        value_stats={
+            c: {"m": value_stats_m, "b": bloom_build(p, value_stats_m)}
+            for c, p in blooms.items()
+        } or None,
+        value_bounds=bounds(value_bounds),
+    )
+
+
+# Spark's parquet codec names → pyarrow's; a codec pyarrow cannot write
+# (lzo) takes Spark's own default, snappy.
+_PARQUET_CODECS = {"none": "none", "uncompressed": "none",
+                   "snappy": "snappy", "gzip": "gzip", "zstd": "zstd",
+                   "brotli": "brotli", "lz4": "lz4", "lz4raw": "lz4",
+                   "lz4_raw": "lz4"}
+# parquet-mr's dictionary page limit (parquet.dictionary.page.size)
+_DICT_PAGE_BYTES = 1 << 20
+
+
+def _plain_bytes(arr) -> int:
+    """Size of ``arr``'s non-null values PLAIN-encoded."""
+    import pyarrow.compute as pc
+
+    try:
+        return len(arr) * max(1, arr.type.bit_width // 8)
+    except ValueError:  # variable width: 4-byte length prefix per value
+        return 4 * len(arr) + (pc.sum(pc.binary_length(arr)).as_py() or 0)
+
+
+def dictionary_columns(table) -> list[str]:
+    """The columns of ``table`` to dictionary-encode, by parquet-mr's rule
+    rather than pyarrow's encode-everything default: parquet-mr starts
+    each column on a dictionary and falls back to PLAIN when the dictionary
+    outgrows its page, or when the dictionary plus the bit-packed indices
+    are not smaller than the plain values
+    (FallbackValuesWriter.isCompressionSatisfying). Decided from the
+    values, so a low-cardinality column keeps its dictionary and a
+    near-unique one (hashes, free text, seqs) is written PLAIN. Nested and
+    boolean columns stay PLAIN."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    out = []
+    for name in table.column_names:
+        vals = table.column(name).drop_null()
+        if (not len(vals) or pa.types.is_nested(vals.type)
+                or pa.types.is_boolean(vals.type)):
+            continue
+        uniq = pc.unique(vals)
+        dict_bytes = _plain_bytes(uniq)
+        index_bytes = len(vals) * max(1, (len(uniq) - 1).bit_length()) / 8
+        if (dict_bytes <= _DICT_PAGE_BYTES
+                and dict_bytes + index_bytes < _plain_bytes(vals)):
+            out.append(name)
+    return out
+
+
+def _min_max(arr) -> tuple:
+    """(min, max) of the non-null values as Spark's min/max computes them:
+    NaN sorts above every number (pyarrow's min_max skips it)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    mm = pc.min_max(arr)
+    lo, hi = mm["min"].as_py(), mm["max"].as_py()
+    if pa.types.is_floating(arr.type) and pc.any(pc.is_nan(arr)).as_py():
+        nan = float("nan")
+        return (nan if lo is None else lo), nan
+    return lo, hi
 
 
 class LakeTable:
@@ -453,6 +585,27 @@ class LakeTable:
 
     def _manifest_path(self, version: int) -> str:
         return os.path.join(self._manifest_dir, f"v{version:0{_V_DIGITS}d}.json")
+
+    @property
+    def local_root(self) -> str | None:
+        """The table root as a local filesystem path when the data plane is
+        local (a scheme-less or ``file:`` root), else None. Every
+        driver-side path (point reads, changelog reads, compaction) asks
+        here before it opens data files with pyarrow; a root of any other
+        scheme (``hdfs://``, ``s3a://``) takes the Spark path."""
+        u = urlsplit(self.root)
+        if not u.scheme:
+            return self.root
+        return u.path if u.scheme == "file" else None
+
+    def _relpath(self, uri: str) -> str:
+        """A written file's manifest path, relative to the table root:
+        taken between the URI paths of both sides. Spark reports
+        percent-encoded URIs (``file:/…``); the root is a Hadoop path
+        string, scheme-less, ``file:///…`` or another scheme's URI."""
+        root = urlsplit(self.root)
+        return os.path.relpath(unquote(urlsplit(uri).path),
+                               root.path if root.scheme else self.root)
 
     # ------------------------------------------------------------ lifecycle
     @staticmethod
@@ -892,15 +1045,8 @@ class LakeTable:
             aggs.append(
                 F.lit(None).cast("boolean").alias("__tombstones"))
         # per-key-column value bounds for manifest-level data skipping —
-        # same stats pass, two thin extra columns per key col. Only
-        # JSON-faithful types (string / integral / float): a type that
-        # round-trips lossily through the manifest could prune wrongly.
-        bound_cols = [
-            kc for kc in (key_cols or [])
-            if kc in data_cols and df.schema[kc].dataType.simpleString()
-            in ("string", "int", "bigint", "smallint", "tinyint",
-                "double", "float")
-        ]
+        # same stats pass, two thin extra columns per key col
+        bound_cols = key_bound_cols(key_cols, df.schema)
         for kc in bound_cols:
             aggs += [F.min(kc).alias(f"__kmin_{kc}"),
                      F.max(kc).alias(f"__kmax_{kc}")]
@@ -918,46 +1064,79 @@ class LakeTable:
                 F.max(c).alias(f"__vmax_{c}"),
             ]
         stats = df.groupBy(*keys).agg(*aggs).collect()
-
-        out: list[DataFile] = []
-        for r in stats:
-            full = r["__fp"]
-            if full.startswith("file:"):
-                full = full[len("file:"):]
-            out.append(DataFile(
-                path=os.path.relpath(full, self.root),
-                bucket=r["__fbucket"] if r["__fbucket"] is not None else -1,
-                rows=int(r["__rows"]),
-                bytes=int(r["__fsize"]),
-                schema_version=schema_version,
-                min_seq=(None if r["__min_seq"] is None
-                         else int(r["__min_seq"])),
-                max_seq=(None if r["__max_seq"] is None
-                         else int(r["__max_seq"])),
-                has_tombstones=(None if r["__tombstones"] is None
-                                else bool(r["__tombstones"])),
-                partition=r["__fpart"] or None,
+        return [
+            data_file_entry(
+                self._relpath(r["__fp"]),
+                r["__fbucket"] if r["__fbucket"] is not None else -1,
+                r["__rows"], r["__fsize"], schema_version,
+                (r["__min_seq"], r["__max_seq"]), r["__tombstones"],
+                {kc: (r[f"__kmin_{kc}"], r[f"__kmax_{kc}"])
+                 for kc in bound_cols},
+                {c: set(r[f"__vb1_{c}"]) | set(r[f"__vb2_{c}"])
+                 for c in vs_cols},
+                {c: (r[f"__vmin_{c}"], r[f"__vmax_{c}"]) for c in vs_cols},
+                partition=r["__fpart"],
                 reduced=reduced,
-                key_bounds=({
-                    kc: [r[f"__kmin_{kc}"], r[f"__kmax_{kc}"]]
-                    for kc in bound_cols
-                    if r[f"__kmin_{kc}"] is not None
-                } or None) if bound_cols else None,
                 spec_n=spec_n,
-                value_stats=({
-                    c: {
-                        "m": value_stats_m,
-                        "b": bloom_build(
-                            set(r[f"__vb1_{c}"]) | set(r[f"__vb2_{c}"]),
-                            value_stats_m),
-                    }
-                    for c in vs_cols
-                } or None) if vs_cols else None,
-                value_bounds=({
-                    c: [r[f"__vmin_{c}"], r[f"__vmax_{c}"]]
-                    for c in vs_cols
-                    if r[f"__vmin_{c}"] is not None
-                } or None) if vs_cols else None,
+                value_stats_m=value_stats_m,
+            )
+            for r in stats
+        ]
+
+    def write_local_files(
+        self, snap: Snapshot, parts: dict[int, Any],
+        seq_col: str | None = None,
+    ) -> list[DataFile]:
+        """Driver-side twin of ``write_data_files`` for a small rewrite on a
+        local data plane (``local_root``): one parquet file per non-empty
+        bucket from a pyarrow Table already in the snapshot's stored shape
+        and key order (``parts``: bucket → table), under the usual
+        ``data/<write-id>/__bucket=<k>/`` layout, at the snapshot's schema
+        version and bucket spec. NOT yet visible — commit separately.
+
+        Each DataFile is built from the in-memory table: no listing and no
+        stats re-scan. The codec is the session's
+        ``spark.sql.parquet.compression.codec`` and the dictionary choice
+        parquet-mr's (``dictionary_columns``), so the files are about the
+        size Spark's writer makes."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        from gobblin_spark.lakehouse.pointread import _int_size
+
+        codec = _PARQUET_CODECS.get(self.spark.conf.get(
+            "spark.sql.parquet.compression.codec", "snappy").lower(),
+            "snappy")
+        schema = snap.schema
+        types = {f.name: f.dataType.typeName() for f in schema.fields}
+        bound_cols = key_bound_cols(snap.key_cols, schema)
+        vs_cols = [c for c in snap.properties.get("value_stats_cols") or []
+                   if c in types]
+        m = int(snap.properties.get("value_stats_m", 8192))
+        write_id = uuid.uuid4().hex
+        out: list[DataFile] = []
+        for b, t in sorted(parts.items()):
+            if not t.num_rows:
+                continue
+            rel = os.path.join(_DATA, write_id, f"__bucket={b}",
+                               f"part-{b:05d}-{write_id}.c000.parquet")
+            full = os.path.join(self.local_root, rel)
+            os.makedirs(os.path.dirname(full), exist_ok=True)
+            pq.write_table(t, full, compression=codec,
+                           use_dictionary=dictionary_columns(t))
+            out.append(data_file_entry(
+                rel, b, t.num_rows, os.stat(full).st_size,
+                snap.schema_version,
+                _min_max(t[seq_col]) if seq_col in types else (None, None),
+                (pc.any(t["__deleted"]).as_py()
+                 if "__deleted" in types else None),
+                {c: _min_max(t[c]) for c in bound_cols},
+                {c: {p for v in pc.unique(t[c]).to_pylist()
+                     for p in bloom_positions_py(v, m, _int_size(types[c]))}
+                 for c in vs_cols},
+                {c: _min_max(t[c]) for c in vs_cols},
+                spec_n=snap.n_buckets,
+                value_stats_m=m,
             ))
         return out
 
@@ -1630,6 +1809,8 @@ class LakeTable:
         self._require_main("vacuum")
         live: set[str] = set()
         live_shards: set[str] = set()
+        # the data-plane listing yields local paths without a file: scheme
+        base = self.local_root or self.root
         handles = [self] + [
             LakeTable(self.spark, self.root, fs=self.fs, branch=n)
             for n in self.branches()
@@ -1637,8 +1818,7 @@ class LakeTable:
         for h in handles:
             for snap in h.history():
                 for f_ in snap.files:
-                    live.add(os.path.normpath(
-                        os.path.join(self.root, f_.path)))
+                    live.add(os.path.normpath(os.path.join(base, f_.path)))
                 for name, _fl in snap.shard_map or []:
                     live_shards.add(name)
         removed = 0

@@ -34,16 +34,3 @@ def fork(
     for pred in branch_predicates:
         out.append(parent if pred is None else parent.filter(pred))
     return out
-
-
-def flatten_fork(df: DataFrame, array_fields: list[str]) -> list[DataFrame]:
-    """One branch per array-of-structs column, each branch flattening a
-    different array (≙ fork-added FlattenForkOperator,
-    gobblin-core/.../stunlock/schemaflattening/FlattenForkOperator.java:18-71
-    + FlattenConverter fan-out)."""
-    from gobblin_spark.operators.converters import FlattenConverter
-
-    parent = df.persist(StorageLevel.MEMORY_AND_DISK)
-    return [
-        FlattenConverter(array_field=a).convert(parent) for a in array_fields
-    ]

@@ -159,9 +159,3 @@ class SchemaCompatibilityPolicy:
         got = [(f.name, f.dataType.simpleString()) for f in schema.fields]
         want = [(f.name, f.dataType.simpleString()) for f in self.expected.fields]
         return got == want
-
-
-def can_publish(task_checks: list[bool]) -> bool:
-    """SUCCESS gate before commit (≙ TaskPublisher.canPublish —
-    POLICY_TESTS_FAIL blocks publish)."""
-    return all(task_checks)

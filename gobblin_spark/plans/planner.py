@@ -316,27 +316,6 @@ class Planner:
         plan.total_est_records = sum(u.est_records for u in units)
         return plan
 
-    # ------------------------------------------------------------- skew scan
-    def detect_hot_repos(
-        self, batch_events: DataFrame, total: int | None = None
-    ) -> list[str]:
-        """Repos holding > hot_key_threshold of the batch — flagged for the
-        salted two-stage merge path. One small aggregation, O(#repos) result
-        capped at 64 rows."""
-        if total is None:
-            total = batch_events.count()
-        if total == 0:
-            return []
-        rows = (
-            batch_events.groupBy("repo")
-            .count()
-            .filter(F.col("count") > total * self.hot_key_threshold)
-            .orderBy(F.desc("count"))
-            .limit(64)
-            .collect()
-        )
-        return [r["repo"] for r in rows]
-
     @staticmethod
     def bin_assignment_expr(bins: list[list[WorkUnit]]):
         """Map each extracted row to its planned bin: a CASE chain over the

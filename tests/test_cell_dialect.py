@@ -158,33 +158,41 @@ def test_cell_cow_out_of_order_batches(spark, tmp_table_dir):
 def test_cell_mor_compaction_mid_disorder(spark, tmp_table_dir):
     """MOR deltas land out of order, compaction folds MID-stream, more late
     (lower-seq) deltas land after the fold — state still converges and the
-    compacted table keeps one row per key."""
+    compacted table keeps one row per key, on both compaction paths."""
     rows = patch_stream()
     want = patch_oracle(rows)
     from gobblin_spark.engine import default_registry, target_schema_for
 
-    table = LakeTable.create(
-        spark, os.path.join(tmp_table_dir, "table"),
-        target_schema_for(default_registry(), 1, "cell"),
-        ["repo", "path"], n_buckets=4,
-        properties={"merge_dialect": "cell"}, key_cols=["repo", "path"])
+    from tests.test_merge import COMPACT_PATHS
+
     events = spark.createDataFrame(rows, EVENT_SCHEMA).drop(
         "event_group", "schema_version", "version", "size_bytes")
     hi = events.filter("seq % 2 = 1")   # later half first
     lo = events.filter("seq % 2 = 0")
-    merge_lww_mor(table, hi, ["repo", "path"], seq_col="seq", op_col="op")
-    compact(table)                       # fold BEFORE the low seqs arrive
-    merge_lww_mor(table, lo, ["repo", "path"], seq_col="seq", op_col="op")
-    got = {(r["repo"], r["path"]): (r["commit"], r["lang"], r["content"])
-           for r in read_current(table).collect()}
-    assert got == want
-    compact(table)
-    stored_rows = table.read()
-    assert stored_rows.count() == (
-        stored_rows.select("repo", "path").distinct().count())
-    got2 = {(r["repo"], r["path"]): (r["commit"], r["lang"], r["content"])
-            for r in read_current(table).collect()}
-    assert got2 == want
+    for path, on_path in COMPACT_PATHS.items():
+        table = LakeTable.create(
+            spark, os.path.join(tmp_table_dir, path),
+            target_schema_for(default_registry(), 1, "cell"),
+            ["repo", "path"], n_buckets=4,
+            properties={"merge_dialect": "cell"}, key_cols=["repo", "path"])
+        merge_lww_mor(table, hi, ["repo", "path"], seq_col="seq",
+                      op_col="op")
+        with on_path():
+            compact(table)               # fold BEFORE the low seqs arrive
+        merge_lww_mor(table, lo, ["repo", "path"], seq_col="seq",
+                      op_col="op")
+        got = {(r["repo"], r["path"]): (r["commit"], r["lang"], r["content"])
+               for r in read_current(table).collect()}
+        assert got == want
+        with on_path():
+            snap = compact(table)
+        assert snap.properties["compact_path"] == path
+        stored_rows = table.read()
+        assert stored_rows.count() == (
+            stored_rows.select("repo", "path").distinct().count())
+        got2 = {(r["repo"], r["path"]): (r["commit"], r["lang"], r["content"])
+                for r in read_current(table).collect()}
+        assert got2 == want
 
 
 def test_streaming_cell_dialect_out_of_order_epochs(spark, tmp_table_dir):

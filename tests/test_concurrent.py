@@ -25,6 +25,7 @@ from gobblin_spark.lakehouse.merge import (
 from gobblin_spark.sources import generate_change_events
 
 from tests.oracle import assert_matches_oracle
+from tests.test_merge import COMPACT_PATHS
 
 KEYS = ["repo", "path"]
 
@@ -72,71 +73,82 @@ def test_compact_retries_after_losing_to_ingest(spark, tmp_table_dir):
     """Compactor reads snapshot v, an ingest delta commit lands v+1, the
     compactor's commit conflicts: buckets untouched by the ingest rebase
     metadata-only, the ingest's buckets re-fold, and the final state is
-    sha-equal to serial execution (ingest fully visible, zero dups)."""
-    d = tmp_table_dir
-    ev = _events(spark, d)
-    hi = 2000
-    t = _mor_table(spark, d, ev, hi)
-    v_before = t.current_version()
+    sha-equal to serial execution (ingest fully visible, zero dups) — on
+    both compaction paths."""
+    for path, on_path in COMPACT_PATHS.items():
+        d = os.path.join(tmp_table_dir, path)
+        ev = _events(spark, d)
+        hi = 2000
+        t = _mor_table(spark, d, ev, hi)
+        v_before = t.current_version()
 
-    late = _data(ev).filter(F.col("seq") > hi)
-    assert late.count() > 0
-    t2 = LakeTable(spark, d + "/t")  # the concurrent ingest writer
-    counter = {"attempts": 0}
-    _race_commit(
-        t, lambda: merge_lww_mor(t2, late, KEYS, seq_col="seq"), counter)
+        late = _data(ev).filter(F.col("seq") > hi)
+        assert late.count() > 0
+        t2 = LakeTable(spark, d + "/t")  # the concurrent ingest writer
+        counter = {"attempts": 0}
+        _race_commit(
+            t, lambda: merge_lww_mor(t2, late, KEYS, seq_col="seq"), counter)
 
-    snap = compact(t)
-    assert counter["attempts"] >= 2, "first commit must have conflicted"
-    assert int(snap.properties.get("mor_deltas", 0)) == 0
-    # BOTH writers landed: the ingest's version and ≥1 compaction commit
-    assert t.current_version() > v_before + 1
+        with on_path():
+            snap = compact(t)
+        assert snap.properties["compact_path"] == path
+        assert counter["attempts"] >= 2, "first commit must have conflicted"
+        assert int(snap.properties.get("mor_deltas", 0)) == 0
+        # BOTH writers landed: the ingest's version and ≥1 compaction commit
+        assert t.current_version() > v_before + 1
 
-    got = read_current(LakeTable(spark, d + "/t"))
-    assert_matches_oracle(got, _data(ev))  # == serial execution
-    # one row per key physically (fully folded)
-    raw = LakeTable(spark, d + "/t").read()
-    assert raw.count() == raw.select(*KEYS).distinct().count()
-    # discarded conflicting rewrites leave no orphans behind
-    assert LakeTable(spark, d + "/t").vacuum() == 0
+        got = read_current(LakeTable(spark, d + "/t"))
+        assert_matches_oracle(got, _data(ev))  # == serial execution
+        # one row per key physically (fully folded)
+        raw = LakeTable(spark, d + "/t").read()
+        assert raw.count() == raw.select(*KEYS).distinct().count()
+        # discarded conflicting rewrites leave no orphans behind
+        assert LakeTable(spark, d + "/t").vacuum() == 0
 
 
 def test_compact_rebases_metadata_only_when_inputs_untouched(
         spark, tmp_table_dir):
     """The winner is a commit that touches NO compacted bucket's inputs
     (a metadata-only property commit): every rewritten bucket must land
-    via the metadata-only rebase — exactly one data rewrite, no re-fold."""
-    d = tmp_table_dir
-    ev = _events(spark, d, n=2000)
-    t = _mor_table(spark, d, ev, 2**62)
+    via the metadata-only rebase — exactly one data rewrite, no re-fold —
+    on both compaction paths."""
+    for path, on_path in COMPACT_PATHS.items():
+        d = os.path.join(tmp_table_dir, path)
+        ev = _events(spark, d, n=2000)
+        t = _mor_table(spark, d, ev, 2**62)
 
-    writes = {"n": 0}
-    real_write = LakeTable.write_data_files
+        # data rewrites by either writer: Spark's and the driver-side one
+        writes = {"n": 0}
 
-    def counting_write(self, *a, **kw):
-        writes["n"] += 1
-        return real_write(self, *a, **kw)
+        def counting(write):
+            def counted(*a, **kw):
+                writes["n"] += 1
+                return write(*a, **kw)
+            return counted
 
-    t.write_data_files = lambda *a, **kw: counting_write(t, *a, **kw)
+        t.write_data_files = counting(t.write_data_files)
+        t.write_local_files = counting(t.write_local_files)
 
-    t2 = LakeTable(spark, d + "/t")
-    counter = {"attempts": 0}
+        t2 = LakeTable(spark, d + "/t")
+        counter = {"attempts": 0}
 
-    def metadata_winner():
-        s = t2.snapshot()
-        t2.commit(keep_files=s.files, add_files=[],
-                  properties={"note": "winner"},
-                  expected_version=s.version)
+        def metadata_winner():
+            s = t2.snapshot()
+            t2.commit(keep_files=s.files, add_files=[],
+                      properties={"note": "winner"},
+                      expected_version=s.version)
 
-    _race_commit(t, metadata_winner, counter)
-    snap = compact(t)
-    assert counter["attempts"] >= 2
-    assert writes["n"] == 1, "untouched inputs must NOT be re-folded"
-    assert int(snap.properties.get("mor_deltas", 0)) == 0
-    assert snap.properties.get("note") == "winner"  # rebased ON TOP
-    assert_matches_oracle(read_current(LakeTable(spark, d + "/t")),
-                          _data(ev))
-    assert LakeTable(spark, d + "/t").vacuum() == 0
+        _race_commit(t, metadata_winner, counter)
+        with on_path():
+            snap = compact(t)
+        assert counter["attempts"] >= 2
+        assert writes["n"] == 1, "untouched inputs must NOT be re-folded"
+        assert int(snap.properties.get("mor_deltas", 0)) == 0
+        assert snap.properties.get("note") == "winner"  # rebased ON TOP
+        assert snap.properties["compact_path"] == path
+        assert_matches_oracle(read_current(LakeTable(spark, d + "/t")),
+                              _data(ev))
+        assert LakeTable(spark, d + "/t").vacuum() == 0
 
 
 def test_gc_tombstones_retries_after_concurrent_commit(

@@ -6,6 +6,8 @@ out-of-order/duplicate/tombstone cases the reference only solves by full
 recompaction (MRCompactor.java:147-157).
 """
 
+import contextlib
+
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql.types import (
@@ -16,7 +18,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from gobblin_spark.lakehouse import LakeTable, merge_lww
+from gobblin_spark.lakehouse import LakeTable, merge, merge_lww
 from gobblin_spark.lakehouse.merge import gc_tombstones, lww_reduce, read_current
 from gobblin_spark.sources import generate_change_events
 
@@ -49,6 +51,23 @@ def new_table(spark, d):
 
 def data_events(events):
     return events.filter(F.col("op").isin("I", "U", "D")).drop("version")
+
+
+@contextlib.contextmanager
+def distributed_compaction():
+    """compact on its Spark path: a bound of -1 rows disables the
+    driver-side fold (merge.LOCAL_COMPACT_MAX_ROWS)."""
+    prev = merge.LOCAL_COMPACT_MAX_ROWS
+    merge.LOCAL_COMPACT_MAX_ROWS = -1
+    try:
+        yield
+    finally:
+        merge.LOCAL_COMPACT_MAX_ROWS = prev
+
+
+# each compaction path, with the context that makes compact take it
+COMPACT_PATHS = {"local": contextlib.nullcontext,
+                 "distributed": distributed_compaction}
 
 
 def test_lww_reduce_basic(spark):
@@ -238,49 +257,55 @@ def test_crash_mid_compaction_leaves_table_readable(spark, tmp_table_dir,
                                                     monkeypatch):
     """A crash AFTER compaction wrote its rewrite files but BEFORE the
     manifest publish must leave readers on the old snapshot, the orphans
-    vacuumable, and a re-run compaction convergent."""
+    vacuumable, and a re-run compaction convergent — on both compaction
+    paths."""
     from gobblin_spark.lakehouse.merge import compact, merge_lww_mor, read_current
     from gobblin_spark.lakehouse.table import LakeTable
 
     ev = make_events(spark, 1200, dup_frac=0.05, delete_frac=0.05,
                      ooo_window=100)
-    t = new_table(spark, tmp_table_dir + "/t")
     n = ev.count()
     step = n // 2 + 1
-    for lo in range(0, n, step):
-        batch = data_events(ev).filter(
-            (F.col("seq") >= lo) & (F.col("seq") < lo + step)
-        )
-        merge_lww_mor(t, batch, KEYS, seq_col="seq", op_col="op")
+    for path, on_path in COMPACT_PATHS.items():
+        t = new_table(spark, f"{tmp_table_dir}/{path}")
+        for lo in range(0, n, step):
+            batch = data_events(ev).filter(
+                (F.col("seq") >= lo) & (F.col("seq") < lo + step)
+            )
+            merge_lww_mor(t, batch, KEYS, seq_col="seq", op_col="op")
 
-    before = {(r["repo"], r["path"], r["commit"])
-              for r in read_current(t).collect()}
-    v_before = t.snapshot().version
+        before = {(r["repo"], r["path"], r["commit"])
+                  for r in read_current(t).collect()}
+        v_before = t.snapshot().version
 
-    real_publish = LakeTable._publish_manifest
+        real_publish = LakeTable._publish_manifest
 
-    def boom(self, snap):
-        raise RuntimeError("simulated crash before manifest publish")
+        def boom(self, snap):
+            raise RuntimeError("simulated crash before manifest publish")
 
-    monkeypatch.setattr(LakeTable, "_publish_manifest", boom)
-    try:
-        compact(t)
-        assert False, "compact should have crashed"
-    except RuntimeError:
-        pass
-    monkeypatch.setattr(LakeTable, "_publish_manifest", real_publish)
+        monkeypatch.setattr(LakeTable, "_publish_manifest", boom)
+        try:
+            with on_path():
+                compact(t)
+            assert False, "compact should have crashed"
+        except RuntimeError:
+            pass
+        monkeypatch.setattr(LakeTable, "_publish_manifest", real_publish)
 
-    # table still serves the pre-crash snapshot
-    assert t.snapshot().version == v_before
-    assert {(r["repo"], r["path"], r["commit"])
-            for r in read_current(t).collect()} == before
-    # orphaned rewrite files are vacuumable, then compaction converges
-    removed = t.vacuum()
-    assert removed > 0
-    compact(t)
-    assert {(r["repo"], r["path"], r["commit"])
-            for r in read_current(t).collect()} == before
-    assert int(t.snapshot().properties.get("mor_deltas", 1)) == 0
+        # table still serves the pre-crash snapshot
+        assert t.snapshot().version == v_before
+        assert {(r["repo"], r["path"], r["commit"])
+                for r in read_current(t).collect()} == before
+        # orphaned rewrite files are vacuumable, then compaction converges
+        removed = t.vacuum()
+        assert removed > 0
+        with on_path():
+            compact(t)
+        assert {(r["repo"], r["path"], r["commit"])
+                for r in read_current(t).collect()} == before
+        props = t.snapshot().properties
+        assert int(props.get("mor_deltas", 1)) == 0
+        assert props["compact_path"] == path
 
 
 def test_lww_patch_reduce_column_granular_semantics(spark):
@@ -445,22 +470,26 @@ def test_key_bounds_skip_mor_delta_files(spark, tmp_table_dir):
 
 def test_compaction_sorts_by_key_and_keeps_bounds(spark, tmp_table_dir):
     """Compaction writes key-sorted files (narrow parquet row-group stats)
-    and the rewritten base files carry key_bounds; results unchanged."""
+    and the rewritten base files carry key_bounds; results unchanged — on
+    both compaction paths."""
     from gobblin_spark.lakehouse.merge import compact, merge_lww_mor
 
     ev = make_events(spark, 2000)
-    t = new_table(spark, tmp_table_dir + "/t")
-    merge_lww_mor(t, data_events(ev), KEYS, seq_col="seq")
-    compact(t)
+    for path, on_path in COMPACT_PATHS.items():
+        t = new_table(spark, f"{tmp_table_dir}/{path}")
+        merge_lww_mor(t, data_events(ev), KEYS, seq_col="seq")
+        with on_path():
+            compact(t)
 
-    snap = t.snapshot()
-    assert all(f.key_bounds for f in snap.files)
-    # rows inside each compacted file are sorted by (repo, path)
-    f0 = max(snap.files, key=lambda f: f.rows)
-    rows = [(r["repo"], r["path"]) for r in
-            spark.read.parquet(t.root + "/" + f0.path).select(*KEYS).collect()]
-    assert rows == sorted(rows)
-    assert_matches_oracle(read_current(t), data_events(ev))
+        snap = t.snapshot()
+        assert snap.properties["compact_path"] == path
+        assert all(f.key_bounds for f in snap.files)
+        # rows inside each compacted file are sorted by (repo, path)
+        f0 = max(snap.files, key=lambda f: f.rows)
+        rows = [(r["repo"], r["path"]) for r in spark.read.parquet(
+            t.root + "/" + f0.path).select(*KEYS).collect()]
+        assert rows == sorted(rows)
+        assert_matches_oracle(read_current(t), data_events(ev))
 
 
 def test_point_lookup_legacy_manifest_without_key_cols(
@@ -593,6 +622,9 @@ def test_compact_splits_giant_bucket(spark, tmp_table_dir):
 
     want = sorted(map(tuple, read_current(t).collect()))
     snap = compact_fn(t, max_rows_per_file=200)
+    # a split bucket takes the Spark path
+    assert snap.properties["compact_path"] == "distributed"
+    assert snap.properties["compact_reason"] == "split"
     per_bucket = {}
     for f in snap.files:
         per_bucket.setdefault(f.bucket, []).append(f)
@@ -621,3 +653,39 @@ def test_compact_splits_giant_bucket(spark, tmp_table_dir):
         per_bucket2.setdefault(f.bucket, []).append(f)
     assert all(len(fl) == 1 for fl in per_bucket2.values())
     assert sorted(map(tuple, read_current(t).collect())) == want
+
+
+def test_file_uri_table_root(spark, tmp_table_dir):
+    """A table created at a ``file://`` root, with a Hadoop commit plane,
+    records root-relative data paths from both writers, so the Spark read,
+    compaction, point lookups, changelog reads and vacuum all find its
+    files."""
+    from gobblin_spark.fsio import HadoopFs
+    from gobblin_spark.lakehouse.merge import (
+        compact, merge_lww_mor, point_lookup, table_changes,
+    )
+
+    t = LakeTable.create(spark, "file://" + tmp_table_dir + "/t",
+                         TARGET_SCHEMA, KEYS, n_buckets=8,
+                         fs=HadoopFs(spark, uri="file:///"))
+    assert t.local_root == tmp_table_dir + "/t"
+    d = data_events(make_events(spark, 600))
+    hi = int(d.agg(F.max("seq")).first()[0])
+    merge_lww_mor(t, d.filter(F.col("seq") <= hi // 2), KEYS)
+    v1 = t.current_version()
+    merge_lww_mor(t, d.filter(F.col("seq") > hi // 2), KEYS)
+    v2 = t.current_version()
+    assert all(f.path.startswith("data/") for f in t.snapshot().files)
+    assert_matches_oracle(read_current(t), d)
+
+    assert compact(t).properties["compact_path"] == "local"
+    assert all(f.path.startswith("data/") for f in t.snapshot().files)
+    assert_matches_oracle(read_current(t), d)
+    live = read_current(t).select(*KEYS).first()
+    key = {"repo": live["repo"], "path": live["path"]}
+    assert point_lookup(t, key).count() == 1
+    assert point_lookup(t, key, prefer_local=False).count() == 1
+    assert table_changes(t, v1, v2).count() > 0
+    assert table_changes(t, v2).count() == 0  # compaction changes nothing
+    assert t.vacuum() == 0  # every file on disk is referenced
+    assert_matches_oracle(read_current(t), d)

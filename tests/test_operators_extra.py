@@ -226,15 +226,12 @@ def test_untested_converters_roundtrip(spark):
 def test_compact_with_gc_horizon_drops_dead_tombstones(spark, tmp_table_dir):
     """GC folded into the compaction rewrite: tombstones at or below the
     horizon vanish, younger tombstones survive and still block late
-    out-of-order updates (no resurrection)."""
+    out-of-order updates (no resurrection) — on both compaction paths."""
     from gobblin_spark.lakehouse.merge import compact, merge_lww_mor
 
+    from tests.test_merge import COMPACT_PATHS
+
     reg = default_registry()
-    table = LakeTable.create(
-        spark, os.path.join(tmp_table_dir, "t"),
-        target_schema_for(reg, 1), KEYS, n_buckets=4,
-        properties={"registry_version": 1},
-    )
     schema = ("seq long, op string, repo string, path string, commit string,"
               " lang string, content string")
     b1 = spark.createDataFrame([
@@ -245,19 +242,29 @@ def test_compact_with_gc_horizon_drops_dead_tombstones(spark, tmp_table_dir):
     b2 = spark.createDataFrame([
         (9, "D", "r2", "a", None, None, None),     # young tombstone (>5)
     ], schema)
-    merge_lww_mor(table, b1, KEYS, seq_col="seq", op_col="op")
-    merge_lww_mor(table, b2, KEYS, seq_col="seq", op_col="op")
-    snap = compact(table, gc_horizon_seq=5)
-    assert int(snap.properties["mor_deltas"]) == 0
-    tombs = (table.read().filter(F.col(DELETED_COL))
-             .select("repo", "path").collect())
-    assert [(t["repo"], t["path"]) for t in tombs] == [("r2", "a")]
-    # late out-of-order update BELOW the surviving tombstone's seq: blocked
-    late = spark.createDataFrame(
-        [(8, "U", "r2", "a", "c9", "py", "late")], schema)
-    merge_lww_mor(table, late, KEYS, seq_col="seq", op_col="op")
-    vis = read_current(table).select("repo", "path", "content").orderBy("path")
-    assert [tuple(r) for r in vis.collect()] == [("r1", "b", "x2")]
+    for path, on_path in COMPACT_PATHS.items():
+        table = LakeTable.create(
+            spark, os.path.join(tmp_table_dir, path),
+            target_schema_for(reg, 1), KEYS, n_buckets=4,
+            properties={"registry_version": 1},
+        )
+        merge_lww_mor(table, b1, KEYS, seq_col="seq", op_col="op")
+        merge_lww_mor(table, b2, KEYS, seq_col="seq", op_col="op")
+        with on_path():
+            snap = compact(table, gc_horizon_seq=5)
+        assert snap.properties["compact_path"] == path
+        assert int(snap.properties["mor_deltas"]) == 0
+        tombs = (table.read().filter(F.col(DELETED_COL))
+                 .select("repo", "path").collect())
+        assert [(t["repo"], t["path"]) for t in tombs] == [("r2", "a")]
+        # late out-of-order update BELOW the surviving tombstone's seq:
+        # blocked
+        late = spark.createDataFrame(
+            [(8, "U", "r2", "a", "c9", "py", "late")], schema)
+        merge_lww_mor(table, late, KEYS, seq_col="seq", op_col="op")
+        vis = (read_current(table).select("repo", "path", "content")
+               .orderBy("path"))
+        assert [tuple(r) for r in vis.collect()] == [("r1", "b", "x2")]
 
 
 def test_mor_pre_reduce_shrinks_delta_same_state(spark, tmp_table_dir):

@@ -138,34 +138,41 @@ def test_patch_dialect_engine_convergence(spark, tmp_table_dir, merge_mode):
 
 def test_patch_dialect_compaction_folds_and_gc(spark, tmp_table_dir):
     """After compaction the table holds at most one row per key, values
-    still match the oracle, and gc_horizon drops dead tombstones."""
+    still match the oracle, and gc_horizon drops dead tombstones — on both
+    compaction paths."""
     from gobblin_spark.lakehouse.merge import compact
+
+    from tests.test_merge import COMPACT_PATHS
 
     rows = patch_stream()
     events = spark.createDataFrame(rows, EVENT_SCHEMA)
-    eng = CdcEngine(
-        spark, events,
-        table_root=os.path.join(tmp_table_dir, "table"),
-        state_root=os.path.join(tmp_table_dir, "state"),
-        max_records_per_batch=30,
-        n_buckets=4,
-        merge_mode="mor",
-        merge_dialect="cell",
-        compact_every=None,
-        compact_delta_ratio=None,
-    )
-    eng.run_until_caught_up()
-    t = eng.table
     max_seq = max(r[0] for r in rows)
-    compact(t, gc_horizon_seq=max_seq)
-    stored = t.read()
-    # one row per key after the fold
-    assert stored.count() == stored.select("repo", "path").distinct().count()
-    # tombstones at/below the horizon are gone
-    assert stored.filter("__deleted").count() == 0
-    got = {(r["repo"], r["path"]): (r["commit"], r["lang"], r["content"])
-           for r in read_current(t).collect()}
-    assert got == patch_oracle(rows)
+    for path, on_path in COMPACT_PATHS.items():
+        eng = CdcEngine(
+            spark, events,
+            table_root=os.path.join(tmp_table_dir, path, "table"),
+            state_root=os.path.join(tmp_table_dir, path, "state"),
+            max_records_per_batch=30,
+            n_buckets=4,
+            merge_mode="mor",
+            merge_dialect="cell",
+            compact_every=None,
+            compact_delta_ratio=None,
+        )
+        eng.run_until_caught_up()
+        t = eng.table
+        with on_path():
+            snap = compact(t, gc_horizon_seq=max_seq)
+        assert snap.properties["compact_path"] == path
+        stored = t.read()
+        # one row per key after the fold
+        assert stored.count() == (
+            stored.select("repo", "path").distinct().count())
+        # tombstones at/below the horizon are gone
+        assert stored.filter("__deleted").count() == 0
+        got = {(r["repo"], r["path"]): (r["commit"], r["lang"], r["content"])
+               for r in read_current(t).collect()}
+        assert got == patch_oracle(rows)
 
 
 def test_patch_dialect_across_schema_evolution(spark, tmp_table_dir):
@@ -309,6 +316,9 @@ def test_column_table_migrates_at_compact(spark, tmp_table_dir):
 
     compact(t)
     assert t.snapshot().merge_dialect == "cell"
+    # the one-time migration rewrites the table on Spark
+    assert t.snapshot().properties["compact_path"] == "distributed"
+    assert t.snapshot().properties["compact_reason"] == "migration"
     assert visible(t) == patch_oracle(rows)
 
     late = [(51, 2, "U", "repo_1", "src/f10.txt", None, None, "late", 1, 0, 4),

@@ -13,6 +13,7 @@ import pyspark.sql.functions as F
 
 from gobblin_spark.lakehouse import LakeTable
 from gobblin_spark.lakehouse.merge import (
+    compact,
     merge_lww,
     merge_lww_mor,
     point_lookup,
@@ -91,6 +92,7 @@ def _parity(spark, t, keys_live, keys_deleted):
     for k in keys_live:
         local = point_lookup_local(t, {"repo": k[0], "path": k[1]})
         assert local is not FALLBACK and local is not None
+        [local] = local.to_pylist()  # the visible row, as one Arrow row
         assert local["commit"] == want[k]
         spark_rows = point_lookup(
             t, {"repo": k[0], "path": k[1]}, prefer_local=False).collect()
@@ -249,7 +251,7 @@ def test_local_lookup_prunes_by_bounds_before_gates(spark, tmp_table_dir):
     assert len(in_bucket) == 4
 
     got = point_lookup_local(t, key, max_candidate_files=2)
-    assert got is not FALLBACK and got["content"] == "v1"
+    assert got is not FALLBACK and got["content"].to_pylist() == ["v1"]
     # the deltas' files at an older schema version: still answered locally
     drift = dataclasses.replace(snap, files=[
         f if f.bucket != bucket or f.key_bounds["repo"][0] == "a"
@@ -257,7 +259,7 @@ def test_local_lookup_prunes_by_bounds_before_gates(spark, tmp_table_dir):
         for f in snap.files])
     t.snapshot = lambda v=None: drift
     got = point_lookup_local(t, key, max_candidate_files=2)
-    assert got is not FALLBACK and got["content"] == "v1"
+    assert got is not FALLBACK and got["content"].to_pylist() == ["v1"]
     # ... while a key inside a drifted file's bounds does fall back
     z = next(f for f in drift.files
              if f.bucket == bucket and f.key_bounds["repo"][0] != "a")
@@ -374,3 +376,16 @@ def test_local_lookup_parity_typed_columns(spark, tmp_table_dir):
                      .first())[1:] == full
         assert tuple(point_lookup(t, {"id": b}).first())[1:] == nulls
         assert point_lookup(t, {"id": gone}, prefer_local=False).count() == 0
+
+        # the driver-side compaction writes every type so that both lookup
+        # paths, and Spark's own read, answer as before it
+        before = sorted(map(repr, read_current(t).collect()))
+        assert compact(t).properties["compact_path"] == "local"
+        for k in (a, b, gone, absent):
+            local = point_lookup(t, {"id": k}).collect()
+            dist = point_lookup(t, {"id": k}, prefer_local=False).collect()
+            assert [r.asDict() for r in local] == \
+                [r.asDict() for r in dist], (key_field, k, "compacted")
+        assert sorted(map(repr, read_current(t).collect())) == before
+        assert tuple(point_lookup(t, {"id": a}, prefer_local=False)
+                     .first())[1:] == full

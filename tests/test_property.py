@@ -419,3 +419,171 @@ def test_column_migration_equals_patch_oracle(spark, tmp_path_factory,
     if late:
         merge_events(spark, t, late)
         assert visible(t) == patch_oracle(rows)
+
+
+FOLD_EVENT = st.tuples(
+    st.sampled_from(["g0", None]),                      # key column g
+    st.sampled_from(["k0", "k1", None]),                # key column k
+    st.integers(1, 6),                                  # seq (ties too)
+    st.sampled_from("UUD"),                             # op
+    st.booleans(),                                      # tombstone payload
+    st.one_of(st.none(), st.sampled_from(["x", "y"])),  # a
+    st.one_of(st.none(), st.integers(0, 3)),            # b
+)
+
+
+def _stored_rows(events, dialect: str) -> list[tuple]:
+    """Stored rows (g, k, a, b, __seq, __deleted[, __cells, __del_seq]) for
+    change events, as ``batch_to_stored`` shapes them. Rows sharing (key,
+    seq, op) are one event delivered again, so they are made identical: a
+    seq tie between different contents is undefined in every fold."""
+    canon: dict = {}
+    out = []
+    for g, k, seq, op, keep, a, b in events:
+        g, k, seq, op, keep, a, b = canon.setdefault(
+            (g, k, seq, op), (g, k, seq, op, keep, a, b))
+        dead = op == "D"
+        if dead and not keep:
+            a = b = None
+        row = (g, k, a, b, seq, dead)
+        if dialect == "cell":
+            cells = {} if dead else {c: seq for c, v in (("a", a), ("b", b))
+                                     if v is not None}
+            row += (cells, seq if dead else None)
+        out.append(row)
+    return out
+
+
+def _fold_schema(dialect: str):
+    from pyspark.sql.types import (BooleanType, LongType, MapType,
+                                   StringType, StructField, StructType)
+
+    fields = [StructField("g", StringType()), StructField("k", StringType()),
+              StructField("a", StringType()), StructField("b", LongType()),
+              StructField("__seq", LongType()),
+              StructField("__deleted", BooleanType())]
+    if dialect == "cell":
+        fields += [StructField("__cells", MapType(StringType(), LongType())),
+                   StructField("__del_seq", LongType())]
+    return StructType(fields)
+
+
+def _canon(rows) -> list[tuple]:
+    """Rows as sortable tuples, a cell map as its sorted entries (Spark
+    collects a map as a dict, pyarrow as a list of pairs)."""
+    out = []
+    for r in rows:
+        vals = r.values() if isinstance(r, dict) else tuple(r)
+        out.append(tuple(tuple(sorted(dict(v).items()))
+                         if isinstance(v, (dict, list)) else v
+                         for v in vals))
+    return sorted(out, key=repr)
+
+
+@pytest.mark.parametrize("dialect", ["row", "cell"])
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                 HealthCheck.too_slow])
+@given(events=st.lists(FOLD_EVENT, min_size=1, max_size=20),
+       split=st.integers(0, 20))
+def test_arrow_fold_equals_stored_reduce(spark, dialect, events, split):
+    """PROPERTY: the Arrow kernel (pointread.fold_keys) returns exactly the
+    rows of the distributed stored reduce, for both dialects — over
+    duplicates, equal seqs (a tombstone beats an upsert at its seq),
+    tombstones with and without payload, NULL payloads, null key columns,
+    and inputs whose first ``split`` rows were already folded."""
+    import types
+
+    from gobblin_spark.lakehouse.merge import stored_reduce
+    from gobblin_spark.lakehouse.pointread import fold_keys
+
+    keys = ["g", "k"]
+    schema = _fold_schema(dialect)
+    snap = types.SimpleNamespace(merge_dialect=dialect, merge_keys=keys,
+                                 schema=schema)
+    rows = _stored_rows(events, dialect)
+    folded = stored_reduce(snap, spark.createDataFrame(rows[:split], schema),
+                           keys)
+    df = folded.unionByName(spark.createDataFrame(rows[split:], schema))
+    want = _canon(stored_reduce(snap, df, keys).collect())
+    got = _canon(fold_keys(snap, [df.toArrow()]).to_pylist())
+    assert got == want
+
+
+@pytest.mark.parametrize("dialect", ["row", "cell"])
+@settings(max_examples=3, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture,
+                                 HealthCheck.too_slow])
+@given(
+    batches=st.lists(st.lists(CHANGES_EVENT, min_size=1, max_size=10),
+                     min_size=2, max_size=4),
+    seed=st.integers(0, 2**16),
+    gc=st.booleans(),
+)
+def test_local_compaction_equals_distributed(
+        spark, tmp_path_factory, dialect, batches, seed, gc):
+    """PROPERTY: over random MOR histories (out-of-order seqs, deletes,
+    NULL payloads, a mid-history compaction), with and without a
+    ``gc_horizon_seq``, the driver-side compaction and the Spark one leave
+    the same stored rows, ``table_fingerprint``, ``read_current`` and
+    ``table_changes`` across the compaction — and every DataFile the
+    driver-side writer recorded (rows, seq bounds, tombstones, key_bounds,
+    value blooms and bounds) equals what ``_index_written_files`` computes
+    over the same file."""
+    import os
+
+    from gobblin_spark.lakehouse import LakeTable
+    from gobblin_spark.lakehouse.merge import (
+        compact, merge_lww_mor, read_current, table_changes,
+        table_fingerprint,
+    )
+
+    from tests.test_merge import COMPACT_PATHS
+
+    keys = ["g", "k"]
+    rng = random.Random(seed)
+    seqs = list(range(1, sum(map(len, batches)) + 1))
+    rng.shuffle(seqs)
+    it = iter(seqs)
+    delivered = [[(next(it), op, f"g{k % 2}", f"k{k}", a, b)
+                  for k, op, a, b in batch] for batch in batches]
+    horizon = rng.choice(seqs) if gc else None
+    schema = "seq long, op string, g string, k string, a string, b long"
+    d = str(tmp_path_factory.mktemp("compactprop"))
+
+    tables = {}
+    for path, on_path in COMPACT_PATHS.items():
+        t = LakeTable.create(spark, f"{d}/{path}", _fold_schema(dialect),
+                             keys, n_buckets=2, stats_cols=["a", "b"],
+                             properties={"merge_dialect": dialect})
+        with on_path():
+            for i, batch in enumerate(delivered):
+                merge_lww_mor(t, spark.createDataFrame(batch, schema), keys)
+                if i == 0:
+                    compact(t)
+            v = t.current_version()
+            snap = compact(t, gc_horizon_seq=horizon)
+        assert snap.properties["compact_path"] == path
+        tables[path] = (t, v)
+
+    (loc, v), (dist, _) = tables["local"], tables["distributed"]
+    assert _canon(loc.read().collect()) == _canon(dist.read().collect())
+    fp = [table_fingerprint(t) for t in (loc, dist)]
+    assert fp[0] == fp[1]
+    assert (_canon(read_current(loc).collect())
+            == _canon(read_current(dist).collect()))
+    assert (_canon(table_changes(loc, v, v + 1).collect())
+            == _canon(table_changes(dist, v, v + 1).collect()))
+
+    snap = loc.snapshot()
+    added = [f for f in snap.files
+             if f.path not in {g.path for g in loc.snapshot(v).files}]
+    for write_id in {f.path.split("/")[1] for f in added}:
+        scanned = loc._index_written_files(
+            os.path.join(loc.root, "data", write_id), write_id,
+            snap.schema_version, "__seq", key_cols=snap.key_cols,
+            spec_n=snap.n_buckets, value_stats_cols=["a", "b"],
+            value_stats_m=int(snap.properties["value_stats_m"]))
+        mine = [f for f in added if f.path.split("/")[1] == write_id]
+        assert (sorted(scanned, key=lambda f: f.path)
+                == sorted(mine, key=lambda f: f.path))

@@ -112,9 +112,12 @@ def test_mor_deltas_and_compaction_migrate_to_new_spec(spark, tmp_table_dir):
     merge_lww(twin, de, KEYS)
     assert _fp(t) == _fp(twin)
 
-    # full compaction folds every mixed bucket group → single spec
+    # full compaction folds every mixed bucket group → single spec, on
+    # Spark: pre-rescale files regroup keys across buckets
     compact(t)
     snap = t.snapshot()
+    assert snap.properties["compact_path"] == "distributed"
+    assert snap.properties["compact_reason"] == "spec"
     assert {file_spec_n(f, snap) for f in snap.files} == {32}
     assert int(snap.properties.get("mor_deltas", 0)) == 0
     assert _fp(t) == _fp(twin)
