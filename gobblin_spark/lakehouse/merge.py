@@ -600,22 +600,24 @@ def compact(
     reference's standalone compaction job (MRCompactor). The fold runs on
     one of two paths, chosen per pass from manifest metadata alone:
 
-    - **driver** (``compact_path: "local"``): when the consumed files hold
-      at most ``LOCAL_COMPACT_MAX_ROWS`` rows, live on a local data plane,
-      all sit at the snapshot's schema version and bucket spec, the table
-      is unpartitioned and no ``max_rows_per_file`` split applies, they
-      are read with pyarrow, folded by the Arrow kernel the point and
-      changelog reads share (``pointread.fold_keys``) and written as one
-      key-sorted file per bucket by ``LakeTable.write_local_files``: no
-      Spark job at all;
+    - **driver** (``compact_path: "local"``): when the consumed files
+      total at most ``LOCAL_COMPACT_MAX_BYTES`` (a driver-memory cap), live
+      on a local data plane, all sit at the snapshot's schema version and
+      bucket spec, the table is unpartitioned and no ``max_rows_per_file``
+      split applies, they are read with pyarrow one bucket at a time,
+      folded by the Arrow kernel the point and changelog reads share
+      (``pointread.fold_keys``) and written as one key-sorted file per
+      bucket by ``LakeTable.write_local_files``: no Spark job at all;
     - **Spark** (``compact_path: "distributed"``, with ``compact_reason``
       naming the first condition that failed: ``remote``,
       ``partitioned``, ``schema_drift``, ``spec``, ``split`` or
       ``size``): one bucketed job whose shuffle by key is aligned with
       the storage layout.
 
-    Both record their path in the commit's properties; the commit, the
-    retry and everything below are the same for both.
+    Both record their path in the properties of the commit that rewrites
+    files, and only there: later commits, and a pass that rewrites
+    nothing, carry no ``compact_path``. The commit, the retry and
+    everything below are the same for both.
 
     ``gc_horizon_seq`` folds tombstone GC into the same rewrite: tombstones
     at or below the horizon (no event with smaller seq can still arrive —
@@ -781,24 +783,23 @@ def compact(
     raise last_exc  # type: ignore[misc]
 
 
-# Size bound of the driver-side compaction, in manifest rows of the
-# consumed files (pre-fold). Measured on a 4-thread host, rewrite only
-# (read, fold, write; the commit is the same), 8 buckets of the benchmark's
-# row shape, median of 3 alternating runs:
+# Driver-memory cap of the driver-side compaction, in manifest bytes (the
+# compressed parquet size) of all the files one pass consumes. The rewrite
+# holds one bucket at a time; its peak Arrow memory, measured on a 4-thread
+# host with pyarrow's pool high-water mark, 8 buckets:
 #
-#       rows    driver    Spark
-#     26,318   0.096 s  1.138 s
-#    105,091   0.312 s  1.664 s
-#    315,170   0.886 s  2.463 s
-#    630,123   1.750 s  3.718 s
-#  1,050,118   3.208 s  5.641 s
+#   row shape             consumed    largest bucket   peak Arrow
+#   benchmark (24-token)   28.9 MB           3.7 MB       27.8 MB
+#   wide (600-token)       86.5 MB          11.2 MB       76.9 MB
 #
-# The driver stays ahead to the largest size measured, so the break-even
-# lies above ~1M rows on this host (a cluster moves it down: the driver
-# side is one thread, Spark's scales with executors). The bound is half of
-# that, which also keeps the driver's Arrow copy of the input near 200 MB.
-# LOCAL_COMPACT_MAX_ROWS = -1 keeps every compaction on Spark.
-LOCAL_COMPACT_MAX_ROWS = 500_000
+# i.e. about 7x the largest bucket's bytes, so even a pass whose whole
+# input sits in one bucket stays near 470 MB of Arrow memory. The cap says
+# nothing about when the driver stops being faster than Spark: a sweep on
+# the benchmark's row shape (about 137 B per consumed row) found the
+# driver ahead up to the largest size tried, ~1M rows (~140 MB), and no
+# benchmark workload compacts above the cap.
+# LOCAL_COMPACT_MAX_BYTES = -1 keeps every compaction on Spark.
+LOCAL_COMPACT_MAX_BYTES = 64 << 20
 
 
 def _distributed_reason(
@@ -817,7 +818,7 @@ def _distributed_reason(
         return "spec"  # a rescale migration regroups keys across buckets
     if splits:
         return "split"
-    if sum(f.rows for f in consumed) > LOCAL_COMPACT_MAX_ROWS:
+    if sum(f.bytes for f in consumed) > LOCAL_COMPACT_MAX_BYTES:
         return "size"
     return None
 
@@ -828,26 +829,30 @@ def _compact_local(
     consumed: list,
     gc_horizon_seq: int | None,
 ) -> list:
-    """The driver-side compaction rewrite: each consumed bucket's files
-    read with pyarrow, folded by ``pointread.fold_keys`` (key-sorted
-    output), dead tombstones dropped at the horizon, one file per bucket."""
+    """The driver-side compaction rewrite, one bucket at a time so the
+    driver holds one bucket's rows: its files read with pyarrow, folded by
+    ``pointread.fold_keys`` (key-sorted output), dead tombstones dropped at
+    the horizon, written as one file."""
     import pyarrow.compute as pc
 
     from gobblin_spark.lakehouse.pointread import fold_keys, read_key_rows
 
-    rows = read_key_rows(table, consumed, snap.merge_keys, None)
     by_bucket: dict[int, list] = {}
     for f in consumed:
-        by_bucket.setdefault(f.bucket, []).append(rows[f.path])
-    parts = {}
-    for b, tables in by_bucket.items():
-        state = fold_keys(snap, tables)
-        if gc_horizon_seq is not None:
-            state = state.filter(pc.invert(pc.and_kleene(
-                state[DELETED_COL],
-                pc.less_equal(state[SEQ_COL], gc_horizon_seq))))
-        parts[b] = state
-    return table.write_local_files(snap, parts, seq_col=SEQ_COL)
+        by_bucket.setdefault(f.bucket, []).append(f)
+
+    def fold(files):
+        rows = read_key_rows(table, files, snap.merge_keys, None)
+        state = fold_keys(snap, list(rows.values()))
+        if gc_horizon_seq is None:
+            return state
+        return state.filter(pc.invert(pc.and_kleene(
+            state[DELETED_COL],
+            pc.less_equal(state[SEQ_COL], gc_horizon_seq))))
+
+    return table.write_local_files(
+        snap, ((b, fold(files)) for b, files in sorted(by_bucket.items())),
+        seq_col=SEQ_COL)
 
 
 def _migrate_column_table(

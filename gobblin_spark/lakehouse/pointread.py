@@ -219,10 +219,14 @@ def read_key_rows(
     every file at the snapshot's schema version."""
     import pyarrow.parquet as pq
 
-    root = table.local_root
+    def open_file(f):
+        # Spark writes timestamps as INT96; read as nanoseconds they would
+        # overflow outside 1677-2262 (a 9999-12-31 sentinel, say)
+        return pq.ParquetFile(os.path.join(table.local_root, f.path),
+                              coerce_int96_timestamp_unit="us")
+
     if wanted is None:
-        return {f.path: pq.ParquetFile(os.path.join(root, f.path)).read()
-                for f in files}
+        return {f.path: open_file(f).read() for f in files}
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -238,7 +242,7 @@ def read_key_rows(
     for f in files:
         if not _may_hold(values, (f.key_bounds or {}).get):
             continue
-        pf = pq.ParquetFile(os.path.join(root, f.path))
+        pf = open_file(f)
         md = pf.metadata
         idx_of = {c: i for i, c in enumerate(pf.schema_arrow.names)}
         groups = []
@@ -330,15 +334,16 @@ def fold_keys(snap: Snapshot, tables: list):
     """LWW-fold stored rows — pyarrow Tables read from files at the
     snapshot's schema version — per merge key, with the snapshot's
     dialect: one row per key, in key order, holding exactly the stored
-    state ``stored_reduce`` outputs. The tables are first cast to the
-    snapshot's Arrow schema: Spark writes timestamps as INT96 (read back as
-    nanoseconds), the driver-side writer as microseconds."""
+    state ``stored_reduce`` outputs. A table not already in the
+    snapshot's Arrow schema is cast to it first (Spark's INT96 timestamps
+    read back without a time zone, the driver-side writer's with UTC)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     schema = to_arrow_schema(snap.schema)
     table = pa.concat_tables(
-        [t.select(schema.names).cast(schema) for t in tables])
+        [t if t.schema.equals(schema) else t.select(schema.names).cast(schema)
+         for t in tables]).replace_schema_metadata()
     fold = _fold_cell if snap.merge_dialect == "cell" else _fold_row
     return fold(table, snap.merge_keys) if table.num_rows else table
 

@@ -403,6 +403,17 @@ def bucket_expr(bucket_cols: list[str], n_buckets: int):
     return F.expr(f"CAST(pmod(xxhash64({cols}), {int(n_buckets)}) AS INT)")
 
 
+# Snapshot properties that describe the commit that wrote them, not the
+# table: compaction's decision trace. A later commit does not inherit them.
+_PER_COMMIT_PROPS = ("compact_path", "compact_reason")
+
+
+def _inherited(properties: dict[str, Any]) -> dict[str, Any]:
+    """The properties a new commit carries forward from ``properties``."""
+    return {k: v for k, v in properties.items()
+            if k not in _PER_COMMIT_PROPS}
+
+
 def local_frame(spark: SparkSession, schema: StructType,
                 rows) -> DataFrame:
     """A DataFrame over driver-held ``rows``: a pyarrow Table, or dicts
@@ -794,7 +805,7 @@ class LakeTable:
             raise ConcurrentCommitError(
                 f"expected v{expected_version}, table is at v{base.version}"
             )
-        props = dict(base.properties)
+        props = _inherited(base.properties)
         props.update(properties or {})
         keep = list(keep_files)
         add = list(add_files)
@@ -1084,15 +1095,17 @@ class LakeTable:
         ]
 
     def write_local_files(
-        self, snap: Snapshot, parts: dict[int, Any],
+        self, snap: Snapshot, parts: Iterable[tuple[int, Any]],
         seq_col: str | None = None,
     ) -> list[DataFile]:
         """Driver-side twin of ``write_data_files`` for a small rewrite on a
         local data plane (``local_root``): one parquet file per non-empty
         bucket from a pyarrow Table already in the snapshot's stored shape
-        and key order (``parts``: bucket → table), under the usual
-        ``data/<write-id>/__bucket=<k>/`` layout, at the snapshot's schema
-        version and bucket spec. NOT yet visible — commit separately.
+        and key order (``parts``: (bucket, table) pairs, consumed one at a
+        time, so a generator bounds the driver to one bucket's rows), under
+        the usual ``data/<write-id>/__bucket=<k>/`` layout, at the
+        snapshot's schema version and bucket spec. NOT yet visible —
+        commit separately.
 
         Each DataFile is built from the in-memory table: no listing and no
         stats re-scan. The codec is the session's
@@ -1115,7 +1128,7 @@ class LakeTable:
         m = int(snap.properties.get("value_stats_m", 8192))
         write_id = uuid.uuid4().hex
         out: list[DataFile] = []
-        for b, t in sorted(parts.items()):
+        for b, t in parts:
             if not t.num_rows:
                 continue
             rel = os.path.join(_DATA, write_id, f"__bucket={b}",
@@ -1743,7 +1756,7 @@ class LakeTable:
         cur = self.snapshot()
         if to_version == cur.version:
             return cur
-        props = dict(target.properties)
+        props = _inherited(target.properties)
         props["rollback_to"] = to_version
         props["rollback_from"] = cur.version
         snap = Snapshot(

@@ -55,14 +55,14 @@ def data_events(events):
 
 @contextlib.contextmanager
 def distributed_compaction():
-    """compact on its Spark path: a bound of -1 rows disables the
-    driver-side fold (merge.LOCAL_COMPACT_MAX_ROWS)."""
-    prev = merge.LOCAL_COMPACT_MAX_ROWS
-    merge.LOCAL_COMPACT_MAX_ROWS = -1
+    """compact on its Spark path: a bound of -1 bytes disables the
+    driver-side fold (merge.LOCAL_COMPACT_MAX_BYTES)."""
+    prev = merge.LOCAL_COMPACT_MAX_BYTES
+    merge.LOCAL_COMPACT_MAX_BYTES = -1
     try:
         yield
     finally:
-        merge.LOCAL_COMPACT_MAX_ROWS = prev
+        merge.LOCAL_COMPACT_MAX_BYTES = prev
 
 
 # each compaction path, with the context that makes compact take it
@@ -645,9 +645,19 @@ def test_compact_splits_giant_bucket(spark, tmp_table_dir):
     assert len(rows) == 1
     assert [r.asDict() for r in rows] == [r.asDict() for r in rows2]
 
-    # a later compaction folds split files back together when under cap
+    # the trace belongs to the compaction's commit: neither the next
+    # ingest nor a pass that rewrites nothing reports a compaction
     merge_lww_mor(t, d.limit(50), KEYS)
+    assert "compact_path" not in t.snapshot().properties
+    noop = compact_fn(t, buckets=set())
+    assert noop.version == t.current_version()
+    assert "compact_path" not in noop.properties
+    assert "compact_reason" not in noop.properties
+
+    # a later compaction folds split files back together when under cap
     snap2 = compact_fn(t)
+    assert snap2.properties["compact_path"] == "local"
+    assert snap2.properties["compact_reason"] is None
     per_bucket2 = {}
     for f in snap2.files:
         per_bucket2.setdefault(f.bucket, []).append(f)

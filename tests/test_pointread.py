@@ -321,7 +321,9 @@ def test_local_lookup_parity_typed_columns(spark, tmp_table_dir):
     read does: a full row, an all-null row and an absent key answer the
     same through the local and the prefer_local=False path — and an
     integer-keyed table routes the distributed path to the key's bucket
-    (the key hashes at its stored int width, as the data was bucketed)."""
+    (the key hashes at its stored int width, as the data was bucketed).
+    Timestamps outside the nanosecond range (a 9999-12-31 sentinel, a date
+    before 1677) survive the driver-side read and compaction."""
     import datetime
     from decimal import Decimal
 
@@ -345,35 +347,43 @@ def test_local_lookup_parity_typed_columns(spark, tmp_table_dir):
             datetime.date(2024, 3, 1), Decimal("123456789.125"),
             b"\x00\xffbin", ["x", None, "z"])
     nulls = (None,) * len(payload)
+    # Spark stores these as INT96; as nanoseconds they would overflow
+    end, early = (full[:3] + (datetime.datetime(*ts),) + full[4:]
+                  for ts in ((9999, 12, 31, 23, 59, 59, 999999),
+                             (1600, 6, 15, 8, 0, 0, 1)))
     meta = [StructField("__seq", LongType()),
             StructField("__deleted", BooleanType())]
     batch_meta = [StructField("seq", LongType()), StructField("op", StringType())]
 
     for key_field, keys in (
-            (StructField("id", StringType()), ["full", "nulls", "gone"]),
-            (StructField("id", IntegerType()), [3, 11, 42])):
+            (StructField("id", StringType()),
+             ["full", "nulls", "gone", "end", "early"]),
+            (StructField("id", IntegerType()), [3, 11, 42, 5, 6])):
         root = f"{tmp_table_dir}/{key_field.dataType.typeName()}"
         t = LakeTable.create(
             spark, root, StructType([key_field] + payload + meta),
             ["id"], n_buckets=8)
         batch_schema = StructType(batch_meta + [key_field] + payload)
-        a, b, gone = keys
+        a, b, gone, far, old = keys
         # two MOR deltas: the full row's key is overwritten across files,
         # the deleted key's tombstone lands in the second delta
         merge_lww_mor(t, spark.createDataFrame(
-            [(1, "I", a, *nulls), (1, "I", b, *full), (1, "I", gone, *full)],
+            [(1, "I", a, *nulls), (1, "I", b, *full), (1, "I", gone, *full),
+             (1, "I", far, *end), (1, "I", old, *early)],
             batch_schema), ["id"], seq_col="seq")
         merge_lww_mor(t, spark.createDataFrame(
             [(2, "U", a, *full), (2, "U", b, *nulls), (2, "D", gone, *nulls)],
             batch_schema), ["id"], seq_col="seq")
         absent = "missing" if isinstance(a, str) else 99
-        for k in (a, b, gone, absent):
+        for k in (a, b, gone, far, old, absent):
             local = point_lookup(t, {"id": k}).collect()
             dist = point_lookup(t, {"id": k}, prefer_local=False).collect()
             assert [r.asDict() for r in local] == \
                 [r.asDict() for r in dist], (key_field, k)
         assert tuple(point_lookup(t, {"id": a}, prefer_local=False)
                      .first())[1:] == full
+        for k, row in ((far, end), (old, early)):
+            assert tuple(point_lookup(t, {"id": k}).first())[1:] == row
         assert tuple(point_lookup(t, {"id": b}).first())[1:] == nulls
         assert point_lookup(t, {"id": gone}, prefer_local=False).count() == 0
 
@@ -381,7 +391,7 @@ def test_local_lookup_parity_typed_columns(spark, tmp_table_dir):
         # paths, and Spark's own read, answer as before it
         before = sorted(map(repr, read_current(t).collect()))
         assert compact(t).properties["compact_path"] == "local"
-        for k in (a, b, gone, absent):
+        for k in (a, b, gone, far, old, absent):
             local = point_lookup(t, {"id": k}).collect()
             dist = point_lookup(t, {"id": k}, prefer_local=False).collect()
             assert [r.asDict() for r in local] == \
@@ -389,3 +399,5 @@ def test_local_lookup_parity_typed_columns(spark, tmp_table_dir):
         assert sorted(map(repr, read_current(t).collect())) == before
         assert tuple(point_lookup(t, {"id": a}, prefer_local=False)
                      .first())[1:] == full
+        for k, row in ((far, end), (old, early)):
+            assert tuple(point_lookup(t, {"id": k}).first())[1:] == row
