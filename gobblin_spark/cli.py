@@ -633,25 +633,19 @@ def cmd_delete(args) -> int:
     normal LWW merge of tombstones (crash-safe, changelog-visible).
     --dry-run counts the matching live keys without writing."""
     from gobblin_spark.lakehouse import LakeTable
-    from gobblin_spark.lakehouse.merge import delete_where, read_current
+    from gobblin_spark.lakehouse.merge import delete_matching, read_where
 
     _resolve_table(args)
     spark = _get_session(args)
     table = LakeTable(spark, args.table)
-    where, where_range = _parse_where(args.where)
-    if not where and not where_range:
-        raise SystemExit("delete requires at least one --where clause")
+    pred = _bind_where(args, table.snapshot(), "delete")
     if args.dry_run:
-        n = read_current(table, value_eq=where or None,
-                         value_range=where_range or None).count()
+        n = read_where(table, pred).count()
         print(json.dumps({"deleted": 0, "would_delete": n,
-                          "where": where, "where_range": where_range}))
+                          **pred.render()}))
         return 0
-    out = delete_where(table, where or None, seq=args.seq or None,
-                       range_predicate=where_range or None)
-    out["where"] = where
-    out["where_range"] = where_range or None
-    print(json.dumps(out))
+    out = delete_matching(table, pred, seq=args.seq or None)
+    print(json.dumps({**out, **pred.render()}))
     return 0
 
 
@@ -674,17 +668,14 @@ def cmd_purge(args) -> int:
     data."""
     from gobblin_spark.lakehouse import LakeTable
     from gobblin_spark.lakehouse.merge import (
-        compact, delete_where, gc_tombstones,
+        compact, delete_matching, gc_tombstones,
     )
 
     _resolve_table(args)
     spark = _get_session(args)
     table = LakeTable(spark, args.table)
-    where, where_range = _parse_where(args.where)
-    if not where and not where_range:
-        raise SystemExit("purge requires at least one --where clause")
-    res = delete_where(table, where or None, seq=args.seq or None,
-                       range_predicate=where_range or None)
+    pred = _bind_where(args, table.snapshot(), "purge")
+    res = delete_matching(table, pred, seq=args.seq or None)
     delete_version = res["snapshot_version"]
     if getattr(args, "drop_blocking_tags", False):
         for name, v in table.tags().items():
@@ -697,7 +688,7 @@ def cmd_purge(args) -> int:
     blocking = {name: v for name, v in table.tags().items()
                 if v < delete_version}
     print(json.dumps({
-        "deleted": res["deleted"], "seq": res["seq"], "where": where,
+        "deleted": res["deleted"], "seq": res["seq"], **pred.render(),
         "snapshots_expired": len(expired),
         "files_removed": removed,
         "snapshot_version": table.current_version(),
@@ -716,7 +707,9 @@ def _parse_where(items: list[str]) -> tuple[dict, dict]:
 
     Supported: col=value (equality; bloom-skipped), col>=v / col<=v /
     col>v / col<v (range; [min,max]-bounds-skipped). Multiple clauses AND;
-    two range clauses on one column form an interval (BETWEEN)."""
+    two range clauses on one column form an interval (BETWEEN). A second
+    equality, or a second bound on the same side, for one column is an
+    error, never a silent overwrite."""
     eq: dict = {}
     rng: dict = {}
     for kv in items or []:
@@ -728,6 +721,8 @@ def _parse_where(items: list[str]) -> tuple[dict, dict]:
                              f"value, got {kv!r}")
         c, op, v = m.group(1), m.group(2), m.group(3).strip()
         if op == "=":
+            if c in eq:
+                raise SystemExit(f"--where: duplicate '=' clause for {c!r}")
             eq[c] = v
         else:
             iv = rng.setdefault(
@@ -742,6 +737,17 @@ def _parse_where(items: list[str]) -> tuple[dict, dict]:
     return eq, rng
 
 
+def _bind_where(args, snap, command: str | None = None):
+    """``--where`` bound to ``snap``'s schema, failing before any read or
+    write; ``command`` names a command that needs a clause."""
+    from gobblin_spark.lakehouse.predicate import bind
+
+    eq, rng = _parse_where(args.where)
+    if command and not eq and not rng:
+        raise SystemExit(f"{command} requires at least one --where clause")
+    return bind(snap, value_eq=eq, value_range=rng)
+
+
 def cmd_export(args) -> int:
     """Export the visible table state (optionally filtered) to a format
     sink. ``--where col=value`` uses manifest value-stats blooms to skip
@@ -749,7 +755,7 @@ def cmd_export(args) -> int:
     predicates (``--where 'col>=v'``) skip via the per-file [min,max]
     value bounds recorded in the same stats pass."""
     from gobblin_spark.lakehouse import LakeTable
-    from gobblin_spark.lakehouse.merge import read_current
+    from gobblin_spark.lakehouse.merge import read_where
     from gobblin_spark.sinks import write_files
 
     _resolve_table(args)
@@ -760,12 +766,11 @@ def cmd_export(args) -> int:
             raise SystemExit("--tag names a main-chain version; it cannot "
                              "select a snapshot on --branch")
         table = table.branch(args.branch)
-    where, where_range = _parse_where(args.where)
     version = args.version or None
     if getattr(args, "tag", ""):
         version = table.resolve_tag(args.tag)
-    df = read_current(table, version=version, value_eq=where or None,
-                      value_range=where_range or None)
+    pred = _bind_where(args, table.snapshot(version))
+    df = read_where(table, pred)
     import pyspark.sql.functions as F
     from pyspark.sql.observation import Observation
 
@@ -773,8 +778,7 @@ def cmd_export(args) -> int:
     df = df.observe(obs, F.count(F.lit(1)).alias("n"))
     write_files(df, args.out, fmt=args.format)
     print(json.dumps({"rows": int(obs.get["n"]), "out": args.out,
-                      "where": where or None,
-                      "where_range": where_range or None}))
+                      **pred.render()}))
     return 0
 
 

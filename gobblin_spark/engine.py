@@ -160,6 +160,11 @@ class BatchResult:
     phase_ms: dict[str, int] = field(default_factory=dict)
 
 
+# merge_mode='auto' (CdcEngine._resolve_merge_mode) takes COW once a
+# batch's planned rows reach this share of the table's stored rows
+AUTO_COW_RATIO = 0.5
+
+
 class CdcEngine:
     def __init__(
         self,
@@ -177,15 +182,12 @@ class CdcEngine:
         row_policies: list[RowLevelPolicy] | None = None,
         err_path: str | None = None,
         merge_mode: str = "cow",
-        auto_cow_ratio: float = 0.5,
         merge_dialect: str = "row",
         compact_every: int | None = 8,
         compact_delta_ratio: float | None = 0.25,
         compact_bucket_ratio: float | None = None,
         compact_max_rows_per_file: int | None = None,
-        gc_after_compact: bool = True,
         task_policies: list | None = None,
-        plan_partitioning: bool = True,
         limiter=None,
         delta_distribution: str = "cluster",
         log_keep_last: int | None = 64,
@@ -199,7 +201,7 @@ class CdcEngine:
         every ``compact_every`` batches (O(batch) apply — the 100 TB path,
         mirroring the reference's ingest-then-compact split); 'auto'
         chooses per batch from manifest math alone (no scan): COW when the
-        batch's estimated rows reach ``auto_cow_ratio`` of the table's
+        batch's estimated rows reach ``AUTO_COW_RATIO`` of the table's
         stored rows (batch ≈ table: the rewrite is within a small factor
         of the work MOR's compaction would do later anyway, and COW has
         zero read amplification), MOR otherwise (batch ≪ table: O(batch)
@@ -251,7 +253,6 @@ class CdcEngine:
         check_choice("delta_distribution", delta_distribution,
                      ("cluster", "fanout"))
         self.merge_mode = merge_mode
-        self.auto_cow_ratio = auto_cow_ratio
         self.delta_distribution = delta_distribution
         # commit-log retention: fold history into a rollup so planning cost
         # stays O(log_keep_last) however long the stream runs (None = never)
@@ -268,12 +269,10 @@ class CdcEngine:
         self.compact_delta_ratio = compact_delta_ratio
         self.compact_bucket_ratio = compact_bucket_ratio
         self.compact_max_rows_per_file = compact_max_rows_per_file
-        self.gc_after_compact = gc_after_compact
         self._batches_since_compact = 0
         # task-level publish gates: each has .check(rows_read) -> bool
         # (≙ RowCountPolicy/RowCountRangePolicy gating TaskPublisher.canPublish)
         self.task_policies = task_policies or []
-        self.plan_partitioning = plan_partitioning
         self.auto_rescale_bytes = auto_rescale_bytes
         if branch:
             # write-audit-publish: ingest lands on the branch chain; main
@@ -358,7 +357,7 @@ class CdcEngine:
         # shuffle when there is real per-row work to balance — with no
         # converters/policies the scan's file-split parallelism is already
         # size-balanced and the merge shuffles on key anyway.
-        if self.plan_partitioning and len(plan.bins) > 1 and (
+        if len(plan.bins) > 1 and (
                 self.converters is not None or self.row_policies):
             data = (
                 data.withColumn(
@@ -553,8 +552,7 @@ class CdcEngine:
                     # tombstones are dropped by the same pass that folds
                     # the deltas (a separate GC pass would read and
                     # rewrite the whole live table a second time).
-                    horizon = (self.store.global_low_watermark()
-                               if self.gc_after_compact else -1)
+                    horizon = self.store.global_low_watermark()
                     snap = compact(
                         self.table,
                         salt_buckets=self.salt_buckets if hot else 0,
@@ -610,7 +608,7 @@ class CdcEngine:
     def _resolve_merge_mode(self, plan) -> str:
         """Per-batch COW/MOR choice for ``merge_mode='auto'`` — manifest
         math only, no scan: COW when the batch's planned size reaches
-        ``auto_cow_ratio`` of the table's stored rows (bootstrap and
+        ``AUTO_COW_RATIO`` of the table's stored rows (bootstrap and
         batch≈table regimes: the rewrite costs little more than the
         compaction MOR defers, with zero read amplification), MOR when the
         batch is a sliver of the table (the 100 TB steady state: O(batch)
@@ -623,7 +621,7 @@ class CdcEngine:
             return "cow"
         batch_est = plan.total_est_records or 0
         return ("cow"
-                if batch_est >= self.auto_cow_ratio * table_rows
+                if batch_est >= AUTO_COW_RATIO * table_rows
                 else "mor")
 
     def _maybe_auto_rescale(self, snap):

@@ -35,6 +35,7 @@ gobblin-core/src/main/java/gobblin/commit/FsRenameCommitStep.java:38,135).
 
 from __future__ import annotations
 
+from collections import Counter
 from typing import Any, Sequence
 
 import pyspark.sql.functions as F
@@ -44,6 +45,7 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
+from gobblin_spark.lakehouse.predicate import Predicate, bind
 from gobblin_spark.lakehouse.table import (
     ConcurrentCommitError,
     LakeTable,
@@ -356,15 +358,9 @@ def merge_lww(
     # affected when any affected current-spec bucket ≡ its bucket (mod its
     # spec); its untouched sibling keys just pass through the fold and get
     # rewritten under the current spec (progressive migration).
-    affected = table.buckets_of(batch)
-    res: dict[int, set[int]] = {}
-    def _affected(f) -> bool:
-        s = file_spec_n(f, snap)
-        if s not in res:
-            res[s] = {b % s for b in affected}
-        return f.bucket in res[s]
-    keep = [f for f in snap.files if not _affected(f)]
-    target_subset = table.read(buckets=affected)
+    affected, keep = bind(snap, buckets=table.buckets_of(batch)).split(
+        snap.files)
+    target_subset = table.read_file_set(affected, snap)
 
     # 3. Union + ONE LWW reduce (tombstones included on both sides; partial
     # aggregation collapses in-batch duplicate keys map-side, so a separate
@@ -535,12 +531,10 @@ def _rebase_rewrite(
         keep = [f for f in cur.files if f.path not in drop]
         add = [f for f in new_files if f.bucket in valid]
         props = dict(properties or {})
-        # inherit the WINNER's delta flag, never our stale plan's: if the
-        # winner appended fresh deltas (necessarily to buckets we are not
-        # swapping — ours are validated untouched), they are still
-        # unfolded; if the winner left the table clean, replacing consumed
-        # files with a valid fold of them keeps it clean
-        props["mor_deltas"] = int(cur.properties.get("mor_deltas", 0))
+        # the delta flag follows from the rebased file set by compact's
+        # rule (landed buckets hold our fold), never from a commit's flag:
+        # a metadata-only winner carries the one from before this rewrite
+        props["mor_deltas"] = int(bool(_unfolded(cur, keep) - valid))
         if "gc_horizon_seq" in props:
             props["gc_horizon_seq"] = max(
                 int(props["gc_horizon_seq"]),
@@ -553,6 +547,21 @@ def _rebase_rewrite(
         except ConcurrentCommitError:
             continue  # another writer raced the rebase itself: revalidate
     return None, set()
+
+
+def _unfolded(snap: Snapshot, files) -> set[int]:
+    """The current-spec buckets where ``files`` can conflict on a key: two
+    or more files, or a raw delta (not one row per key internally). A
+    pre-rescale file counts into every current bucket it can hold keys
+    for."""
+    per_bucket: Counter = Counter()
+    unreduced: set[int] = set()
+    for f in files:
+        for b in mapped_buckets(f, snap):
+            per_bucket[b] += 1
+            if not f.reduced:
+                unreduced.add(b)
+    return {b for b, n in per_bucket.items() if n > 1} | unreduced
 
 
 def hot_buckets(snap: Snapshot, delta_ratio: float) -> set[int]:
@@ -591,7 +600,6 @@ def compact(
     hot_keys: DataFrame | None = None,
     properties: dict[str, Any] | None = None,
     buckets: set[int] | None = None,
-    min_files_per_bucket: int = 2,
     gc_horizon_seq: int | None = None,
     max_commit_retries: int = 3,
     max_rows_per_file: int | None = None,
@@ -629,8 +637,9 @@ def compact(
     (single-file, no deltas) keep their dead tombstones until they next
     receive writes; ``gc_tombstones`` remains for forcing those clean.
 
-    Incremental by default: only buckets holding ≥ min_files_per_bucket
-    files are rewritten (a bucket with one file is already one-row-per-key);
+    Incremental by default: only buckets holding two or more files, or a
+    raw delta, are rewritten (a bucket with one reduced file is already
+    one-row-per-key);
     pass ``buckets`` to restrict further. At 100 TB this is what bounds
     compaction cost to the actively-written part of the table — the analog
     of the reference recompacting only datasets whose late-data ratio
@@ -661,27 +670,10 @@ def compact(
                 continue
         if int(snap.properties.get("mor_deltas", 0)) == 0:
             return snap
-        # Current-spec bucket occupancy, residue-mapped across bucket-spec
-        # evolution: a pre-rescale file counts into every current bucket it
-        # can hold keys for.
-        per_bucket: dict[int, int] = {}
-        unreduced: set[int] = set()
-        mapped: dict[str, range] = {}
-        for f in snap.files:
-            mapped[f.path] = mapped_buckets(f, snap)
-            for b in mapped[f.path]:
-                per_bucket[b] = per_bucket.get(b, 0) + 1
-                if not f.reduced:
-                    unreduced.add(b)
-        # a bucket needs folding when files can conflict on a key: ≥2
-        # files, or a single raw-append delta (not guaranteed
-        # one-row-per-key internally)
-        target_buckets = {
-            b for b, n in per_bucket.items() if n >= min_files_per_bucket
-        } | unreduced
-        need_fold = set(target_buckets)
-        if buckets is not None:
-            target_buckets &= buckets
+        mapped = {f.path: mapped_buckets(f, snap) for f in snap.files}
+        need_fold = _unfolded(snap, snap.files)
+        target_buckets = (need_fold if buckets is None
+                          else need_fold & set(buckets))
         # CLOSURE under spec mapping: a pre-rescale file straddling the
         # target boundary must be consumed exactly once, so every current
         # bucket it covers joins the fold (its whole key range is rewritten
@@ -705,10 +697,7 @@ def compact(
             except ConcurrentCommitError as exc:
                 last_exc = exc
                 continue  # metadata-only: replan from the winner, cheap
-        consumed = [f for f in snap.files
-                    if any(b in target_buckets for b in mapped[f.path])]
-        keep = [f for f in snap.files
-                if not any(b in target_buckets for b in mapped[f.path])]
+        consumed, keep = bind(snap, buckets=target_buckets).split(snap.files)
         splits = None
         if max_rows_per_file:
             # giant-bucket guard (one tenant holding most of a table):
@@ -736,7 +725,7 @@ def compact(
             # pinned read: fold exactly the snapshot the commit will
             # validate against, never files a concurrent commit lands
             # mid-job
-            df = table.read(snap.version, buckets=target_buckets)
+            df = table.read_file_set(consumed, snap)
             final = stored_reduce(snap, df, snap.merge_keys, salt_buckets,
                                   hot_keys)
             if gc_horizon_seq is not None:
@@ -757,9 +746,7 @@ def compact(
             props["gc_horizon_seq"] = gc_horizon_seq
         # deltas remain only if a bucket subset was explicitly requested
         # and some conflict-prone bucket was left unfolded
-        props["mor_deltas"] = 0 if buckets is None else int(
-            any(any(b in need_fold for b in mapped[f.path]) for f in keep)
-        )
+        props["mor_deltas"] = int(bool(_unfolded(snap, keep)))
         try:
             return table.commit(
                 keep_files=keep,
@@ -904,79 +891,33 @@ def read_current(
     with outstanding MOR deltas, resolves LWW across base+delta files first
     (merge-on-read).
 
-    ``value_eq``: equality predicate on configured stats columns. On a
-    compacted table (no outstanding deltas: one stored row per key) the
-    value-stats blooms skip non-matching FILES at planning time — a
-    secondary-predicate scan reads O(matching files), not O(table). With
-    unresolved deltas file-level skipping before LWW resolution would be
-    UNSOUND (a key's winning row may live in a file the predicate
-    excludes, resurrecting an older matching row), so the read falls back
-    to the full resolve and filters rows only. Either way the row filter
-    is always applied (blooms are approximate).
+    ``value_eq`` (column → value) and ``value_range`` (column →
+    {"lo", "hi", "lo_strict", "hi_strict"}) AND, bound to the snapshot's
+    schema by ``predicate.bind``. On a compacted table (one stored row per
+    key) the value-stats blooms and [min,max] value bounds skip FILES at
+    planning time — a secondary-predicate scan reads O(matching files),
+    not O(table). With unresolved deltas that skip would be UNSOUND (a
+    key's winning row may live in a file the predicate excludes,
+    resurrecting an older matching row), so the read resolves in full.
+    Either way the row filter is applied (blooms are approximate)."""
+    return read_where(table, bind(table.snapshot(version), value_eq=value_eq,
+                                  value_range=value_range))
 
-    ``value_range``: interval predicate per stats column —
-    {col: {"lo": v|None, "hi": v|None, "lo_strict": bool, "hi_strict":
-    bool}} — pruned at planning time via the per-file [min,max] value
-    bounds under the same compacted-only soundness gate, with the exact
-    row filter always applied."""
-    snap = table.snapshot(version)
+
+def read_where(table: LakeTable, pred: Predicate) -> DataFrame:
+    """The visible rows of ``pred``'s snapshot that match it: the files it
+    prunes to, LWW-resolved (after its key clauses) when deltas are
+    outstanding, then its row filter."""
+    snap = pred.snap
     snap.merge_dialect  # a retired dialect fails before any read
-    types = {f.name: f.dataType.typeName() for f in snap.schema.fields}
-    for arg, preds in (("value_eq", value_eq), ("value_range", value_range)):
-        for c in preds or {}:
-            if c not in types:
-                raise ValueError(f"{arg} column {c!r} not in schema")
-    deltas = int(snap.properties.get("mor_deltas", 0)) > 0
-    df = table.read(snap.version,
-                    value_eq=value_eq if not deltas else None,
-                    value_range=value_range if not deltas else None)
-    if deltas:
-        df = stored_reduce(snap, df, snap.merge_keys)
+    df = table.read_file_set(pred.prune(), snap)
+    if int(snap.properties.get("mor_deltas", 0)) > 0:
+        df = stored_reduce(snap, pred.filter(df, values=False),
+                           snap.merge_keys)
     if DELETED_COL in df.columns:
         df = (df.filter(~F.col(DELETED_COL))
                 .drop(DELETED_COL, SEQ_COL, CELLS_COL, DELSEQ_COL))
-    if value_eq:
-        from gobblin_spark.lakehouse.table import (
-            _coerce_probe, _coerce_probe_extended,
-        )
-        for c, v in value_eq.items():
-            if v is None:
-                df = df.filter(F.col(c).isNull())
-                continue
-            # coerce CLI-string probes to the column type (ANSI mode would
-            # otherwise throw on the implicit cast inside the comparison);
-            # a typed probe of a type _coerce_probe doesn't know passes
-            # through; a STRING probe on a type neither coercion knows
-            # raises — silently matching nothing would make
-            # `delete --where date_col=...` report deleted:0 and succeed
-            t = types[c]
-            cv = _coerce_probe(v, t)
-            if cv is None and not isinstance(v, str):
-                cv = v
-            if cv is None:
-                cv = _coerce_probe_extended(v, t)
-            df = df.filter(F.col(c) == F.lit(cv))
-    if value_range:
-        from gobblin_spark.lakehouse.table import (
-            _coerce_probe, _coerce_probe_extended,
-        )
-        import operator
-
-        for c, iv in value_range.items():
-            t = types[c]
-            for side, op_strict, op in (("lo", operator.gt, operator.ge),
-                                        ("hi", operator.lt, operator.le)):
-                v = iv.get(side)
-                if v is None:
-                    continue
-                cv = _coerce_probe(v, t)
-                if cv is None and not isinstance(v, str):
-                    cv = v
-                if cv is None:
-                    cv = _coerce_probe_extended(v, t)
-                cmp = op_strict if iv.get(f"{side}_strict") else op
-                df = df.filter(cmp(F.col(c), F.lit(cv)))
-    return df
+    return pred.filter(df)
 
 
 def delete_where(
@@ -1017,19 +958,31 @@ def delete_where(
     the per-file [min,max] value bounds. ANDed with ``predicate``.
 
     Returns {"deleted": n, "seq": s, "snapshot_version": v}."""
-    if not predicate and not range_predicate:
+    return delete_matching(
+        table, bind(table.snapshot(), value_eq=predicate,
+                    value_range=range_predicate), seq, properties)
+
+
+def delete_matching(
+    table: LakeTable,
+    pred: Predicate,
+    seq: int | None = None,
+    properties: dict[str, Any] | None = None,
+) -> dict[str, Any]:
+    """``delete_where`` with its clauses already bound: tombstones every
+    live key of ``pred``'s snapshot that matches ``pred``."""
+    if not pred.value_eq and not pred.value_range:
         raise ValueError("delete_where needs a predicate (an unqualified "
                          "full-table delete must be spelled explicitly "
                          "by the caller, not defaulted into)")
-    snap = table.snapshot()
+    snap = pred.snap
     if seq is None:
         seqs = [f.max_seq for f in snap.files if f.max_seq is not None]
         seq = (max(seqs) + 1) if seqs else 1
     keys = snap.merge_keys
     payload = [f.name for f in snap.schema.fields
                if f.name not in META_COLS and f.name not in keys]
-    victims = read_current(table, value_eq=predicate or None,
-                           value_range=range_predicate).select(*keys)
+    victims = read_where(table, pred).select(*keys)
     # merge_lww runs several actions over the batch (bucket planning, the
     # write, the stats pass), so an Observation can't count it — one extra
     # count over the bloom-pruned read is the simple correct thing
@@ -1044,14 +997,10 @@ def delete_where(
         F.lit("D").alias("op"),
         *[F.lit(None).cast(types[c]).alias(c) for c in payload],
     )
-    props = dict(properties or {})
-    props["delete_where"] = {k: str(v) for k, v in (predicate or {}).items()}
-    if range_predicate:
-        props["delete_where_range"] = {
-            c: {k: (str(v) if v is not None and not isinstance(v, bool)
-                    else v)
-                for k, v in iv.items()}
-            for c, iv in range_predicate.items()}
+    clauses = pred.render()
+    props = {**(properties or {}), "delete_where": clauses["where"] or {}}
+    if clauses["where_range"]:
+        props["delete_where_range"] = clauses["where_range"]
     new = merge_lww(table, batch, keys, properties=props)
     return {"deleted": n, "seq": int(seq),
             "snapshot_version": new.version}
@@ -1155,20 +1104,13 @@ def point_lookup(
             return local_frame(table.spark, visible,
                                row if row is not None else [])
     # bucket id under the PINNED snapshot's spec (buckets_of would use the
-    # current spec — wrong for a version pinned from before a rescale)
-    bucket = key_bucket(snap, key)
+    # current spec — wrong for a version pinned from before a rescale);
     # two-level skipping: the key's hash bucket, then key_bounds — within
     # the bucket, MOR delta files each hold only their batch's keys, so
     # most are excluded by their recorded per-column bounds without a read
-    df = table.read(snap.version, buckets={bucket},
-                    key_eq={k: key[k] for k in snap.merge_keys if k in key})
-    for k in snap.bucket_cols:
-        df = df.filter(F.col(k) == F.lit(key[k]))
-    df = stored_reduce(snap, df, snap.merge_keys)
-    if DELETED_COL in df.columns:
-        df = (df.filter(~F.col(DELETED_COL))
-                .drop(DELETED_COL, SEQ_COL, CELLS_COL, DELSEQ_COL))
-    return df
+    return read_where(table, bind(
+        snap, buckets={key_bucket(snap, key)},
+        key_in={k: [key[k]] for k in snap.merge_keys}))
 
 
 def changed_units(
@@ -1271,7 +1213,9 @@ def _changes_local(
         distinct = t.group_by(keys).aggregate([])
         changed.update(zip(*(distinct[c].to_pylist() for c in keys)))
     if changed:
-        rows.update(read_key_rows(table, rest, keys, changed))
+        probe = bind(snap_new, key_in={
+            c: {k[i] for k in changed} for i, c in enumerate(keys)})
+        rows.update(read_key_rows(table, probe.prune(rest), keys, changed))
     fields = snap_new.schema.fields
     payload = [f.name for f in fields
                if f.name not in keys and f.name not in META_COLS]
@@ -1402,19 +1346,10 @@ def table_changes(
     # not divide the unit modulus (possible only after a rollback across a
     # rescale), pruning is abandoned: every unit is treated as changed —
     # a correct superset, just unpruned.
-    changed, unit_n, dividable = changed_units(snap_old, snap_new)
-
-    def _files(snap: Snapshot) -> list:
-        if not dividable:
-            return list(snap.files)
-        return [
-            f for f in snap.files
-            if any(b in changed for b in range(
-                f.bucket % file_spec_n(f, snap), unit_n,
-                file_spec_n(f, snap)))
-        ]
-
-    files_old, files_new = _files(snap_old), _files(snap_new)
+    changed, _, dividable = changed_units(snap_old, snap_new)
+    units = changed if dividable else None
+    files_old = bind(snap_old, buckets=units).prune()
+    files_new = bind(snap_new, buckets=units).prune()
     if dividable:
         local = _changes_local(table, snap_old, snap_new, files_old,
                                files_new, change_col, emit_preimages)

@@ -27,12 +27,11 @@ footers + 1-2 row groups, independent of table size.
 
 from __future__ import annotations
 
-import bisect
 import os
 from typing import Any
 
+from gobblin_spark.lakehouse.predicate import bind, may_hold
 from gobblin_spark.lakehouse.table import LakeTable, Snapshot
-from gobblin_spark.lakehouse.table import file_spec_n as _spec_of
 
 # --------------------------------------------------------------- xxhash64
 # Python port of Spark's XxHash64 expression (seed chained across columns,
@@ -171,8 +170,9 @@ def _int_size(spark_type: str) -> int:
 def key_bucket(snap: Snapshot, key: dict[str, Any]) -> int:
     """The bucket ``key`` hashes to under the snapshot's spec, with each
     integer key column hashed at its stored width — the routing both the
-    local and the distributed point lookup use."""
-    missing = [k for k in snap.bucket_cols if k not in key]
+    local and the distributed point lookup use. Every merge key column
+    must be given."""
+    missing = [k for k in snap.merge_keys if k not in key]
     if missing:
         raise ValueError(
             f"point_lookup needs all merge keys; missing {missing}")
@@ -182,24 +182,6 @@ def key_bucket(snap: Snapshot, key: dict[str, Any]) -> int:
         [key[k] for k in snap.bucket_cols], snap.n_buckets,
         int_sizes=[_int_size(type_by_name.get(k, "")) for k in
                    snap.bucket_cols])
-
-
-def _may_hold(values: dict[str, list], bounds) -> bool:
-    """False only when, for some key column, no wanted value (``values``:
-    column → sorted distinct values) lies in that column's [min, max] —
-    ``bounds(col)`` returns the pair or None when unknown. Per-column
-    checks make this a sound superset for multi-column keys."""
-    for col, vals in values.items():
-        b = bounds(col)
-        if b is None or b[0] is None or b[1] is None:
-            continue
-        try:
-            i = bisect.bisect_left(vals, b[0])
-            if i == len(vals) or vals[i] > b[1]:
-                return False
-        except TypeError:
-            continue  # incomparable stats type: never prune on it
-    return True
 
 
 def read_key_rows(
@@ -212,11 +194,11 @@ def read_key_rows(
     (tuple in ``keys`` order) is in ``wanted`` — every row when ``wanted``
     is None — as one pyarrow Table per file path that has any.
 
-    A file is skipped when its manifest key_bounds exclude every wanted
-    key, a row group when its parquet stats do. Within the surviving row
-    groups only the key columns are read first; full rows are read only at
-    the matching positions. The caller guarantees a local data plane and
-    every file at the snapshot's schema version."""
+    The caller prunes ``files`` (``Predicate.prune``); a row group is
+    skipped when its parquet stats exclude every wanted key. Within the
+    surviving row groups only the key columns are read first; full rows
+    are read only at the matching positions. The caller guarantees a local
+    data plane and every file at the snapshot's schema version."""
     import pyarrow.parquet as pq
 
     def open_file(f):
@@ -240,8 +222,6 @@ def read_key_rows(
     value_sets: dict[tuple, Any] = {}  # (column, arrow type) → is_in set
     out: dict[str, Any] = {}
     for f in files:
-        if not _may_hold(values, (f.key_bounds or {}).get):
-            continue
         pf = open_file(f)
         md = pf.metadata
         idx_of = {c: i for i, c in enumerate(pf.schema_arrow.names)}
@@ -251,7 +231,7 @@ def read_key_rows(
                      for c in keys if c in idx_of]
             bounds = {c: (st.min, st.max) for c, st in stats
                       if st is not None and st.has_min_max}
-            if _may_hold(values, bounds.get):
+            if may_hold(values, bounds.get):
                 groups.append(g)
         if not groups:
             continue
@@ -294,18 +274,12 @@ def point_lookup_local(
     snap.merge_dialect  # a retired dialect fails before any read
     bucket = key_bucket(snap, key)
     keys = snap.merge_keys
-    missing = [k for k in keys if k not in key]
-    if missing:
-        raise ValueError(
-            f"point_lookup needs all merge keys; missing {missing}")
     if table.local_root is None:
         return FALLBACK
     # files whose key_bounds exclude the key are pruned before the gates,
     # so they neither count as candidates nor force a schema fallback
-    values = {k: [key[k]] for k in keys}
-    cand = [f for f in snap.files
-            if f.bucket == bucket % _spec_of(f, snap)
-            and _may_hold(values, (f.key_bounds or {}).get)]
+    cand = bind(snap, buckets={bucket},
+                key_in={k: [key[k]] for k in keys}).prune()
     if not cand:
         return None
     if len(cand) > max_candidate_files:

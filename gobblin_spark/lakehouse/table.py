@@ -276,35 +276,6 @@ def mapped_buckets(f: DataFile, snap: Snapshot) -> range:
     return range(f.bucket % s, snap.n_buckets, s)
 
 
-# ------------------------------------------------------- value-stats bloom
-# column types a bloom may be built on: the driver-side probe must hash the
-# value bit-identically to the executor-side xxhash64, so only types with
-# an exact Python twin (and an unambiguous string→value coercion for CLI
-# probes) are allowed
-_BLOOM_TYPES = ("string", "byte", "short", "integer", "long", "boolean")
-
-
-def _coerce_probe(value: Any, type_name: str) -> Any:
-    """Coerce a probe value (possibly a CLI string) to the column's type so
-    the bloom hash matches what the executor recorded. Returns the coerced
-    value, or None when coercion is impossible (caller must NOT prune)."""
-    try:
-        if type_name == "string":
-            return str(value)
-        if type_name in ("byte", "short", "integer", "long"):
-            return int(value)
-        if type_name == "boolean":
-            if isinstance(value, bool):
-                return value
-            s = str(value).strip().lower()
-            return {"true": True, "false": False}.get(s)
-        if type_name in ("float", "double"):
-            return float(value)  # row-filter only; never bloom-hashed
-        return None
-    except (TypeError, ValueError):
-        return None
-
-
 def plan_rescale_factor(n_buckets: int, total_bytes: int,
                         target_bytes_per_bucket: int,
                         ceiling: int = 1 << 16) -> int:
@@ -328,32 +299,13 @@ def plan_rescale_factor(n_buckets: int, total_bytes: int,
     return max(1, factor)
 
 
-def _coerce_probe_extended(value: Any, type_name: str) -> Any:
-    """Row-filter-only coercion for the probe types the bloom path doesn't
-    hash (date/timestamp/decimal): parse a CLI string into the typed Python
-    value ``F.lit`` renders correctly. Raises ValueError for a string probe
-    on a type neither coercion layer understands — the caller must surface
-    the error rather than silently filter to empty (a
-    ``delete --where date_col=2024-01-01`` that matches nothing and prints
-    success would be a silent data-retention failure)."""
-    import datetime
-    import decimal
+# ------------------------------------------------------- value-stats bloom
+# column types a bloom may be built on: the driver-side probe must hash the
+# value bit-identically to the executor-side xxhash64, so only types with
+# an exact Python twin (and an unambiguous string→value coercion for CLI
+# probes) are allowed
+_BLOOM_TYPES = ("string", "byte", "short", "integer", "long", "boolean")
 
-    s = str(value)
-    try:
-        if type_name == "date":
-            return datetime.date.fromisoformat(s)
-        if type_name in ("timestamp", "timestamp_ntz"):
-            return datetime.datetime.fromisoformat(s)
-        if type_name.startswith("decimal"):
-            return decimal.Decimal(s)
-    except (ValueError, decimal.InvalidOperation) as exc:
-        raise ValueError(
-            f"probe {value!r} is not parseable as column type "
-            f"{type_name}") from exc
-    raise ValueError(
-        f"probe {value!r} cannot be coerced to column type {type_name}; "
-        "pass a typed value or use a supported column type")
 # k=2 double-probe bloom over xxhash64: position 1 = pmod(h, m), position 2
 # = pmod(h >>> 17, m). Both derivations exist bit-exactly in Spark SQL
 # (executor-side build) and in the Python xxhash64 port (driver-side probe,
@@ -887,7 +839,6 @@ class LakeTable:
         df: DataFrame,
         seq_col: str | None = None,
         schema_version: int | None = None,
-        partitions_per_bucket: int = 1,
         reduced: bool = True,
         distribution: str = "cluster",
         sort_cols: list[str] | None = None,
@@ -957,7 +908,7 @@ class LakeTable:
             )
         if distribution == "cluster":
             shuffle_cols = [F.col(c) for c in part_cols]
-            n_parts = max(1, snap.n_buckets * partitions_per_bucket)
+            n_parts = max(1, snap.n_buckets)
             if split_col is not None:
                 out = out.withColumn("__split", split_col)
                 shuffle_cols.append(F.col("__split"))
@@ -1249,31 +1200,17 @@ class LakeTable:
           target (≙ reading one day/hour of a TimePartitionedDataPublisher
           layout without listing the rest).
         partitions: explicit partition-value set.
-        key_eq: column → probe value; skip files whose recorded key_bounds
-          exclude the value (files without bounds are kept — skipping is
-          only ever a sound superset).
-        value_eq: column → probe value; skip files whose value-stats bloom
-          excludes the value (secondary-predicate skipping on the table's
-          configured stats_cols; files without a bloom for the column are
-          kept). NOTE this prunes FILES — on a table with unresolved MOR
-          deltas the caller must not pre-prune before LWW resolution (a
-          key's winner may live in a file the predicate excludes);
-          merge.read_current(value_eq=) applies the sound gate.
+        key_eq, value_eq, value_range: ``predicate.bind``'s clauses (one
+          value per key probe), pruning files only — rows are not filtered,
+          and value statistics prune no file while MOR deltas are
+          outstanding.
         """
+        from gobblin_spark.lakehouse.predicate import bind
+
         snap = self.snapshot(version)
-        files = snap.files
-        if buckets is not None:
-            # residue-mapped across bucket-spec evolution: a file written
-            # under spec s can hold current-bucket b iff f.bucket == b % s.
-            # Residue sets are computed once per distinct spec (O(specs ×
-            # |buckets| + files), never O(files × |buckets|)).
-            res: dict[int, set[int]] = {}
-            def _hit(f: DataFile) -> bool:
-                s = file_spec_n(f, snap)
-                if s not in res:
-                    res[s] = {b % s for b in buckets}
-                return f.bucket in res[s]
-            files = [f for f in files if _hit(f)]
+        files = bind(snap, buckets=buckets,
+                     key_in={c: [v] for c, v in (key_eq or {}).items()},
+                     value_eq=value_eq, value_range=value_range).prune()
         if seq_range is not None:
             lo, hi = seq_range
             files = [
@@ -1289,106 +1226,6 @@ class LakeTable:
             ]
         if partitions is not None:
             files = [f for f in files if f.partition in partitions]
-        if key_eq:
-            def may_contain(f: DataFile) -> bool:
-                if not f.key_bounds:
-                    return True
-                for c, v in key_eq.items():
-                    b = f.key_bounds.get(c)
-                    if b is not None and not (b[0] <= v <= b[1]):
-                        return False
-                return True
-            files = [f for f in files if may_contain(f)]
-        if value_eq:
-            from gobblin_spark.lakehouse.pointread import _int_size
-            type_by_name = {fl.name: fl.dataType.typeName()
-                            for fl in snap.schema.fields}
-            for c in value_eq:
-                if c not in type_by_name:
-                    raise ValueError(f"value_eq column {c!r} not in schema")
-            # probe positions depend only on (column type, value, m) —
-            # cache per (column, m) across files
-            pos_cache: dict[tuple[str, int], list[int]] = {}
-
-            def _pos(c: str, v: Any, m: int) -> list[int] | None:
-                k = (c, m)
-                if k not in pos_cache:
-                    # coerce (CLI probes arrive as strings) so the hash
-                    # matches the executor-recorded type; uncoercible or
-                    # non-bloomable type → None → never prune on this
-                    # column (sound superset)
-                    t = type_by_name[c]
-                    cv = (_coerce_probe(v, t)
-                          if t in _BLOOM_TYPES else None)
-                    pos_cache[k] = None if cv is None else \
-                        bloom_positions_py(cv, m, int_size=_int_size(t))
-                return pos_cache[k]
-
-            def bloom_hit(f: DataFile) -> bool:
-                if not f.value_stats:
-                    return True
-                for c, v in value_eq.items():
-                    if v is None:
-                        continue  # no sound bloom probe for NULL
-                    ent = f.value_stats.get(c)
-                    if ent is None:
-                        continue
-                    pos = _pos(c, v, int(ent["m"]))
-                    if pos is not None and not bloom_may_contain(
-                            ent["b"], pos):
-                        return False
-                return True
-            files = [f for f in files if bloom_hit(f)]
-        if value_range:
-            # range-predicate skipping on the recorded [min,max] of each
-            # stats column: keep a file unless its bounds PROVE no row can
-            # satisfy the interval. Bounds are over non-null values and a
-            # range predicate never matches NULL (SQL), so bounds-excluded
-            # files cannot contribute matching rows. Files/columns without
-            # bounds (legacy manifests, all-NULL files... which have no
-            # matching rows either, but "no bounds" is indistinguishable
-            # from "legacy") are kept — skipping stays a sound superset.
-            type_by_name = {fl.name: fl.dataType.typeName()
-                            for fl in snap.schema.fields}
-            coerced: dict[str, dict] = {}
-            for c, iv in value_range.items():
-                if c not in type_by_name:
-                    raise ValueError(
-                        f"value_range column {c!r} not in schema")
-                t = type_by_name[c]
-                cv = {}
-                for side in ("lo", "hi"):
-                    v = iv.get(side)
-                    if v is None:
-                        cv[side] = None
-                        continue
-                    p = _coerce_probe(v, t)
-                    if p is None and not isinstance(v, str):
-                        p = v
-                    if p is None:
-                        p = _coerce_probe_extended(v, t)
-                    cv[side] = p
-                cv["lo_strict"] = bool(iv.get("lo_strict"))
-                cv["hi_strict"] = bool(iv.get("hi_strict"))
-                coerced[c] = cv
-
-            def range_hit(f: DataFile) -> bool:
-                if not f.value_bounds:
-                    return True
-                for c, iv in coerced.items():
-                    b = f.value_bounds.get(c)
-                    if b is None:
-                        continue
-                    bmin, bmax = b
-                    lo, hi = iv["lo"], iv["hi"]
-                    if lo is not None and (
-                            bmax < lo or (iv["lo_strict"] and bmax == lo)):
-                        return False
-                    if hi is not None and (
-                            bmin > hi or (iv["hi_strict"] and bmin == hi)):
-                        return False
-                return True
-            files = [f for f in files if range_hit(f)]
         return self.read_file_set(files, snap)
 
     def read_file_set(

@@ -146,8 +146,11 @@ def test_compact_rebases_metadata_only_when_inputs_untouched(
         assert writes["n"] == 1, "untouched inputs must NOT be re-folded"
         assert int(snap.properties.get("mor_deltas", 0)) == 0
         assert snap.properties.get("note") == "winner"  # rebased ON TOP
-        # the rebased rewrite is the one commit that records the path; the
-        # winner and the pass that then clears the delta flag record none
+        # compact returns the rebased rewrite itself, right on top of the
+        # winner: no metadata-only pass follows to clear a stale delta flag
+        assert snap.version == v0 + 2
+        assert snap.properties.get("compact_path") == path
+        # the rebased rewrite is the one commit that records the path
         traces = [t.snapshot(v).properties.get("compact_path")
                   for v in range(v0 + 1, snap.version + 1)]
         assert [p for p in traces if p] == [path]

@@ -229,25 +229,30 @@ def test_replay_converges_across_mid_run_rescales(
         shutil.rmtree(work, ignore_errors=True)
 
 
-@settings(max_examples=6, deadline=None,
+@settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture,
                                  HealthCheck.too_slow])
 @given(
-    values=st.lists(st.integers(-50, 50), min_size=5, max_size=40),
+    values=st.lists(st.tuples(st.integers(-50, 50), st.integers(0, 3)),
+                    min_size=5, max_size=40),
     lo=st.one_of(st.none(), st.integers(-60, 60)),
     hi=st.one_of(st.none(), st.integers(-60, 60)),
     lo_strict=st.booleans(),
     hi_strict=st.booleans(),
+    eq=st.one_of(st.none(), st.integers(0, 4)),
+    eq_as_str=st.booleans(),
     use_mor=st.booleans(),
 )
 def test_range_pruned_read_equals_full_filter(spark, tmp_path_factory,
                                               values, lo, hi, lo_strict,
-                                              hi_strict, use_mor):
+                                              hi_strict, eq, eq_as_str,
+                                              use_mor):
     """PROPERTY: for any data distribution and any interval (one-sided,
-    empty, inverted, strict/inclusive), the value-bounds-pruned read
-    returns exactly the rows of the unpruned filter — pruning may only
-    ever remove files that provably hold no matching rows, under COW and
-    across unresolved MOR deltas alike."""
+    empty, inverted, strict/inclusive), ANDed with an optional equality on
+    a bloom column (a typed value or its CLI string; 4 is never stored),
+    the pruned read returns exactly the rows of the unpruned filter —
+    pruning may only ever remove files that provably hold no matching
+    rows, under COW and across unresolved MOR deltas alike."""
     from pyspark.sql.types import (BooleanType, LongType, StringType,
                                    StructField, StructType)
 
@@ -259,33 +264,36 @@ def test_range_pruned_read_equals_full_filter(spark, tmp_path_factory,
         StructField("repo", StringType()),
         StructField("path", StringType()),
         StructField("size", LongType()),
+        StructField("tag", LongType()),
         StructField("__seq", LongType()),
         StructField("__deleted", BooleanType()),
     ])
     t = LakeTable.create(spark, d + "/t", schema, ["repo", "path"],
                          n_buckets=4, key_cols=["repo", "path"],
-                         stats_cols=["size"])
-    rows = [(i, "U", f"r{i % 3}", f"p{i}", v)
-            for i, v in enumerate(values)]
+                         stats_cols=["size", "tag"])
+    rows = [(i, "U", f"r{i % 3}", f"p{i}", v, g)
+            for i, (v, g) in enumerate(values)]
     batch = spark.createDataFrame(
-        rows, ["seq", "op", "repo", "path", "size"])
+        rows, ["seq", "op", "repo", "path", "size", "tag"])
     merge_lww(t, batch.filter("seq % 2 = 0"), ["repo", "path"])
     apply2 = merge_lww_mor if use_mor else merge_lww
     apply2(t, batch.filter("seq % 2 = 1"), ["repo", "path"])
 
     iv = {"size": {"lo": lo, "hi": hi,
                    "lo_strict": lo_strict, "hi_strict": hi_strict}}
-    got = sorted((r["path"], r["size"])
-                 for r in read_current(t, value_range=iv).collect())
+    value_eq = None if eq is None else {"tag": str(eq) if eq_as_str else eq}
+    got = sorted((r["path"], r["size"]) for r in read_current(
+        t, value_eq=value_eq, value_range=iv).collect())
 
-    def keep(v):
+    def keep(v, g):
         if lo is not None and (v < lo or (lo_strict and v == lo)):
             return False
         if hi is not None and (v > hi or (hi_strict and v == hi)):
             return False
-        return True
+        return eq is None or g == eq
 
-    want = sorted((f"p{i}", v) for i, v in enumerate(values) if keep(v))
+    want = sorted((f"p{i}", v) for i, (v, g) in enumerate(values)
+                  if keep(v, g))
     assert got == want
 
 

@@ -397,3 +397,12 @@ def test_where_clause_anchors_on_the_column():
     for bad in ("=v", "lang!!go"):
         with pytest.raises(SystemExit, match="col=value"):
             _parse_where([bad])
+    # a second equality on one column is refused, never silently dropped
+    # (lang=go AND lang=rust matches nothing; keeping only the last
+    # clause would delete the rust rows)
+    with pytest.raises(SystemExit, match="duplicate '=' clause for 'lang'"):
+        _parse_where(["lang=go", "lang=rust"])
+    # AND across clause kinds on one column stays allowed
+    assert _parse_where(["lang=go", "lang>=a"]) == (
+        {"lang": "go"}, {"lang": {"lo": "a", "hi": None,
+                                  "lo_strict": False, "hi_strict": False}})
