@@ -12,7 +12,7 @@ Why a dedicated path instead of replaying history as change events: at
 10^10 accumulated events the stream's prefix is many times the live table
 (every key's dead versions), while the snapshot is exactly the live rows.
 The load is ONE bucketed write — no merge fold, no reduce shuffle beyond
-the bucket clustering itself (``fanout`` removes even that) — because a
+the one that clusters each bucket into one key-sorted file — because a
 consistent snapshot has unique keys by construction, so there is nothing
 to resolve. The handoff then makes the LWW algebra exact: snapshot rows
 carry ``__seq = W`` and the planner admits only ``seq > W``, so any event
@@ -62,7 +62,6 @@ def bootstrap_snapshot(
     groups: Sequence[int],
     n_buckets: int = 32,
     merge_dialect: str = "row",
-    distribution: str = "cluster",
     registry=None,
     verify_unique: bool = False,
     keys: Sequence[str] | None = None,
@@ -170,7 +169,6 @@ def bootstrap_snapshot(
         )
         stored = batch_to_stored(ev, payload, "seq", "op", merge_dialect)
         files = table.write_data_files(stored, seq_col=SEQ_COL,
-                                       distribution=distribution,
                                        sort_cols=list(keys))
         rows_loaded = sum(f.rows for f in files)
         snap = table.commit(

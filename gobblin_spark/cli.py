@@ -299,7 +299,7 @@ def cmd_bootstrap(args) -> int:
         spark, snapshot, args.table, args.state,
         watermark=args.watermark, groups=groups,
         n_buckets=args.buckets, merge_dialect=args.merge_dialect,
-        distribution=args.distribution, verify_unique=args.verify_unique,
+        verify_unique=args.verify_unique,
     )
     res["wall_sec"] = round(time.time() - t0, 3)
     print(json.dumps(res))
@@ -444,8 +444,7 @@ def cmd_compact(args) -> int:
     table = LakeTable(spark, args.table)
     if getattr(args, "branch", ""):
         table = table.branch(args.branch)
-    snap = compact(table, salt_buckets=args.salt_buckets,
-                   max_rows_per_file=args.max_rows_per_file or None)
+    snap = compact(table, max_rows_per_file=args.max_rows_per_file or None)
     print(json.dumps({
         "snapshot_version": snap.version,
         "table_stats": table.stats(),
@@ -1197,10 +1196,6 @@ def main(argv: list[str] | None = None) -> int:
     bo.add_argument("--buckets", type=int, default=32)
     bo.add_argument("--merge-dialect", choices=["row", "cell"],
                     default="row")
-    bo.add_argument("--distribution", choices=["cluster", "fanout"],
-                    default="cluster",
-                    help="cluster: one shuffle, one file per bucket; "
-                         "fanout: zero shuffle, tasks fan out per bucket")
     bo.add_argument("--verify-unique", action="store_true",
                     help="assert the snapshot has no duplicate keys "
                          "(one extra counting scan)")
@@ -1273,7 +1268,6 @@ def main(argv: list[str] | None = None) -> int:
     cp.add_argument("--table", required=True,
                     help="LakeTable root, or a catalog NAME with --catalog")
     cp.add_argument("--catalog", default="")
-    cp.add_argument("--salt-buckets", type=int, default=0)
     cp.add_argument("--max-rows-per-file", type=int, default=0,
                     help="hash-split buckets above this row count over "
                          "multiple output files (giant-bucket guard)")

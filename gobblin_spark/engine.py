@@ -18,8 +18,8 @@ essential loop:
      registry version than the target table, evolve the target FIRST
      (metadata-only commit), then conform all rows to the latest schema
   5. convert + row quality gates
-  6. LWW MERGE into the lakehouse target (salted two-stage if the planner
-     flagged hot keys)
+  6. LWW MERGE into the lakehouse target (COW: salted two-stage if the
+     rollup flagged hot keys; MOR: an unreduced delta append)
   7. commit: checkpoint rows + atomic commit-log publish; task-level
      row-count policies gate the commit (≙ TaskPublisher.canPublish)
 
@@ -189,7 +189,6 @@ class CdcEngine:
         compact_max_rows_per_file: int | None = None,
         task_policies: list | None = None,
         limiter=None,
-        delta_distribution: str = "cluster",
         log_keep_last: int | None = 64,
         fs=None,
         stats_cols: list[str] | None = None,
@@ -208,11 +207,10 @@ class CdcEngine:
         append beats rewriting every touched bucket — BENCH/mor_regime.json
         measured 4.4× at an 80× table/batch ratio). Both paths commit
         LWW-identical state, so the choice is cost-only and can flip
-        per batch.
-
-        delta_distribution: how MOR delta writes reach their bucket files —
-        'cluster' (one shuffle, one file per bucket) or 'fanout' (no
-        shuffle, per-task bucketed files; see LakeTable.write_data_files).
+        per batch. A MOR apply writes the batch unreduced, one delta file
+        per touched bucket (``merge_lww_mor``); ``salt_buckets`` applies
+        only to COW's merge of the repos a batch's rollup flags as hot
+        (``hot_repos`` in the commit log, recorded in every mode).
 
         merge_dialect: 'row' (whole-row LWW) or 'cell' (patch semantics:
         a null payload column in an update means "unchanged"; each stored
@@ -250,10 +248,7 @@ class CdcEngine:
         self.err_path = err_path
         check_choice("merge_mode", merge_mode, ("cow", "mor", "auto"))
         check_choice("merge_dialect", merge_dialect, ("row", "cell"))
-        check_choice("delta_distribution", delta_distribution,
-                     ("cluster", "fanout"))
         self.merge_mode = merge_mode
-        self.delta_distribution = delta_distribution
         # commit-log retention: fold history into a rollup so planning cost
         # stays O(log_keep_last) however long the stream runs (None = never)
         self.log_keep_last = log_keep_last
@@ -352,11 +347,11 @@ class CdcEngine:
         data = batch.filter(F.expr("op IN ('I','U','D')"))
         # Plan-driven partitioning: the WFD bins decide the extract's
         # physical layout so downstream per-row stages (converter chains,
-        # row-quality predicates, MOR's in-batch pre-reduce) see
-        # cost-balanced partitions even under heavy group skew. Only worth a
-        # shuffle when there is real per-row work to balance — with no
-        # converters/policies the scan's file-split parallelism is already
-        # size-balanced and the merge shuffles on key anyway.
+        # row-quality predicates) see cost-balanced partitions even under
+        # heavy group skew. Only worth a shuffle when there is real per-row
+        # work to balance — with no converters/policies the scan's
+        # file-split parallelism is already size-balanced and the merge
+        # shuffles on key anyway.
         if len(plan.bins) > 1 and (
                 self.converters is not None or self.row_policies):
             data = (
@@ -369,10 +364,8 @@ class CdcEngine:
         # Batch metadata (row count + schema versions + hot repos). The MOR
         # fast path needs NONE of it up front: schema stats rode the
         # planning scan, the exact row count comes from an Observation on
-        # the apply job itself, and a keyed LWW *aggregate* has no reducer
-        # skew to salt — max_by is algebraic, so partial (map-side)
-        # aggregation collapses a hot key to ≤1 row per map task before the
-        # shuffle. The explicit rollup pass runs only when something really
+        # the apply job itself, and an unreduced delta append has no reducer
+        # skew to salt. The explicit rollup pass runs only when something really
         # must know counts/hot-keys BEFORE mutating the table: COW (salted
         # two-stage merge plans its shuffle around hot keys), task-level
         # publish gates, or a retry re-plan (no planning scan → no stats).
@@ -456,13 +449,6 @@ class CdcEngine:
         rows_read = (quality.passed_count
                      if quality.passed_count is not None else n_rows)
 
-        # Skew: hot repos (flagged in the rollup above) take the salted
-        # two-stage reduce path.
-        hot_df = None
-        if hot:
-            hot_df = good.select(*KEYS).filter(
-                F.col("repo").isin(hot)).distinct()
-
         # Publish gate BEFORE any table mutation (≙ TaskPublisher.canPublish,
         # POLICY_TESTS_FAIL blocks publish): a failing gate leaves the batch
         # checkpointed-but-uncommitted, so its exact ranges are re-planned
@@ -486,20 +472,23 @@ class CdcEngine:
         snapshot_version = None
         rows_merged = 0
         if rows_read is None or rows_read:
-            apply_fn = merge_lww if mode == "cow" else merge_lww_mor
-            apply_kw = ({} if mode == "cow"
-                        else {"distribution": self.delta_distribution})
-            snap = apply_fn(
-                self.table,
-                good,
-                KEYS,
-                seq_col="seq",
-                op_col="op",
-                salt_buckets=self.salt_buckets if hot else 0,
-                hot_keys=hot_df,
-                properties={"batch_id": batch_id},
-                **apply_kw,
-            )
+            if mode == "cow":
+                # Skew: hot repos (flagged in the rollup above) take the
+                # salted two-stage reduce. MOR appends the batch without a
+                # reduce, so there is nothing to salt.
+                hot_df = (good.select(*KEYS).filter(F.col("repo").isin(hot))
+                          .distinct() if hot else None)
+                snap = merge_lww(
+                    self.table, good, KEYS, seq_col="seq", op_col="op",
+                    salt_buckets=self.salt_buckets if hot else 0,
+                    hot_keys=hot_df,
+                    properties={"batch_id": batch_id},
+                )
+            else:
+                snap = merge_lww_mor(
+                    self.table, good, KEYS, seq_col="seq", op_col="op",
+                    properties={"batch_id": batch_id},
+                )
             snapshot_version = snap.version
             if rows_read is None:
                 rows_read = int(snap.properties.get("batch_rows", 0))
@@ -536,8 +525,6 @@ class CdcEngine:
                     snap = compact(
                         self.table,
                         buckets=hot_set,
-                        salt_buckets=self.salt_buckets if hot else 0,
-                        hot_keys=hot_df,
                         properties={"compacted_after": batch_id,
                                     "compacted_buckets": sorted(hot_set)},
                         max_rows_per_file=self.compact_max_rows_per_file,
@@ -555,8 +542,6 @@ class CdcEngine:
                     horizon = self.store.global_low_watermark()
                     snap = compact(
                         self.table,
-                        salt_buckets=self.salt_buckets if hot else 0,
-                        hot_keys=hot_df,
                         properties={"compacted_after": batch_id},
                         gc_horizon_seq=horizon if horizon >= 0 else None,
                         max_rows_per_file=self.compact_max_rows_per_file,

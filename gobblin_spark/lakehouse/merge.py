@@ -390,12 +390,8 @@ def merge_lww_mor(
     keys: Sequence[str],
     seq_col: str = "seq",
     op_col: str = "op",
-    salt_buckets: int = 0,
-    hot_keys: DataFrame | None = None,
     properties: dict[str, Any] | None = None,
     expected_version: int | None = None,
-    pre_reduce: bool = False,
-    distribution: str = "cluster",
 ) -> Snapshot:
     """Merge-on-read apply: the 100 TB scale path.
 
@@ -405,17 +401,10 @@ def merge_lww_mor(
     (``read_current``); ``compact`` folds deltas back to one row per key.
 
     The apply's ONLY wide operation is the single repartition that clusters
-    rows by storage bucket for the write — and ``distribution="fanout"``
-    removes even that (per-task bucketed files, Iceberg's
-    distribution-mode=none; compaction folds the extra files).
-    ``pre_reduce=True`` additionally
-    collapses in-batch duplicate keys with a keyed LWW shuffle before
-    writing — smaller deltas at the cost of a second full-payload shuffle
-    per batch. Measured on the bench input (~5% duplicates + in-batch key
-    collisions) the extra shuffle costs more than the delta shrink saves,
-    so the default is off; turn it on for pathological batches where most
-    rows share few keys (there the delta shrink also defuses read-side
-    skew).
+    rows by storage bucket for the write: one delta file per touched
+    bucket, holding the batch's rows unreduced (in-batch duplicate keys
+    are folded by readers and the next compaction, not by a second
+    shuffle here). Salting has nothing to act on: no reduce runs.
 
     This is the faithful Spark rendering of the reference's own
     architecture: ingest appends (FsDataWriter/BaseDataPublisher publish
@@ -440,19 +429,12 @@ def merge_lww_mor(
     ]
     batch_rows = batch_to_stored(
         batch, payload_cols, seq_col, op_col, snap.merge_dialect)
-    # cell deltas stay RAW: a row fold would drop the per-column seqs, and
-    # the (safe) cell fold per batch buys nothing MOR wants
-    pre_reduce = pre_reduce and snap.merge_dialect == "row"
-    if pre_reduce:
-        batch_rows = lww_reduce(batch_rows, keys, SEQ_COL, salt_buckets,
-                                hot_keys)
     new_files = table.write_data_files(batch_rows, seq_col=SEQ_COL,
-                                       reduced=pre_reduce,
-                                       distribution=distribution)
+                                       reduced=False)
     props = dict(properties or {})
     props["mor_deltas"] = int(snap.properties.get("mor_deltas", 0)) + 1
     # exact applied-row count for free from the indexed parquet footers
-    # (without pre_reduce the delta holds precisely the batch's rows)
+    # (the delta holds precisely the batch's rows)
     props["batch_rows"] = sum(f.rows for f in new_files)
     return table.commit(
         keep_files=snap.files,
@@ -594,14 +576,17 @@ def hot_buckets(snap: Snapshot, delta_ratio: float) -> set[int]:
     }
 
 
+# Rounds a maintenance rewrite (``compact``, ``gc_tombstones``) re-plans
+# after losing its optimistic commit to a concurrent writer, before it
+# re-raises the last ConcurrentCommitError.
+MAX_COMMIT_RETRIES = 3
+
+
 def compact(
     table: LakeTable,
-    salt_buckets: int = 0,
-    hot_keys: DataFrame | None = None,
     properties: dict[str, Any] | None = None,
     buckets: set[int] | None = None,
     gc_horizon_seq: int | None = None,
-    max_commit_retries: int = 3,
     max_rows_per_file: int | None = None,
 ) -> Snapshot:
     """Fold MOR delta files into one row per key (LWW by __seq) — the
@@ -650,7 +635,7 @@ def compact(
     the rewrite is REBASED rather than discarded — buckets whose input
     file sets the winner didn't touch re-commit metadata-only on top of
     the winning snapshot; invalidated buckets are re-planned and re-folded
-    from the new snapshot, up to ``max_commit_retries`` rounds. ≙ the
+    from the new snapshot, up to ``MAX_COMMIT_RETRIES`` rounds. ≙ the
     reference running compaction as a separate job family (MRCompactor
     racing ingest is the production shape), with Iceberg's
     validate-and-retry instead of its job-level lock.
@@ -659,7 +644,7 @@ def compact(
     'cell' instead: one full rewrite on Spark (``_migrate_column_table``,
     ``compact_reason: "migration"``)."""
     last_exc: Exception | None = None
-    for _ in range(max_commit_retries + 1):
+    for _ in range(MAX_COMMIT_RETRIES + 1):
         snap = table.snapshot()
         if snap.properties.get("merge_dialect") == "column":
             try:
@@ -726,8 +711,7 @@ def compact(
             # validate against, never files a concurrent commit lands
             # mid-job
             df = table.read_file_set(consumed, snap)
-            final = stored_reduce(snap, df, snap.merge_keys, salt_buckets,
-                                  hot_keys)
+            final = stored_reduce(snap, df, snap.merge_keys)
             if gc_horizon_seq is not None:
                 final = final.filter(
                     ~(F.col(DELETED_COL)
@@ -1441,8 +1425,7 @@ def table_changes(
     )
 
 
-def gc_tombstones(table: LakeTable, horizon_seq: int,
-                  max_commit_retries: int = 3) -> Snapshot:
+def gc_tombstones(table: LakeTable, horizon_seq: int) -> Snapshot:
     """Physically drop tombstones with seq <= horizon (safe once the
     out-of-order horizon passed: no event with smaller seq can still arrive).
     Rewrites only files that contain qualifying tombstones (min_seq stats).
@@ -1455,7 +1438,7 @@ def gc_tombstones(table: LakeTable, horizon_seq: int,
     per-bucket rewrite rebases metadata-only where the winner didn't touch
     the inputs and re-runs only invalidated buckets."""
     last_exc: Exception | None = None
-    for _ in range(max_commit_retries + 1):
+    for _ in range(MAX_COMMIT_RETRIES + 1):
         snap = table.snapshot()
         if int(snap.properties.get("mor_deltas", 0)) > 0:
             raise ValueError(

@@ -156,6 +156,14 @@ def bucket_of(key_values: list[Any], n_buckets: int,
 
 FALLBACK = object()  # sentinel: caller should use the Spark path
 
+# Candidate-file cap of the driver-side point lookup: above it (after
+# bucket and key_bounds pruning) the lookup falls back to Spark. Each
+# candidate costs a footer open and a key-column read on the driver; the
+# cap bounds that serial work and is not a measured crossover.
+# LOCAL_LOOKUP_MAX_FILES = 0 sends every lookup that has a candidate file
+# to Spark.
+LOCAL_LOOKUP_MAX_FILES = 64
+
 _SEQ = "__seq"
 _DELETED = "__deleted"
 _CELLS = "__cells"
@@ -262,13 +270,13 @@ def point_lookup_local(
     table: LakeTable,
     key: dict[str, Any],
     snap: Snapshot | None = None,
-    max_candidate_files: int = 64,
 ):
     """Resolve one merge key without Spark, in ``snap`` (default: the
     current snapshot). Returns the visible row as a one-row pyarrow Table,
     None when the key is absent/deleted, or the FALLBACK sentinel when this
     path can't answer safely (a remote data plane, schema-version drift
-    among candidate files, too many candidates)."""
+    among candidate files, more than ``LOCAL_LOOKUP_MAX_FILES``
+    candidates)."""
     if snap is None:
         snap = table.snapshot()
     snap.merge_dialect  # a retired dialect fails before any read
@@ -282,7 +290,7 @@ def point_lookup_local(
                 key_in={k: [key[k]] for k in keys}).prune()
     if not cand:
         return None
-    if len(cand) > max_candidate_files:
+    if len(cand) > LOCAL_LOOKUP_MAX_FILES:
         return FALLBACK
     if any(f.schema_version != snap.schema_version for f in cand):
         # old-layout files need the registry's rename/widen conversions —

@@ -47,6 +47,7 @@ import os
 import time
 import uuid
 from dataclasses import dataclass, field, replace
+from functools import cached_property
 from typing import Any, Iterable
 from urllib.parse import unquote, urlsplit
 
@@ -81,8 +82,8 @@ class DataFile:
     # partition_spec; None for unpartitioned tables
     partition: str | None = None
     # True when the writer guarantees at most one row per merge key WITHIN
-    # this file (LWW-reduced output: COW merge, compaction, pre-reduced
-    # deltas). Raw MOR delta appends set False — a bucket holding such a
+    # this file (LWW-reduced output: COW merge, compaction, bootstrap).
+    # Raw MOR delta appends set False — a bucket holding such a
     # file needs LWW resolution even if it is the bucket's only file.
     # Default True keeps legacy manifests valid (everything written before
     # raw-append deltas existed was reduced).
@@ -186,8 +187,10 @@ class Snapshot:
     shard_map: list[tuple[str, list["DataFile"]]] | None = field(
         default=None, repr=False, compare=False)
 
-    @property
+    @cached_property
     def schema(self) -> StructType:
+        """Parsed once per Snapshot: a driver-side point lookup reads it
+        several times. Callers must not mutate the returned StructType."""
         return StructType.fromJson(self.schema_json)
 
     @property
@@ -840,26 +843,19 @@ class LakeTable:
         seq_col: str | None = None,
         schema_version: int | None = None,
         reduced: bool = True,
-        distribution: str = "cluster",
         sort_cols: list[str] | None = None,
         splits_by_bucket: dict[int, int] | None = None,
     ) -> list[DataFile]:
         """Write df as new data files (NOT yet visible — commit separately).
 
         Every output file belongs to exactly one bucket (partitionBy), so
-        bucket pruning on read and bounded copy-on-write always hold. The
-        ``distribution`` knob controls HOW rows reach their bucket's file —
-        the same tradeoff as Iceberg's write.distribution-mode:
-
-        - ``cluster`` (default, ≙ hash): one repartition shuffle clusters
-          each bucket into a single task → exactly one file per non-empty
-          bucket. Right for large writes (COW merge, compaction) where file
-          count dominates.
-        - ``fanout`` (≙ none): NO shuffle — each input task writes one file
-          per bucket it holds rows for (≤ tasks × buckets files). Right for
-          small frequent appends (MOR deltas): the batch payload crosses
-          the network zero times, and periodic compaction folds the extra
-          files anyway.
+        bucket pruning on read and bounded copy-on-write always hold. One
+        repartition shuffle clusters each bucket (and, when time-
+        partitioned, each partition cell) into a single task, so every
+        write — COW merge, MOR delta, compaction, bootstrap — leaves
+        exactly one file per non-empty bucket (≙ Iceberg's
+        write.distribution-mode=hash). ``reduced`` records whether the
+        rows are already one per key (False for a raw MOR delta).
 
         ``splits_by_bucket``: bucket → k. Rows of that bucket are hash-
         spread (by merge key) over k tasks → k files, bounding the single-
@@ -906,19 +902,15 @@ class LakeTable:
                 F.xxhash64(key_h),
                 F.coalesce(F.element_at(kmap, F.col("__bucket")), F.lit(1)),
             )
-        if distribution == "cluster":
-            shuffle_cols = [F.col(c) for c in part_cols]
-            n_parts = max(1, snap.n_buckets)
-            if split_col is not None:
-                out = out.withColumn("__split", split_col)
-                shuffle_cols.append(F.col("__split"))
-                n_parts += sum(
-                    k - 1 for k in splits_by_bucket.values() if k > 1)
-            out = out.repartition(n_parts, *shuffle_cols)
-            if split_col is not None:
-                out = out.drop("__split")  # projection: no reshuffle
-        elif distribution != "fanout":
-            raise ValueError(f"unknown write distribution: {distribution}")
+        shuffle_cols = [F.col(c) for c in part_cols]
+        n_parts = max(1, snap.n_buckets)
+        if split_col is not None:
+            out = out.withColumn("__split", split_col)
+            shuffle_cols.append(F.col("__split"))
+            n_parts += sum(k - 1 for k in splits_by_bucket.values() if k > 1)
+        out = out.repartition(n_parts, *shuffle_cols)
+        if split_col is not None:
+            out = out.drop("__split")  # projection: no reshuffle
         if sort_cols:
             # key-clustered layout: rows sorted by merge key within each
             # task → parquet row-group min/max stats become narrow ranges,

@@ -203,6 +203,42 @@ def test_task_policy_blocks_publish_then_recovers(spark, tmp_table_dir):
     assert_frames_equal_by_sha(final.toPandas(), oracle_final(ev.toPandas()))
 
 
+def test_mor_passing_gate_names_hot_repo_and_compacts_to_oracle(
+        spark, tmp_table_dir):
+    """A MOR engine with a passing task-level gate runs the batch rollup,
+    so a repo above ``hot_key_threshold`` is named in the committed
+    ``hot_repos``. The compaction every batch triggers then folds the
+    deltas (unsalted: MOR passes no hot keys) to the oracle's state."""
+    from gobblin_spark.operators.quality import RowCountRangePolicy
+
+    ev = events_fixture(spark, 1500)
+    # Zipf skew: the top repo carries ~1/5 of the events, over the 10%
+    # default threshold in every batch
+    top = ev.groupBy("repo").count().orderBy(F.desc("count")).first()
+    assert top["count"] > 0.15 * 1500
+    eng = make_engine(
+        spark, tmp_table_dir, ev, merge_mode="mor", compact_every=1,
+        compact_delta_ratio=None,
+        task_policies=[RowCountRangePolicy(expected=600, deviation=1.0)])
+    results = eng.run_until_caught_up()
+    assert len(results) >= 2 and all(r.committed for r in results)
+
+    logged = {c["batch_id"]: c["metrics"]["hot_repos"]
+              for c in eng.store.committed_batches()}
+    hot_ids = {b for b, hot in logged.items() if top["repo"] in hot}
+    assert hot_ids, logged
+    assert {r.batch_id for r in results if top["repo"] in r.hot_repos} \
+        == hot_ids
+    compacted = {s.properties.get("compacted_after")
+                 for s in eng.table.history()}
+    assert hot_ids <= compacted
+    snap = eng.table.snapshot()
+    assert int(snap.properties.get("mor_deltas", 0)) == 0
+    final = eng.current_state().select("repo", "path", "commit", "lang",
+                                       "content")
+    assert_frames_equal_by_sha(final.toPandas(), oracle_final(ev.toPandas()))
+
+
 def test_row_quality_gate_err_file(spark, tmp_table_dir):
     from gobblin_spark.operators.quality import PolicyType, RowLevelPolicy
 
@@ -233,23 +269,6 @@ def test_row_quality_gate_err_file(spark, tmp_table_dir):
     assert os.path.exists(err)
     quarantined = spark.read.parquet(err)
     assert quarantined.filter(F.col("repo") == "repo_0000").count() > 0
-
-
-def test_mor_fanout_distribution_matches_oracle(spark, tmp_table_dir):
-    """delta_distribution='fanout' (no-shuffle per-task bucketed delta
-    writes, ≙ Iceberg write.distribution-mode=none) converges to the same
-    state; every delta file still belongs to exactly one bucket."""
-    ev = events_fixture(spark, 1500)
-    eng = make_engine(spark, tmp_table_dir, ev,
-                      merge_mode="mor", compact_every=3,
-                      delta_distribution="fanout")
-    eng.run_batch()
-    snap = eng.table.snapshot()
-    assert all(f.bucket >= 0 for f in snap.files)
-    eng.run_until_caught_up()
-    final = eng.current_state().select("repo", "path", "commit", "lang",
-                                       "content")
-    assert_frames_equal_by_sha(final.toPandas(), oracle_final(ev.toPandas()))
 
 
 def test_adaptive_compaction_delta_ratio_trigger(spark, tmp_table_dir):
@@ -344,7 +363,7 @@ def test_auto_merge_mode_converges_and_picks_both_regimes(
 
 @pytest.mark.parametrize("name, value", [
     ("merge_mode", "cwo"), ("merge_dialect", "column"),
-    ("merge_dialect", "cel"), ("delta_distribution", "hash")])
+    ("merge_dialect", "cel")])
 def test_bad_engine_arguments_are_named_errors(spark, tmp_table_dir,
                                                name, value):
     """A bad enum argument fails up front with a ValueError naming the

@@ -267,38 +267,6 @@ def test_compact_with_gc_horizon_drops_dead_tombstones(spark, tmp_table_dir):
         assert [tuple(r) for r in vis.collect()] == [("r1", "b", "x2")]
 
 
-def test_mor_pre_reduce_shrinks_delta_same_state(spark, tmp_table_dir):
-    """pre_reduce=True collapses in-batch duplicate keys before the delta
-    write (files marked reduced, fewer rows on disk); visible state is
-    identical to the raw-append default."""
-    from gobblin_spark.lakehouse.merge import merge_lww_mor
-
-    reg = default_registry()
-    schema = ("seq long, op string, repo string, path string, commit string,"
-              " lang string, content string")
-    rows = [(s, "U", "r1", f"p{s % 3}", f"c{s}", "py", f"x{s}")
-            for s in range(1, 31)]
-    t_raw = LakeTable.create(
-        spark, os.path.join(tmp_table_dir, "raw"),
-        target_schema_for(reg, 1), KEYS, n_buckets=4,
-        properties={"registry_version": 1})
-    t_red = LakeTable.create(
-        spark, os.path.join(tmp_table_dir, "red"),
-        target_schema_for(reg, 1), KEYS, n_buckets=4,
-        properties={"registry_version": 1})
-    df = spark.createDataFrame(rows, schema)
-    s_raw = merge_lww_mor(t_raw, df, KEYS, seq_col="seq", op_col="op")
-    s_red = merge_lww_mor(t_red, df, KEYS, seq_col="seq", op_col="op",
-                          pre_reduce=True)
-    assert all(not f.reduced for f in s_raw.files)
-    assert all(f.reduced for f in s_red.files)
-    assert sum(f.rows for f in s_raw.files) == 30
-    assert sum(f.rows for f in s_red.files) == 3  # one row per live key
-    a = read_current(t_raw).select("repo", "path", "content")
-    b = read_current(t_red).select("repo", "path", "content")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
 def test_minhash_xxhash64_variant_matches_md5_pairs(spark):
     """hash_fn='xxhash64' (production tier: JVM-intrinsic hashing, ~10x
     cheaper per shingle than the md5 oracle tier) verifies the same pairs:

@@ -11,7 +11,7 @@ import time
 
 import pyspark.sql.functions as F
 
-from gobblin_spark.lakehouse import LakeTable
+from gobblin_spark.lakehouse import LakeTable, pointread
 from gobblin_spark.lakehouse.merge import (
     compact,
     merge_lww,
@@ -193,7 +193,7 @@ def test_local_lookup_parity_patch_and_cell_dialects(spark, tmp_table_dir):
         assert point_lookup(t, {"repo": "r", "path": "b"}).count() == 0
 
 
-def test_local_lookup_fallbacks(spark, tmp_table_dir):
+def test_local_lookup_fallbacks(spark, tmp_table_dir, monkeypatch):
     """Schema-version drift answers FALLBACK (the Spark path owns schema
     conformance) and the public API still answers correctly; an unknown
     dialect is a named error, not a guess."""
@@ -219,15 +219,45 @@ def test_local_lookup_fallbacks(spark, tmp_table_dir):
     assert point_lookup_local(t2, key) is FALLBACK
     # oversized candidate sets also defer to the distributed read
     t3 = LakeTable(spark, tmp_table_dir + "/t")
-    assert point_lookup_local(t3, key, max_candidate_files=0) is FALLBACK
+    monkeypatch.setattr(pointread, "LOCAL_LOOKUP_MAX_FILES", 0)
+    assert point_lookup_local(t3, key) is FALLBACK
     rows = point_lookup(t3, key).collect()
     assert len(rows) == 1
 
 
-def test_local_lookup_prunes_by_bounds_before_gates(spark, tmp_table_dir):
+def test_snapshot_parses_schema_once(spark, tmp_table_dir, monkeypatch):
+    """``Snapshot.schema`` parses the manifest's schema JSON once per
+    Snapshot: driver-side lookups of hit and absent keys on one snapshot
+    read it several times each but build the StructType only once."""
+    from pyspark.sql.types import StructType
+
+    t = new_table(spark, tmp_table_dir + "/t")
+    merge_lww(t, data_events(make_events(spark, 600)), KEYS)
+    merge_lww_mor(t, data_events(make_events(spark, 200, seed=5)), KEYS)
+    keys = [{"repo": r["repo"], "path": r["path"]}
+            for r in read_current(t).select(*KEYS).limit(4).collect()]
+    keys.append({"repo": "absent", "path": "nowhere"})
+    snap = t.snapshot()
+
+    parsed = []
+    from_json = StructType.fromJson.__func__
+
+    def counting(cls, json):
+        parsed.append(1)
+        return from_json(cls, json)
+
+    monkeypatch.setattr(StructType, "fromJson", classmethod(counting))
+    got = [point_lookup_local(t, k, snap=snap) for k in keys]
+    assert all(g is not FALLBACK for g in got)
+    assert sum(g is not None for g in got) >= 1
+    assert len(parsed) == 1
+
+
+def test_local_lookup_prunes_by_bounds_before_gates(spark, tmp_table_dir,
+                                                    monkeypatch):
     """Files of the key's bucket whose key_bounds exclude the key are
     pruned BEFORE the candidate cap and the schema-drift check: delta
-    files the key cannot be in neither exceed max_candidate_files nor, at
+    files the key cannot be in neither exceed LOCAL_LOOKUP_MAX_FILES nor, at
     an older schema version, force the distributed read."""
     import dataclasses
 
@@ -250,7 +280,8 @@ def test_local_lookup_prunes_by_bounds_before_gates(spark, tmp_table_dir):
     in_bucket = [f for f in snap.files if f.bucket == bucket]
     assert len(in_bucket) == 4
 
-    got = point_lookup_local(t, key, max_candidate_files=2)
+    monkeypatch.setattr(pointread, "LOCAL_LOOKUP_MAX_FILES", 2)
+    got = point_lookup_local(t, key)
     assert got is not FALLBACK and got["content"].to_pylist() == ["v1"]
     # the deltas' files at an older schema version: still answered locally
     drift = dataclasses.replace(snap, files=[
@@ -258,7 +289,7 @@ def test_local_lookup_prunes_by_bounds_before_gates(spark, tmp_table_dir):
         else dataclasses.replace(f, schema_version=snap.schema_version - 1)
         for f in snap.files])
     t.snapshot = lambda v=None: drift
-    got = point_lookup_local(t, key, max_candidate_files=2)
+    got = point_lookup_local(t, key)
     assert got is not FALLBACK and got["content"].to_pylist() == ["v1"]
     # ... while a key inside a drifted file's bounds does fall back
     z = next(f for f in drift.files
